@@ -31,7 +31,7 @@ from dask_sql_spark.operators.hashing import (
     portable_hash64,
 )
 from dask_sql_spark.operators.text import tokens, word_ngrams
-from dask_sql_spark.operators.util import ensure_parallelism
+from dask_sql_spark.operators.util import cosine_sql, ensure_parallelism, ident
 
 
 # --------------------------------------------------------------------- #
@@ -704,9 +704,8 @@ def minhash_signatures(
         f" AS mh{i}"
         for i, (a, b) in enumerate(MINHASH_PERMS[:num_perm])
     ]
-    qid = "`" + id_col.replace("`", "``") + "`"
     return df2.select(F.col(id_col), hs.alias("_hs")).selectExpr(
-        qid, *sig_exprs
+        ident(id_col), *sig_exprs
     )
 
 
@@ -745,9 +744,8 @@ def minhash_band_buckets(
         )
         for b in range(bands)
     )
-    qid = "`" + id_col.replace("`", "``") + "`"
     return sig.selectExpr(
-        qid, f"explode(array({band_structs})) AS bb"
+        ident(id_col), f"explode(array({band_structs})) AS bb"
     ).select(
         id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -934,9 +932,8 @@ def simhash(
             f" * 2 > n THEN shiftleft(CAST(1 AS BIGINT), {j})"
             f" ELSE CAST(0 AS BIGINT) END)"
         )
-    qid = "`" + id_col.replace("`", "``") + "`"
     return sums.selectExpr(
-        qid,
+        ident(id_col),
         "(CAST(0 AS BIGINT) + " + " + ".join(terms) + ") AS simhash",
     )
 
@@ -1007,9 +1004,9 @@ def simhash_pairs(
 # --------------------------------------------------------------------- #
 # embedding cosine near-dup                                             #
 # --------------------------------------------------------------------- #
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity of two array<float/double> columns, JVM-side via
-    zip_with + aggregate (no UDF).
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of two array<float/double> columns, named by
+    top-level column name, JVM-side via zip_with + aggregate (no UDF).
 
     Zero-norm vectors yield NULL (``try_divide``), not an error: under
     the engine's ANSI session default a plain ``/`` raised
@@ -1019,30 +1016,12 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     top-k's ``desc`` ordering and fails every ``>= threshold`` screen,
     so degenerate vectors drop out instead of polluting results.
 
-    Pass COLUMN NAMES when you can (r13): the whole fold then ships as
-    one ``F.expr`` SQL string — a single py4j call — where the Column
-    lambdas cost ~60 round trips per call site at plan build (same
-    discipline as similarity.signature_col; ``0.0D`` is the double
-    literal ``F.lit(0.0)`` built, so values are bit-identical). The
-    Column form remains for computed vector expressions.
+    The fold ships as one ``F.expr`` SQL string — a single py4j call,
+    where Column lambdas cost ~60 round trips per call site at plan
+    build (r13). Alias a computed vector or a struct field to a plain
+    column name first; dotted names raise ``ValueError``.
     """
-    if isinstance(a, str) and isinstance(b, str):
-        ra = "`" + a.replace("`", "``") + "`"
-        rb = "`" + b.replace("`", "``") + "`"
-        return F.expr(
-            f"try_divide(aggregate(zip_with({ra}, {rb},"
-            f" (x, y) -> x * y), 0.0D, (acc, v) -> acc + v),"
-            f" sqrt(aggregate({ra}, 0.0D, (acc, v) -> acc + v * v))"
-            f" * sqrt(aggregate({rb}, 0.0D, (acc, v) -> acc + v * v)))"
-        )
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.try_divide(dot, na * nb)
+    return F.expr(cosine_sql(ident(a), ident(b)))
 
 
 def embedding_near_dupes(

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns.
 
 Design (SURVEY.md §7 M6): media payloads are ``binary`` columns carried
-alongside typed metadata; decode / feature-extract / resize / frame-sample
+alongside typed metadata; decode / feature-extract / frame-sample
 run as Arrow-batched ``mapInPandas`` pipelines, so executors stream batches
 without materializing whole partitions.
 
@@ -373,16 +373,3 @@ def sample_video_frames(
 
     return df.select(id_col, payload_col).mapInPandas(_sample, out_schema)
 
-
-def resize_stub(df: DataFrame, payload_col: str = "payload", size: int = 224) -> DataFrame:
-    """Resize plumbing: passes payloads through mapInPandas with the target
-    size recorded — the real resize drops into `_resize_batch`."""
-
-    def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["resized_to"] = size  # real impl: decoded→resized bytes
-            yield out
-
-    schema = T.StructType(list(df.schema.fields) + [T.StructField("resized_to", T.IntegerType())])
-    return df.mapInPandas(_resize_batch, schema)

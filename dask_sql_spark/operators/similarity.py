@@ -23,7 +23,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_sql_spark.operators.dedup import cosine
-from dask_sql_spark.operators.util import ensure_parallelism
+from dask_sql_spark.operators.util import (
+    cosine_sql,
+    dbl,
+    dot_sql,
+    ensure_parallelism,
+    ident,
+    let,
+    norm_sql,
+)
 
 
 def _exact_sum(col: Column, scale: float) -> Column:
@@ -139,124 +147,57 @@ def embedding_dim(
     return d
 
 
-def signature_join(
-    df: DataFrame, planes: np.ndarray, id_col: str = "id", vec_col: str = "v"
-) -> DataFrame:
-    """(id, sig) sign-bit LSH signatures via a broadcast join against the
-    plane table instead of :func:`signature_col`'s inlined literals.
-    Identical values (same zip_with/aggregate dot over the same doubles,
-    bits summed as 1<<j), but the expression tree is O(1) in
-    n_planes×dim where the literal form is O(n_planes·dim) — at 8 planes
-    × 64 dims the literal tree costs multiple SECONDS of Catalyst
-    analysis per query where this form plans instantly. Data cost is an
-    n_planes× row fan-out pre-aggregation — map-side, broadcast, no
-    shuffle beyond the id groupBy."""
-    spark = df.sparkSession
-    pl = spark.createDataFrame(
-        [(j, [float(x) for x in p]) for j, p in enumerate(planes)],
-        "j INT, p ARRAY<DOUBLE>",
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("p"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(pl))
-        .select(
-            id_col,
-            F.when(dot > 0, F.expr("shiftleft(CAST(1 AS BIGINT), j)"))
-            .otherwise(F.lit(0).cast("long"))
-            .alias("bit"),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("bit").alias("sig"))
-    )
+def signature_col(vec: str, planes: np.ndarray) -> Column:
+    """Sign-bit LSH signature of the vector column named ``vec`` against
+    fixed hyperplanes, as a single integer — pure Catalyst expressions.
 
-
-def signature_col(vec: Column | str, planes: np.ndarray) -> Column:
-    """Sign-bit LSH signature of a vector column against fixed hyperplanes,
-    as a single integer — pure Catalyst expressions.
-
-    Pass the COLUMN NAME when you can: the whole signature is then built
-    as one ``F.expr`` SQL string — a single py4j call the JVM parses —
-    where the Column-composition form built hundreds of Column objects
-    through py4j per call (measured r12: 0.13 s vs 0.57 s warm build per
-    column at 8×64, bit-identical signatures; ``repr(float)`` emits the
-    shortest round-trip form, and the ``D`` suffix makes each element a
-    DOUBLE literal, so values are the exact same IEEE doubles the
-    ``F.lit`` path shipped). The Column form is kept as the fallback for
-    computed vector expressions."""
-    if isinstance(vec, str):
-        if not np.isfinite(planes).all():
-            raise ValueError(
-                "signature_col: planes must be finite (inf/nan would "
-                "emit invalid SQL literals on the string path)"
-            )
-        # backtick-quote so names with spaces/dashes/dots parse as one
-        # identifier (embedded backticks escaped by doubling, per SQL)
-        vref = "`" + vec.replace("`", "``") + "`"
-        terms = []
-        for j, plane in enumerate(planes):
-            arr = (
-                "array("
-                + ",".join(f"{float(x)!r}D" for x in plane)
-                + ")"
-            )
-            dot = (
-                f"aggregate(zip_with({vref}, {arr}, (x, y) -> x * y), "
-                "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-            terms.append(f"IF({dot} > CAST(0 AS DOUBLE), {1 << j}, 0)")
-        return F.expr(" + ".join(terms))
-    bits = []
+    The whole signature is one ``F.expr`` SQL string — a single py4j
+    call the JVM parses, where the old Column composition built hundreds
+    of Column objects through py4j (measured r12: 0.13 s vs 0.57 s warm
+    build per column at 8×64). Plane components are exact DOUBLE
+    literals (:func:`~dask_sql_spark.operators.util.dbl`), so a
+    non-finite plane raises ``ValueError``."""
+    v = ident(vec)
+    terms = []
     for j, plane in enumerate(planes):
-        lits = F.lit([float(x) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(vec, lits, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+        arr = "array(" + ",".join(map(dbl, plane)) + ")"
+        terms.append(f"IF({dot_sql(v, arr)} > 0.0D, {1 << j}, 0)")
+    return F.expr(" + ".join(terms))
 
 
 def _collect_codebook(cent_df: DataFrame) -> list[tuple[int, list[float]]]:
     """Materialize the (cell, centroid) codebook to the driver as plain
-    Python rows. The codebook is DRIVER-SIZED BY CONSTRUCTION (n_cells
-    entries — index metadata, the same class of bounded collect as
-    :func:`ivf_search`'s probed-cell set, never corpus rows), and the
-    old broadcast-join form moved exactly the same bytes driver-ward to
-    build the broadcast relation anyway."""
-    rows = cent_df.select("cell", "centroid").collect()
-    out = [(int(r["cell"]), [float(x) for x in r["centroid"]]) for r in rows]
-    out.sort()
-    return out
+    Python rows, the centroid cast to the documented ARRAY<DOUBLE> (a
+    float32 codebook folds as the same doubles a float64 one would).
+    The codebook is DRIVER-SIZED BY CONSTRUCTION (n_cells entries —
+    index metadata, the same class of bounded collect as
+    :func:`ivf_search`'s probed-cell set, never corpus rows)."""
+    rows = cent_df.selectExpr(
+        "CAST(cell AS INT)", "CAST(centroid AS ARRAY<DOUBLE>)"
+    ).collect()
+    return sorted((r[0], list(r[1])) for r in rows)
 
 
 def _codebook_sql(cent_rows: list[tuple[int, list[float]]]) -> str:
     """SQL literal ``array<struct<nc:int, vc:array<double>, nb:double>>``
     for an in-row scan over the codebook: nc = -cell (so lexicographic
     struct MAX breaks cosine ties toward the SMALLEST cell id), vc the
-    centroid, nb its precomputed norm. ``repr(float)``+``D`` literals
-    round-trip the exact IEEE doubles (the r12 signature_col discipline)
-    and nb replays Spark's own sequential ``acc + v*v`` fold + sqrt in
-    Python doubles — identical operations, identical bits — so dropping
-    the per-row centroid-norm folds changes no value."""
+    centroid, nb its precomputed norm. Exact DOUBLE literals round-trip
+    the IEEE doubles, and nb replays Spark's own sequential ``acc + v*v``
+    fold + sqrt in Python doubles — identical operations, identical bits
+    — so dropping the per-row centroid-norm folds changes no value. A
+    NaN/inf component raises ``ValueError`` here, at plan build."""
     items = []
     for cell, vec in cent_rows:
-        arr = "array(" + ",".join(f"{float(x)!r}D" for x in vec) + ")"
         acc = 0.0
         for x in vec:
-            acc = acc + float(x) * float(x)
-        nb = math.sqrt(acc)
-        items.append(
-            f"named_struct('nc', {-cell}, 'vc', {arr}, 'nb', {nb!r}D)"
-        )
+            acc = acc + x * x
+        try:
+            arr = "array(" + ",".join(map(dbl, vec)) + ")"
+            nb = dbl(math.sqrt(acc))
+        except ValueError as e:
+            raise ValueError(f"IVF codebook: centroid of cell {cell}: {e}") from None
+        items.append(f"named_struct('nc', {-cell}, 'vc', {arr}, 'nb', {nb})")
     return "array(" + ", ".join(items) + ")"
 
 
@@ -266,35 +207,26 @@ def _cell_scores_sql(vec: str, cent_rows: list[tuple[int, list[float]]]) -> str:
     fan-out rows, no ranking exchange, no rejoin). The arithmetic is the
     exact :func:`dask_sql_spark.operators.dedup.cosine` fold
     (zip_with dot, sequential ``acc + v*v`` norms, try_divide), with the
-    vector's own norm bound ONCE via the single-element-array let idiom
-    (interpreted HOFs have no CSE — r12/r13 MMR finding) and the
-    centroid norms folded at plan-build time (see _codebook_sql).
+    vector's own norm bound ONCE via :func:`let` (interpreted HOFs have
+    no CSE — r12/r13 MMR finding) and the centroid norms folded at
+    plan-build time (see _codebook_sql).
 
     Ordering equivalence with the old ``row_number() OVER (ORDER BY
     acos DESC, cell ASC)`` windows: struct comparison comes with
     null-field-smallest and NaN-largest semantics — exactly the window's
     ``DESC NULLS LAST`` with NaN-first — and nc = -cell turns the
     ASC cell tie-break into a struct MAX / descending sort."""
-    cents = _codebook_sql(cent_rows)
-    dot = (
-        f"aggregate(zip_with({vec}, ct.vc, (x, y) -> x * y), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    na = (
-        f"sqrt(aggregate({vec}, CAST(0 AS DOUBLE), "
-        "(acc, v) -> acc + v * v))"
-    )
-    return (
-        f"element_at(transform(array({na}), nv -> "
-        f"transform({cents}, ct -> named_struct("
-        f"'acos', try_divide({dot}, nv * ct.nb), 'nc', ct.nc))), 1)"
+    v = ident(vec)
+    return let(
+        norm_sql(v),
+        "nv",
+        f"transform({_codebook_sql(cent_rows)}, ct -> named_struct("
+        f"'acos', try_divide({dot_sql(v, 'ct.vc')}, nv * ct.nb), 'nc', ct.nc))",
     )
 
 
 def _assign_cells(
-    c: DataFrame,
-    cent_df: DataFrame | None,
-    cent_rows: list[tuple[int, list[float]]] | None = None,
+    c: DataFrame, cent_rows: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Assign each (id_b, vb) corpus vector to its max-cosine centroid
     cell (deterministic tie-break: smallest cell id — the same decision
@@ -313,8 +245,6 @@ def _assign_cells(
     Duplicate ``id_b`` rows (a contract violation — uniqueness is
     validated by :func:`ivf_build_index`) now each keep their own row
     and own cell instead of all inheriting one arbitrary dup's cell."""
-    if cent_rows is None:
-        cent_rows = _collect_codebook(cent_df)
     if not cent_rows:
         # empty codebook: the old crossJoin produced zero rows
         return (
@@ -322,25 +252,20 @@ def _assign_cells(
             .withColumn("cell", F.lit(0).cast("int"))
             .where(F.lit(False))
         )
-    best = f"array_max({_cell_scores_sql('`vb`', cent_rows)})"
+    best = f"array_max({_cell_scores_sql('vb', cent_rows)})"
     return c.select(
         "id_b", "vb", F.expr(f"CAST(-({best}.nc) AS INT)").alias("cell")
     )
 
 
 def _rank_query_cells(
-    q: DataFrame,
-    cent_df: DataFrame | None,
-    n_probe: int,
-    cent_rows: list[tuple[int, list[float]]] | None = None,
+    q: DataFrame, cent_rows: list[tuple[int, list[float]]], n_probe: int
 ) -> DataFrame:
     """(query_id, vq, cell) — each query's n_probe nearest cells by
     centroid cosine, deterministic tie-break on cell id. In-row form
     (r13): descending ``sort_array`` over the per-row codebook scores,
     slice the top n_probe, explode — no crossJoin fan-out, no window
     exchange (ordering equivalence in _cell_scores_sql's docstring)."""
-    if cent_rows is None:
-        cent_rows = _collect_codebook(cent_df)
     if not cent_rows or n_probe <= 0:
         return (
             q.select("query_id", "vq")
@@ -348,7 +273,7 @@ def _rank_query_cells(
             .where(F.lit(False))
         )
     top = (
-        f"slice(sort_array({_cell_scores_sql('`vq`', cent_rows)}, false), "
+        f"slice(sort_array({_cell_scores_sql('vq', cent_rows)}, false), "
         f"1, {int(n_probe)})"
     )
     return q.select(
@@ -427,10 +352,11 @@ def ivf_build_index(
             "cell INT, centroid ARRAY<DOUBLE>",
         )
     else:
-        cent_df = centroids.select(
-            F.col("cell").cast("int").alias("cell"), "centroid"
+        cent_df = centroids.selectExpr(
+            "CAST(cell AS INT) AS cell",
+            "CAST(centroid AS ARRAY<DOUBLE>) AS centroid",
         )
-        corpus = _assign_cells(c, cent_df)
+        corpus = _assign_cells(c, _collect_codebook(cent_df))
     # partitionBy(cell): each cell becomes a hive partition directory,
     # so ivf_search's cell predicate prunes at FILE LISTING time — the
     # unprobed (n_cells - n_probe)/n_cells of a 100 TB corpus is never
@@ -516,8 +442,8 @@ def ivf_insert(
                 f"ivf_insert: id {hit[0]['id_b']!r} already present in "
                 f"the index at {index_path!r}"
             )
-    cent_df = spark.read.parquet(f"{index_path}/centroids")
-    corpus = _assign_cells(c, cent_df)
+    cent_rows = _collect_codebook(spark.read.parquet(f"{index_path}/centroids"))
+    corpus = _assign_cells(c, cent_rows)
     corpus.write.mode("append").partitionBy("cell").parquet(
         f"{index_path}/corpus"
     )
@@ -542,12 +468,12 @@ def ivf_search(
     byte is read. Rerank within the probed cells is the same JVM cosine
     fold + per-query row_number as :func:`brute_force_topk`.
     """
-    cent_df = spark.read.parquet(f"{index_path}/centroids")
+    cent_rows = _collect_codebook(spark.read.parquet(f"{index_path}/centroids"))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("vq"),
     )
-    q_cells = _rank_query_cells(q, cent_df, n_probe)
+    q_cells = _rank_query_cells(q, cent_rows, n_probe)
     # bounded collect: at most n_cells distinct ints (the codebook is
     # driver-sized by construction) — never corpus rows
     probed = sorted(
@@ -617,20 +543,18 @@ def ivf_topk(
             for i, ctr in enumerate(model.clusterCenters())
         )
     else:
-        cent_rows = _collect_codebook(centroids.select("cell", "centroid"))
+        cent_rows = _collect_codebook(centroids)
         # in-row assignment (scan → project, no exchange); the
         # repartition only fires when the scan is under-parallel (small
         # local files) — at scale the scan's own splits carry it
-        corpus = _assign_cells(
-            ensure_parallelism(c), None, cent_rows=cent_rows
-        )
+        corpus = _assign_cells(ensure_parallelism(c), cent_rows)
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("vq"),
     )
     # rank the query's cells by centroid cosine; keep the top n_probe
-    q_cells = _rank_query_cells(q, None, n_probe, cent_rows=cent_rows)
+    q_cells = _rank_query_cells(q, cent_rows, n_probe)
     scored = (
         corpus.join(F.broadcast(q_cells), on="cell")
         .where(F.col("query_id") != F.col("id_b"))
@@ -678,8 +602,8 @@ def embedding_near_dupes_lsh(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    # signatures INLINE on the corpus row (r12): the previous
-    # signature_join form existed because the literal expression was
+    # signatures INLINE on the corpus row (r12): the previous broadcast
+    # plane-table join existed because the literal expression was
     # slow to BUILD; with signature_col's one-string F.expr form that
     # cost is gone, and inlining deletes both the plane-fan-out
     # groupBy(id) exchange and the sigs-rejoin join from the plan —
@@ -1231,16 +1155,6 @@ def mmr_rerank(
     # the windows' `desc` NULLS LAST — so selection is bit-identical
     # (oracle-gated). Precondition (unchanged): candidate ids non-NULL,
     # unique per query.
-    def _cos_sql(a: str, b: str) -> str:
-        return (
-            f"try_divide(aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v), "
-            f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), "
-            "(acc, v) -> acc + v * v)) * "
-            f"sqrt(aggregate({b}, CAST(0 AS DOUBLE), "
-            "(acc, v) -> acc + v * v)))"
-        )
-
     def _best(l: str, r: str, score: str) -> str:
         # True iff l wins over r under (score DESC NULLS LAST, id ASC) —
         # NaN handled by Spark's own > / = (NaN largest, NaN = NaN)
@@ -1257,45 +1171,42 @@ def mmr_rerank(
     idt = cand.schema["id_b"].dataType.simpleString()
     msim_upd = (
         "IF(acc.lastvb IS NULL, cu.msim, "
-        f"greatest(cu.msim, {_cos_sql('cu.vb', 'acc.lastvb')}))"
+        f"greatest(cu.msim, {cosine_sql('cu.vb', 'acc.lastvb')}))"
     )
     # Interpreted HOF evaluation has NO common-subexpression elimination:
     # every textual splice of a subexpression re-runs it (r12 verdict —
     # the O(n·dim) msim cosine fold ran ~14× per step through the
     # rem2/pick duplication). Each shared value is therefore bound ONCE
-    # per step with the let-binding idiom
-    # ``element_at(transform(array(<expr>), x -> <body>), 1)``: the
-    # single-element array materializes <expr> exactly once and <body>
-    # references the lambda variable. Arithmetic is unchanged
+    # per step with ``let``. Arithmetic is unchanged
     # expression-for-expression, so selection stays bit-identical
     # (oracle-gated).
     #
     # per-iteration candidate view: running msim (bound once per
     # candidate as ``m``), and the step's ranking key — plain relevance
     # at step 1, lam·cos − (1−lam)·msim after
-    rem2 = (
-        "transform(acc.rem, cu -> element_at(transform("
-        f"array({msim_upd}), m -> named_struct("
-        "'id_b', cu.id_b, 'cos', cu.cos, 'vb', cu.vb, "
-        "'msim', m, "
-        f"'key', IF(st = 1, cu.cos, CAST({lam!r} AS DOUBLE) * cu.cos - "
-        f"CAST({one_minus!r} AS DOUBLE) * m))), 1))"
-    )
+    rem2 = "transform(acc.rem, cu -> " + let(
+        msim_upd,
+        "m",
+        "named_struct('id_b', cu.id_b, 'cos', cu.cos, 'vb', cu.vb, "
+        f"'msim', m, 'key', IF(st = 1, cu.cos, {dbl(lam)} * cu.cos - "
+        f"{dbl(one_minus)} * m))",
+    ) + ")"
     pick = (
         "aggregate(slice(R, 2, size(R) - 1), "
         "element_at(R, 1), "
         f"(b2, c2) -> IF({_best('c2', 'b2', 'key')}, c2, b2))"
     )
-    step_body = (
-        "IF(size(acc.rem) = 0, acc, "
-        f"element_at(transform(array({rem2}), R -> "
-        f"element_at(transform(array({pick}), p -> named_struct("
+    new_state = (
+        "named_struct("
         "'sel', concat(acc.sel, array(named_struct("
         "'id_b', p.id_b, 'step', st))), "
         "'lastvb', p.vb, "
         "'rem', transform(filter(R, r2 -> r2.id_b != p.id_b), "
         "r3 -> named_struct('id_b', r3.id_b, 'cos', r3.cos, 'vb', r3.vb, "
-        "'msim', r3.msim)))), 1)), 1))"
+        "'msim', r3.msim)))"
+    )
+    step_body = (
+        f"IF(size(acc.rem) = 0, acc, {let(rem2, 'R', let(pick, 'p', new_state))})"
     )
     acc_init = (
         "named_struct("

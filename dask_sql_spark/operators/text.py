@@ -16,7 +16,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dask_sql_spark.operators.util import ensure_parallelism
+from dask_sql_spark.operators.util import ensure_parallelism, ident, str_lit
 
 # whitespace tokenizer shared by all operators (identical regex in DuckDB)
 _WS = r"\s+"
@@ -134,9 +134,10 @@ def score_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     # F.lit(0.0) built, the CASE arms keep the insertion-order language
     # priority, and the regex splits stay in the Column API (regex
     # metacharacters never transit SQL string-literal escaping).
+    tc = ident(tok_col)
     score_sql = {
         lang: "size(filter({tc}, w -> w IN ({ws})))".format(
-            tc=tok_col, ws=", ".join("'" + w + "'" for w in words)
+            tc=tc, ws=", ".join(map(str_lit, words))
         )
         for lang, words in STOPWORDS.items()
     }
@@ -144,24 +145,24 @@ def score_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     lang_sql = "CASE WHEN " + best_sql + " = 0 THEN 'und'"
     for lang in STOPWORDS:  # insertion order = fixed priority for ties
         lang_sql += (
-            f" WHEN {score_sql[lang]} = {best_sql} THEN '{lang}'"
+            f" WHEN {score_sql[lang]} = {best_sql} THEN {str_lit(lang)}"
         )
     lang_sql += " END"
     mean_word_len = F.expr(
-        f"CASE WHEN size({tok_col}) > 0 THEN round(CAST(aggregate("
-        f"{tok_col}, 0, (acc, w) -> acc + length(w)) AS DOUBLE)"
-        f" / size({tok_col}), 4) ELSE 0.0D END"
+        f"CASE WHEN size({tc}) > 0 THEN round(CAST(aggregate("
+        f"{tc}, 0, (acc, w) -> acc + length(w)) AS DOUBLE)"
+        f" / size({tc}), 4) ELSE 0.0D END"
     )
     return tmp.withColumns(
         {
             "n_tokens": n_toks,
-            "n_pieces": F.expr(f"size(filter({pieces_col}, p -> p != ''))"),
+            "n_pieces": F.expr(f"size(filter({ident(pieces_col)}, p -> p != ''))"),
             "n_chars_m": n_chars,
             "punct_ratio": F.round(n_punct.cast("double") / safe, 4),
             "digit_ratio": F.round(n_digit.cast("double") / safe, 4),
             "stopword_ratio": F.expr(
-                f"CASE WHEN size({tok_col}) > 0 THEN round(CAST("
-                f"{score_sql['en']} AS DOUBLE) / size({tok_col}), 4)"
+                f"CASE WHEN size({tc}) > 0 THEN round(CAST("
+                f"{score_sql['en']} AS DOUBLE) / size({tc}), 4)"
                 f" ELSE 0.0D END"
             ),
             "mean_word_len": mean_word_len,

@@ -1,8 +1,80 @@
-"""Shared operator utilities."""
+"""Shared operator utilities, including the one SQL-text builder.
+
+Operators that ship an expression as one parsed SQL string (one py4j
+call instead of one per Column node) build every identifier, literal
+and vector fold through the helpers below, so quoting, escaping and
+the double-literal spelling are decided in one place.
+"""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
+
+
+def ident(name: str) -> str:
+    """Backtick-quoted identifier for ONE top-level column name
+    (embedded backticks doubled). Dotted names are rejected: ``a.b``
+    means a struct field to ``F.col`` but one literal name here, so the
+    caller aliases the field first. ``${`` is rejected too — the SQL
+    parser's variable substitution would rewrite it before quoting
+    applies."""
+    if "." in name or "${" in name:
+        raise ValueError(
+            f"column name {name!r} must be a top-level name without '.' "
+            "or '${' — alias the field to a plain name first"
+        )
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dbl(x: float) -> str:
+    """DOUBLE literal for ``x``: ``repr`` is the shortest round-trip
+    form and the ``D`` suffix types it DOUBLE, so the parsed value is
+    the exact IEEE double (what ``F.lit(float)`` ships). NaN/inf have no
+    literal spelling and raise."""
+    v = float(x)
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite double {v!r} has no SQL literal")
+    return repr(v) + "D"
+
+
+def str_lit(s: str) -> str:
+    """Single-quoted STRING literal for arbitrary text: ``'`` doubled,
+    backslashes doubled (the parser unescapes them), and ``${`` written
+    with an escaped brace so variable substitution cannot rewrite it."""
+    return "'" + (
+        s.replace("\\", "\\\\").replace("'", "''").replace("${", "$\\{")
+    ) + "'"
+
+
+def let(expr: str, var: str, body: str) -> str:
+    """Bind ``expr`` once as lambda variable ``var`` inside ``body``.
+    Interpreted higher-order functions have no common-subexpression
+    elimination, so a value spliced twice is computed twice; the
+    single-element array evaluates it exactly once."""
+    return f"element_at(transform(array({expr}), {var} -> {body}), 1)"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Sequential ``acc + x*y`` dot product of two array<double> SQL
+    expressions (the fold DuckDB's list_dot_product replays)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+        "(acc, v) -> acc + v)"
+    )
+
+
+def norm_sql(a: str) -> str:
+    """Euclidean norm of an array<double> SQL expression."""
+    return f"sqrt(aggregate({a}, 0.0D, (acc, v) -> acc + v * v))"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Cosine of two array<double> SQL expressions; NULL at zero norm
+    (``try_divide``) instead of an ANSI divide-by-zero error."""
+    return f"try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)})"
+
 
 # analyzed-plan semanticHash -> partition count. df.rdd.getNumPartitions()
 # forces a full physical planning pass (~50-60 ms per call even warm, r12

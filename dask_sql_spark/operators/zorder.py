@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dask_sql_spark.operators.util import ident
+
 
 def _interleave(scaled: list[str], bits: int) -> Column:
     # ONE parsed SQL string instead of the old bits×ndim chained
@@ -64,8 +66,8 @@ def with_zorder_key(
     # exact integer arithmetic end-to-end: Spark DIV == DuckDB // for
     # non-negative operands; double division would misplace boundary rows
     scaled = [
-        f"(((CAST({c} AS BIGINT) - __min_{c}) * {grid}) "
-        f"DIV greatest(__max_{c} - __min_{c}, 1))"
+        f"(((CAST({ident(c)} AS BIGINT) - {ident('__min_' + c)}) * {grid}) "
+        f"DIV greatest({ident('__max_' + c)} - {ident('__min_' + c)}, 1))"
         for c in cols
     ]
     out = out.withColumn(key_name, _interleave(scaled, bits))

@@ -82,7 +82,9 @@ def main() -> int:
         )
         probed = sorted(
             r[0]
-            for r in sim._rank_query_cells(q, cent_df, n_probe)
+            for r in sim._rank_query_cells(
+                q, sim._collect_codebook(cent_df), n_probe
+            )
             .select("cell")
             .distinct()
             .collect()
