@@ -93,6 +93,36 @@ def default_spark_session(
     return builder.getOrCreate()
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """A result the driver already holds (DDL, SHOW, metadata) as a JVM
+    ``LocalRelation``: reading it back (``collect``, the Presto server)
+    starts no Spark job, and ``isLocal()`` is true.
+
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a StructType or
+    a DDL string such as ``"Table: string"``. The rows travel as one Arrow
+    table (below ``spark.sql.execution.arrow.localRelationThreshold`` Spark
+    keeps it a LocalRelation). Zero columns give ``emptyDataFrame``.
+    ``createDataFrame(<list>, ddl)`` instead goes through Python-worker
+    tasks, and reading its result runs a job per partition.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if not schema.fields:
+        return DataFrame(spark._jsparkSession.emptyDataFrame(), spark)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 class Context:
     """Main entry point, mirroring ``dask_sql.Context`` (context.py:62-109).
 
@@ -290,7 +320,8 @@ class Context:
         return self.schema_name, name
 
     def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], T.StructType([]))
+        """The zero-column result of a DDL statement (see local_frame)."""
+        return local_frame(self.spark, [], T.StructType([]))
 
     # ------------------------------------------------------------------ #
     # function registry                                                  #

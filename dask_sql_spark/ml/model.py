@@ -175,4 +175,6 @@ def describe_model(context: "Context", name: str) -> DataFrame:
         params.update(model.get_params())
     params["training_columns"] = training_columns
     rows = [(str(k), str(v)) for k, v in sorted(params.items())]
-    return context.spark.createDataFrame(rows, "Param: string, Value: string")
+    from dask_sql_spark.context import local_frame
+
+    return local_frame(context.spark, rows, "Param: string, Value: string")

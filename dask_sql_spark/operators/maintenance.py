@@ -53,7 +53,10 @@ def compaction_plan(
     total = sum(b for _, b in files)
     small = sum(1 for _, b in files if b < small_ratio * target_bytes)
     target_files = max(1, math.ceil(total / target_bytes)) if total else 0
-    return spark.createDataFrame(
+    from dask_sql_spark.context import local_frame
+
+    return local_frame(
+        spark,
         [
             (
                 path,

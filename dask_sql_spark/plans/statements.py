@@ -528,6 +528,8 @@ def _execute_update(context: "Context", m: re.Match) -> DataFrame:
 def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | None:
     """Try to execute ``sql`` as a custom statement; return a result
     DataFrame (possibly empty) if handled, else None."""
+    from dask_sql_spark.context import local_frame
+
     spark = context.spark
 
     m = _CREATE_TABLE_WITH.match(sql)
@@ -630,7 +632,8 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
             rows.append((loc, "deleted" if deleted else "missing", deleted))
         if not dry_run:
             schema.stale_locations[table.lower()] = remaining
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows or [(None, "nothing_to_vacuum", False)],
             "location STRING, action STRING, deleted BOOLEAN",
         )
@@ -764,9 +767,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         if like_q is not None or like_u is not None:
             want = like_q.replace("''", "'") if like_q is not None else like_u
             names = [s for s in names if s == want]
-        return spark.createDataFrame(
-            [(s,) for s in names], "Schema: string"
-        )
+        return local_frame(spark, [(s,) for s in names], "Schema: string")
 
     m = _SHOW_TABLES.match(sql)
     if m:
@@ -782,7 +783,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         if schema not in context.schemas:
             raise RuntimeError(f"Schema {schema} does not exist")
         names = sorted(context.schemas[schema].tables)
-        return spark.createDataFrame([(t,) for t in names], "Table: string")
+        return local_frame(spark, [(t,) for t in names], "Table: string")
 
     m = _SHOW_COLUMNS.match(sql)
     if m:
@@ -794,11 +795,13 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
             (f.name, spark_type_to_sql_name(f.dataType), "YES" if f.nullable else "NO")
             for f in df.schema.fields
         ]
-        return spark.createDataFrame(rows, "Column: string, Type: string, Nullable: string")
+        return local_frame(
+            spark, rows, "Column: string, Type: string, Nullable: string"
+        )
 
     if _SHOW_MODELS.match(sql):
         names = sorted(context.schemas[context.schema_name].models)
-        return spark.createDataFrame([(n,) for n in names], "Model: string")
+        return local_frame(spark, [(n,) for n in names], "Model: string")
 
     m = _DESCRIBE_MODEL.match(sql)
     if m:

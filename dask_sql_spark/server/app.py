@@ -11,9 +11,20 @@ stdlib ``ThreadingHTTPServer`` — same endpoints, same response shapes, no
 third-party dependency. Queries execute on a thread pool. Results are
 PAGED (reference behavior: server/app.py:40-66 + responses.py): each
 ``GET /v1/status/{uuid}`` returns up to ``page_size`` rows plus a
-``nextUri`` while more remain, streaming via ``toLocalIterator`` so the
-driver never materializes the full result set. Every Spark job a query
-triggers runs under a job group named by the query id, so DELETE
+``nextUri`` while more remain.
+
+Where the rows come from depends on the result frame. A local result
+(``df.isLocal()``: a ``LocalRelation`` such as the DDL, SHOW and JDBC
+metadata answers built by ``context.local_frame``, or a Spark command
+result) is read with ``collect()``, which starts no Spark job. That
+collects rows the driver already holds: for the statement results built
+by ``local_frame`` these are a few rows, and Spark turns an Arrow table
+above ``spark.sql.execution.arrow.localRelationThreshold`` into a
+distributed relation, which streams. Every other result streams via
+``toLocalIterator``, so the driver never materializes the full result set
+of a distributed query. Either way pages are pulled through the same
+iterator. Every Spark job a query triggers runs under a job group named
+by the query id, so DELETE
 /v1/cancel/{uuid} interrupts running stages via ``cancelJobGroup`` (not
 just a flag). Finished/failed/canceled query states are evicted after
 their final status poll (plus a TTL sweep), so ``queries`` stays bounded.
@@ -23,6 +34,7 @@ from __future__ import annotations
 
 import itertools
 import json
+import math
 import threading
 import time
 import uuid as uuidlib
@@ -83,7 +95,9 @@ def _columns_payload(schema: T.StructType) -> list[dict[str, Any]]:
 def _json_value(v: Any) -> Any:
     """JSON-encodable form of one result value. Recurses through arrays,
     maps, and Rows (structs) — the r9 wire audit found a temporal inside
-    a collect_list / named_struct crashed the handler connection."""
+    a collect_list / named_struct crashed the handler connection. NaN and
+    ±inf become the strings "NaN"/"Infinity"/"-Infinity" (Presto's JSON
+    encoding): bare NaN/Infinity tokens are not JSON (RFC 8259)."""
     import datetime
     import decimal
 
@@ -103,6 +117,8 @@ def _json_value(v: Any) -> Any:
         return bytes(v).hex()
     if isinstance(v, bytes):
         return v.hex()
+    if isinstance(v, float) and not math.isfinite(v):
+        return "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
     return v
 
 
@@ -111,7 +127,7 @@ class _QueryState:
         self.future = future
         self.cancelled = False
         self.columns: list[dict] | None = None
-        self.row_iter: Any = None  # toLocalIterator over the result
+        self.row_iter: Any = None  # over collect() or toLocalIterator()
         self.page: list | None = None  # next page, pre-pulled
         self.created = time.monotonic()
         self.finished_at: float | None = None  # set once terminal state polled
@@ -154,8 +170,10 @@ class SQLServer:
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     def _execute(self, qid: str, sql: str) -> None:
-        """Plan the query, pre-pull the first page (the heavy compute) under
-        the query's job group; the result streams via toLocalIterator so the
+        """Plan the query and pre-pull the first page (the heavy compute)
+        under the query's job group. A local result (``df.isLocal()``) is
+        collected: that starts no Spark job, and its rows already sit on the
+        driver. Every other result streams via toLocalIterator, so the
         driver holds at most one page plus Spark's partition buffer."""
         from dask_sql_spark.server.presto_jdbc import maybe_jdbc_query
 
@@ -166,7 +184,8 @@ class SQLServer:
             jdbc = maybe_jdbc_query(self.context, sql)
             df = jdbc if jdbc is not None else self.context.sql(sql)
             state.columns = _columns_payload(df.schema)
-            state.row_iter = iter(df.toLocalIterator())
+            rows = df.collect() if df.isLocal() else df.toLocalIterator()
+            state.row_iter = iter(rows)
             state.page = list(itertools.islice(state.row_iter, self.page_size))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)

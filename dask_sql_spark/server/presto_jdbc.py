@@ -26,19 +26,20 @@ _JDBC_RE = re.compile(r"\bsystem\.jdbc\.(\w+)\b", re.IGNORECASE)
 
 def _catalog_frame(context: "Context", what: str) -> DataFrame | None:
     """The metadata DataFrame for one system.jdbc table, or None."""
+    from dask_sql_spark.context import local_frame
+
     spark = context.spark
     if what == "schemas":
         rows = [(s, "dask_sql_spark") for s in sorted(context.schemas)]
-        return spark.createDataFrame(
-            rows, "TABLE_SCHEM string, TABLE_CATALOG string"
-        )
+        return local_frame(spark, rows, "TABLE_SCHEM string, TABLE_CATALOG string")
     if what == "tables":
         rows = [
             ("dask_sql_spark", schema_name, t, "TABLE", "")
             for schema_name, schema in sorted(context.schemas.items())
             for t in sorted(schema.tables)
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "TABLE_CAT string, TABLE_SCHEM string, TABLE_NAME string, "
             "TABLE_TYPE string, REMARKS string",
@@ -61,18 +62,17 @@ def _catalog_frame(context: "Context", what: str) -> DataFrame | None:
                             i + 1,
                         )
                     )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "TABLE_CAT string, TABLE_SCHEM string, TABLE_NAME string, "
             "COLUMN_NAME string, TYPE_NAME string, IS_NULLABLE string, "
             "ORDINAL_POSITION int",
         )
     if what == "catalogs":
-        return spark.createDataFrame(
-            [("dask_sql_spark",)], "TABLE_CAT string"
-        )
+        return local_frame(spark, [("dask_sql_spark",)], "TABLE_CAT string")
     if what in ("types", "table_types"):
-        return spark.createDataFrame([("TABLE",)], "TABLE_TYPE string")
+        return local_frame(spark, [("TABLE",)], "TABLE_TYPE string")
     return None
 
 

@@ -8,6 +8,15 @@ import urllib.request
 import pytest
 
 
+def _reject_constant(token: str):
+    raise ValueError(f"non-JSON token {token} in the response body")
+
+
+def _read_json(resp) -> dict:
+    """Parse a response body strictly (RFC 8259): NaN/Infinity tokens fail."""
+    return json.loads(resp.read(), parse_constant=_reject_constant)
+
+
 @pytest.fixture(scope="module")
 def server(context):
     from dask_sql_spark.server.app import run_server
@@ -24,7 +33,7 @@ def _post(server, sql: str) -> dict:
         method="POST",
     )
     with urllib.request.urlopen(req) as resp:
-        return json.load(resp)
+        return _read_json(resp)
 
 
 def _poll(payload: dict, timeout: float = 30.0) -> dict:
@@ -36,7 +45,7 @@ def _poll(payload: dict, timeout: float = 30.0) -> dict:
     pages = 1 if payload.get("data") else 0
     while "nextUri" in payload and time.time() < deadline:
         with urllib.request.urlopen(payload["nextUri"]) as resp:
-            payload = json.load(resp)
+            payload = _read_json(resp)
         if payload.get("data"):
             data.extend(payload["data"])
             pages += 1
@@ -206,6 +215,99 @@ def test_finished_state_evicted(server):
     while qid in server.queries and time.time() < deadline:
         time.sleep(0.05)
     assert qid not in server.queries
+
+
+def test_non_finite_doubles_are_strict_json(server):
+    """NaN and ±inf travel as the strings Presto's Jackson encoding uses,
+    also inside arrays, maps and structs: a strict RFC 8259 parser reads
+    every body."""
+    payload = _poll(
+        _post(
+            server,
+            "SELECT CAST('NaN' AS DOUBLE) AS n, CAST('Infinity' AS DOUBLE) AS p, "
+            "CAST('-Infinity' AS DOUBLE) AS m, 1.5D AS f, "
+            "array(CAST('NaN' AS DOUBLE), 2.0D) AS a, "
+            "map('k', CAST('Infinity' AS DOUBLE)) AS mp, "
+            "named_struct('x', CAST('-Infinity' AS DOUBLE)) AS st",
+        )
+    )
+    assert payload["stats"]["state"] == "FINISHED"
+    assert payload["data"] == [
+        ["NaN", "Infinity", "-Infinity", 1.5, ["NaN", 2.0], {"k": "Infinity"},
+         {"x": "-Infinity"}]
+    ]
+
+
+def _finished_jobs(server, sql: str) -> tuple[dict, list[int]]:
+    """Run ``sql`` to FINISHED; return the payload and the Spark jobs its
+    query's job group started."""
+    first = _post(server, sql)
+    payload = _poll(first)
+    assert payload["stats"]["state"] == "FINISHED", (sql, payload)
+    tracker = server.context.spark.sparkContext.statusTracker()
+    return payload, list(tracker.getJobIdsForGroup(first["id"]))
+
+
+def test_local_results_start_no_job(server, tmp_path):
+    """DDL, DML-into-registry and SHOW answers are local relations: the
+    server collects them with no Spark job. A SELECT over a parquet table
+    still runs distributed."""
+    import pandas as pd
+
+    src = str(tmp_path / "nojob.parquet")
+    pd.DataFrame({"k": [3, 1, 2], "v": ["c", "a", "b"]}).to_parquet(src)
+    server.context.create_table("nojob_src", src)
+    statements = [
+        "CREATE SCHEMA nojob_s",
+        "CREATE TABLE nojob_s.nojob_t AS SELECT * FROM nojob_src",
+        "INSERT INTO nojob_s.nojob_t SELECT * FROM nojob_src",
+        "SHOW TABLES",
+        "SHOW SCHEMAS",
+        "SHOW COLUMNS FROM nojob_s.nojob_t",
+        "DROP TABLE nojob_s.nojob_t",
+        "USE SCHEMA nojob_s",
+        "USE SCHEMA root",
+        "DROP SCHEMA nojob_s",
+    ]
+    try:
+        for sql in statements:
+            payload, jobs = _finished_jobs(server, sql)
+            assert jobs == [], (sql, jobs)
+        payload, jobs = _finished_jobs(server, "SHOW TABLES")
+        assert ["nojob_src"] in payload["data"]
+        payload, jobs = _finished_jobs(
+            server, "SELECT k, v FROM nojob_src WHERE k >= 2 ORDER BY k"
+        )
+        assert len(jobs) >= 1
+        assert payload["data"] == [[2, "b"], [3, "c"]]
+    finally:
+        server.context.schema_name = "root"
+        server.context.sql("DROP SCHEMA IF EXISTS nojob_s")
+        server.context.drop_table("nojob_src")
+
+
+def test_local_result_pages(context):
+    """A local result pages like a streamed one: with page_size=2 the five
+    SHOW COLUMNS rows come as 2 + 2 + 1 in order, the query ends FINISHED
+    and its state is evicted."""
+    import pandas as pd
+
+    from dask_sql_spark.server.app import run_server
+
+    context.create_table(
+        "five_cols", pd.DataFrame({c: [1] for c in ["c1", "c2", "c3", "c4", "c5"]})
+    )
+    s = run_server(context, host="127.0.0.1", port=0, blocking=False, page_size=2)
+    try:
+        first = _post(s, "SHOW COLUMNS FROM five_cols")
+        payload = _poll(first)
+        assert payload["stats"]["state"] == "FINISHED"
+        assert payload["pages"] == 3
+        assert [r[0] for r in payload["data"]] == ["c1", "c2", "c3", "c4", "c5"]
+        assert first["id"] not in s.queries
+    finally:
+        s.stop()
+        context.drop_table("five_cols")
 
 
 # ----------------------------- CLI ----------------------------- #
