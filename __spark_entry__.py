@@ -59,11 +59,8 @@ def _ctx(spark: SparkSession, sf_dir: str):
         _CTX_CACHE.clear()  # views are session-global; don't mix sf_dirs
         _CTX_CACHE[key] = ctx
         for t in TABLES:
-            # deliberately NOT auto_rebalance=True: measured at sf0.1 the
-            # cached-rebalance total is a wash (scan-bound q1 3× faster,
-            # join-heavy queries slower without file-source AQE/pushdown),
-            # and file-source scans keep PushedFilters visible in every
-            # plan — the property that actually matters at 100 TB.
+            # plain file-source scans: they keep PushedFilters visible in
+            # every plan (a cached repartition measured a wash at sf0.1)
             ctx.create_table(t, f"{sf_dir}/{t}.parquet")
     return ctx
 

@@ -168,7 +168,6 @@ class Context:
         persist: bool = False,
         schema_name: str | None = None,
         statistics: Statistics | None = None,
-        auto_rebalance: bool = False,
         **kwargs: Any,
     ) -> None:
         """Register a table (reference context.py:168-260).
@@ -177,15 +176,6 @@ class Context:
         location string (csv/parquet/json/orc/…, dispatched like the
         reference's input plugin chain), or rows. ``persist=True`` caches
         into cluster memory (reference input_utils/convert.py:70-71).
-
-        ``auto_rebalance`` (opt-in): when a *small* file-backed table
-        arrives with pathologically low scan parallelism (e.g. one giant
-        parquet row group — a single task serializes every downstream
-        operator), repartition to cluster parallelism and cache.
-        Size-capped so a 100 TB fact table is never touched. Off by
-        default: measured locally, NVMe parquet scans + whole-stage
-        codegen beat in-memory-cache scans for one-pass analytics; turn
-        it on for iterative workloads that rescan small tables many times.
         """
         schema_name = schema_name or self.schema_name
         # reference API parity: create_table(..., gpu=True) selects cudf
@@ -206,8 +196,6 @@ class Context:
         df = to_spark_dataframe(self.spark, input_table, format=format, **kwargs)
         if persist:
             df = df.cache()
-        elif auto_rebalance and isinstance(input_table, str):
-            df = self._maybe_rebalance(df, input_table)
         schema = self.schemas[schema_name]
         self._unpersist_if_cached(schema.tables.get(table_name.lower()))
         schema.tables[table_name.lower()] = df
@@ -221,37 +209,6 @@ class Context:
         if statistics:
             schema.statistics[table_name.lower()] = statistics
         df.createOrReplaceTempView(self._view_name(table_name, schema_name))
-
-    # size cap for auto-rebalance caching: tables above this stay pure
-    # file scans (their layout is the lake's responsibility)
-    AUTO_REBALANCE_MAX_BYTES = 2 * 1024**3
-
-    def _maybe_rebalance(self, df: DataFrame, location: str):
-        """Repartition+cache a small table whose file layout starves the
-        cluster of parallelism (scan splits < half the executor slots)."""
-        import glob
-        import os
-
-        try:
-            paths = glob.glob(location) or [location]
-            size = sum(
-                os.path.getsize(p)
-                for path in paths
-                for p in (
-                    [path]
-                    if os.path.isfile(path)
-                    else glob.glob(os.path.join(path, "**"), recursive=True)
-                )
-                if os.path.isfile(p)
-            )
-        except OSError:
-            return df
-        if size > self.AUTO_REBALANCE_MAX_BYTES:
-            return df
-        parallelism = self.spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() * 2 >= parallelism:
-            return df
-        return df.repartition(parallelism).cache()
 
     @staticmethod
     def _unpersist_if_cached(df: DataFrame | None) -> None:
@@ -640,8 +597,6 @@ class Context:
         (``s2.t``, ``"s2"."t"``, `` `s2`.`t` ``)."""
         import re
 
-        from dask_sql_spark.dialect import _rewrite_outside_literals
-
         def _rewrite_chunk(chunk: str) -> str:
             for schema_name in self.schemas:
                 if schema_name == DEFAULT_SCHEMA_NAME:
@@ -662,7 +617,7 @@ class Context:
             and self.schema_name == DEFAULT_SCHEMA_NAME
         ):
             return sql
-        sql = _rewrite_outside_literals(sql, _rewrite_chunk)
+        sql = dialect._rewrite_outside_literals(sql, _rewrite_chunk)
         if self.schema_name != DEFAULT_SCHEMA_NAME:
             sql = self._rewrite_unqualified_tables(sql)
         return sql
@@ -678,11 +633,9 @@ class Context:
         expr)``, ``TRIM(... FROM s)``, ``SUBSTRING(s FROM n)``,
         ``OVERLAY(s PLACING r FROM n)`` — is NOT table position: a column
         after that FROM sharing a table's name must stay untouched, so
-        this runs full-text with a literal mask + an innermost-call mask
-        instead of the chunk rewriter."""
+        this runs full-text on the literal-masked text with an
+        innermost-call mask instead of the chunk rewriter."""
         import re
-
-        from dask_sql_spark.dialect import _literal_mask
 
         for table in self.schemas[self.schema_name].tables:
             t = re.escape(table)
@@ -691,13 +644,11 @@ class Context:
                 rf"(?:{t}|\"{t}\"|`{t}`)(?![\w.])",
                 re.IGNORECASE,
             )
-            lit = _literal_mask(sql)
-            func_mask = _from_func_call_mask(sql, lit)
+            masked = dialect.mask_literals(sql)
+            func_mask = _from_func_call_mask(masked)
             out: list[str] = []
             last = 0
-            for m in pat.finditer(sql):
-                if lit[m.start()]:
-                    continue
+            for m in pat.finditer(masked):
                 if m.group(1).upper() == "FROM" and func_mask[m.start()]:
                     continue
                 out.append(sql[last : m.start()])
@@ -762,28 +713,25 @@ class Context:
 _FROM_CALL_FUNCS = frozenset({"EXTRACT", "TRIM", "SUBSTRING", "OVERLAY"})
 
 
-def _from_func_call_mask(sql: str, lit_mask: list[bool]) -> list[bool]:
-    """True at positions whose INNERMOST unclosed paren is the argument
-    list of a function where FROM is call syntax (EXTRACT/TRIM/SUBSTRING/
-    OVERLAY). Innermost-only: a derived-table subquery nested deeper
-    re-opens ordinary table position."""
-    n = len(sql)
-    out = [False] * n
+def _from_func_call_mask(masked: str) -> list[bool]:
+    """True at positions of literal-masked text whose INNERMOST unclosed
+    paren is the argument list of a function where FROM is call syntax
+    (EXTRACT/TRIM/SUBSTRING/OVERLAY). Innermost-only: a derived-table
+    subquery nested deeper re-opens ordinary table position."""
+    out: list[bool] = []
     stack: list[bool] = []
-    for i in range(n):
-        if not lit_mask[i]:
-            ch = sql[i]
-            if ch == "(":
-                j = i - 1
-                while j >= 0 and sql[j].isspace():
-                    j -= 1
-                e = j + 1
-                while j >= 0 and (sql[j].isalnum() or sql[j] == "_"):
-                    j -= 1
-                stack.append(sql[j + 1 : e].upper() in _FROM_CALL_FUNCS)
-            elif ch == ")" and stack:
-                stack.pop()
-        out[i] = bool(stack) and stack[-1]
+    for i, ch in enumerate(masked):
+        if ch == "(":
+            j = i - 1
+            while j >= 0 and masked[j].isspace():
+                j -= 1
+            e = j + 1
+            while j >= 0 and (masked[j].isalnum() or masked[j] == "_"):
+                j -= 1
+            stack.append(masked[j + 1 : e].upper() in _FROM_CALL_FUNCS)
+        elif ch == ")" and stack:
+            stack.pop()
+        out.append(bool(stack) and stack[-1])
     return out
 
 

@@ -16,10 +16,16 @@ parser rejects or mis-interprets:
 
 Everything else (FILTER clauses, TABLESAMPLE, DISTRIBUTE BY, grouping sets,
 EXISTS/IN subqueries, window frames…) parses natively in Spark SQL and is
-deliberately NOT touched here. The rewriter is token-aware enough to skip
-string literals so patterns inside quotes are not mangled (chunk-masked
-rewrites via ``_rewrite_outside_literals``; full-text rewrites whose match
-may begin with a literal use ``_sub_skipping_literals`` instead).
+deliberately NOT touched here. String literals are recognised by ONE
+grammar, ``_LITERAL_RE`` (``'...'`` with ``''`` escapes; an unterminated
+literal runs to the end), exposed as ``literal_spans`` and
+``mask_literals``. Patterns inside quotes are never mangled: rewrites that
+cannot touch a literal run on the text between literals
+(``_rewrite_outside_literals``), rewrites whose match may begin with a
+literal skip matches starting inside one (``_sub_skipping_literals``), and
+clause scans (QUALIFY, ORDER BY, top-level commas) run on the masked text
+and slice the original at the same offsets. ``plans/statements.py``,
+``Context`` and the JDBC shim use the same two helpers.
 
 Known, intentional reference divergence — integer literal width: the
 reference plans bare integer literals as Int64 (DataFusion typing,
@@ -114,53 +120,55 @@ def sql_like_to_regex(pattern: str, escape: str | None = None) -> str:
     return "^(?:" + "".join(out) + ")$"
 
 
-def _split_literals(sql: str) -> list[tuple[str, bool]]:
-    """Split sql into (chunk, is_string_literal) segments so rewrites can
-    skip quoted strings."""
-    parts: list[tuple[str, bool]] = []
-    buf = []
-    i, n = 0, len(sql)
-    in_str = False
-    while i < n:
-        ch = sql[i]
-        if not in_str:
-            if ch == "'":
-                parts.append(("".join(buf), False))
-                buf = [ch]
-                in_str = True
-            else:
-                buf.append(ch)
-        else:
-            buf.append(ch)
-            if ch == "'":
-                # '' is an escaped quote inside the literal
-                if i + 1 < n and sql[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    parts.append(("".join(buf), True))
-                    buf = []
-                    in_str = False
-        i += 1
-    if buf:
-        parts.append(("".join(buf), in_str))
+# the front door's one string-literal grammar (module docstring); group 1
+# is None for an unterminated literal
+_LITERAL_RE = re.compile(r"'(?:[^']|'')*(')?")
+
+
+def literal_spans(sql: str) -> list[tuple[int, int]]:
+    """(start, end) offsets of every quoted string literal (quotes included)."""
+    return [m.span() for m in _LITERAL_RE.finditer(sql)]
+
+
+def _blank_literal(m: re.Match) -> str:
+    closed = m.group(1) is not None
+    return "'" + " " * (m.end() - m.start() - 1 - closed) + "'" * closed
+
+
+def mask_literals(sql: str) -> str:
+    """Same-length copy of ``sql`` with every literal's interior blanked to
+    spaces and its quotes kept, so keyword, paren and comma scans cannot
+    see string data; offsets into the mask index the original."""
+    return _LITERAL_RE.sub(_blank_literal, sql)
+
+
+def split_top_commas(sql: str) -> list[str]:
+    """Split on commas at paren depth 0 outside string literals; the
+    pieces are unstripped slices of ``sql``."""
+    parts: list[str] = []
+    depth = last = 0
+    for m in re.finditer(r"[(),]", mask_literals(sql)):
+        ch = m.group()
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif depth == 0:
+            parts.append(sql[last : m.start()])
+            last = m.end()
+    parts.append(sql[last:])
     return parts
 
 
 def _rewrite_outside_literals(sql: str, fn) -> str:
-    return "".join(chunk if is_lit else fn(chunk) for chunk, is_lit in _split_literals(sql))
-
-
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    """(start, end) offsets of every quoted string literal (quotes included)."""
-    spans: list[tuple[int, int]] = []
-    pos = 0
-    for chunk, is_lit in _split_literals(sql):
-        end = pos + len(chunk)
-        if is_lit:
-            spans.append((pos, end))
-        pos = end
-    return spans
+    """Apply ``fn`` to every stretch of ``sql`` between string literals."""
+    out: list[str] = []
+    last = 0
+    for start, end in literal_spans(sql):
+        out += [fn(sql[last:start]), sql[start:end]]
+        last = end
+    out.append(fn(sql[last:]))
+    return "".join(out)
 
 
 def _sub_skipping_literals(pattern: re.Pattern, repl, sql: str) -> str:
@@ -182,7 +190,7 @@ def _sub_skipping_literals(pattern: re.Pattern, repl, sql: str) -> str:
     are computed on the input string, which is what ``re.sub`` iterates
     over, so spans stay valid.
     """
-    spans = _literal_spans(sql)
+    spans = literal_spans(sql)
 
     def guarded(m: re.Match) -> str:
         s, e = m.start(), m.end()
@@ -444,6 +452,7 @@ def _truncate_repl(m: re.Match) -> str:
 
 
 _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
+_PAREN_OR_QUALIFY_RE = re.compile(r"[()]|\bQUALIFY\b", re.IGNORECASE)
 # what ends a QUALIFY predicate: the statement tail (ORDER BY/LIMIT/
 # OFFSET) or a set operation joining the NEXT query block (UNION/
 # INTERSECT/EXCEPT/MINUS — QUALIFY binds to its own block, so the
@@ -478,48 +487,10 @@ _HAS_NULLS_RE = re.compile(r"\bNULLS\s+(?:FIRST|LAST)\s*$", re.IGNORECASE)
 _DESC_TAIL_RE = re.compile(r"\bDESC\s*$", re.IGNORECASE)
 
 
-def _literal_mask(sql: str) -> list[bool]:
-    """True at positions inside a single-quoted string literal."""
-    mask = [False] * len(sql)
-    in_str = False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            mask[i] = True
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    mask[i + 1] = True
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            mask[i] = True
-            in_str = True
-        i += 1
-    return mask
-
-
 def _fix_order_items(list_sql: str) -> str:
     """Append the reference default placement to items lacking one."""
-    items: list[str] = []
-    depth = 0
-    buf: list[str] = []
-    lit = _literal_mask(list_sql)
-    for i, ch in enumerate(list_sql):
-        if not lit[i]:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append("".join(buf))
-                buf = []
-                continue
-        buf.append(ch)
-    items.append("".join(buf))
     out = []
-    for item in items:
+    for item in split_top_commas(list_sql):
         body = item.rstrip()
         pad = item[len(body):]
         if not body or _HAS_NULLS_RE.search(body):
@@ -533,93 +504,59 @@ def _fix_order_items(list_sql: str) -> str:
 
 def rewrite_order_by_nulls(sql: str) -> str:
     """Give every ORDER BY item the reference's default null placement."""
-    lit = _literal_mask(sql)
-    matches = [m for m in _ORDER_BY_RE.finditer(sql) if not lit[m.start()]]
-    # right-to-left so earlier offsets stay valid
-    for m in reversed(matches):
+    # right-to-left so earlier offsets stay valid; re-mask after every
+    # splice, as an outer item list can span an inner ORDER BY
+    for m in reversed(list(_ORDER_BY_RE.finditer(mask_literals(sql)))):
+        masked = mask_literals(sql)
         start = m.end()
         depth = 0
         end = len(sql)
-        i = start
-        while i < len(sql):
-            if not lit[i]:
-                ch = sql[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    if depth == 0:
-                        end = i
-                        break
-                    depth -= 1
-                elif depth == 0:
-                    tm = _ORDER_ITEM_END_RE.match(sql, i)
-                    if tm and not lit[tm.start()]:
-                        end = i
-                        break
-            i += 1
+        for i in range(start, len(masked)):
+            ch = masked[i]
+            if ch == "(":
+                depth += 1
+            elif ch == ")":
+                if depth == 0:
+                    end = i
+                    break
+                depth -= 1
+            elif depth == 0 and _ORDER_ITEM_END_RE.match(masked, i):
+                end = i
+                break
         sql = sql[:start] + _fix_order_items(sql[start:end]) + sql[end:]
     return sql
 
 
-def _depth0_mask(sql: str) -> list[bool]:
-    """True at positions that are at paren depth 0 and outside string
-    literals — the only places clause keywords can legally start."""
-    mask = [False] * len(sql)
+def _depth0(masked: str) -> list[bool]:
+    """True at positions of literal-masked text at paren depth 0 — the only
+    places clause keywords can legally start."""
+    out: list[bool] = []
     depth = 0
-    in_str = False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
+    for ch in masked:
+        if ch == "(":
             depth += 1
         elif ch == ")":
             depth = max(depth - 1, 0)
-        else:
-            mask[i] = depth == 0
-        i += 1
-    return mask
+        out.append(depth == 0)
+    return out
 
 
 def _find_nested_qualify(sql: str) -> tuple[int, int] | None:
     """(open_idx, close_idx) of the innermost paren pair containing the
     first depth>0 QUALIFY outside string literals, or None."""
     stack: list[int] = []
-    in_str = False
     target_open = None
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            stack.append(i)
-        elif ch == ")":
+    for m in _PAREN_OR_QUALIFY_RE.finditer(mask_literals(sql)):
+        tok = m.group()
+        if tok == "(":
+            stack.append(m.start())
+        elif tok == ")":
             if stack:
                 po = stack.pop()
-                if target_open is not None and po == target_open:
-                    return po, i
-        elif (
-            target_open is None
-            and stack
-            and ch in "Qq"
-            and _QUALIFY_RE.match(sql, i)
-        ):
+                if po == target_open:
+                    return po, m.start()
+        elif target_open is None and stack:
             target_open = stack[-1]
-        i += 1
     return None
 
 
@@ -651,17 +588,18 @@ def rewrite_qualify(sql: str) -> str:
             break  # defensive: never loop on an unrewritable segment
         sql = sql[: po + 1] + rewritten + sql[pc:]
 
-    mask = _depth0_mask(sql)
+    masked = mask_literals(sql)
+    top = _depth0(masked)
     m = next(
-        (mm for mm in _QUALIFY_RE.finditer(sql) if mask[mm.start()]), None
+        (mm for mm in _QUALIFY_RE.finditer(masked) if top[mm.start()]), None
     )
     if m is None:
         return sql
     tail_m = next(
         (
             tm
-            for tm in _QUALIFY_TAIL_RE.finditer(sql, m.end())
-            if mask[tm.start()]
+            for tm in _QUALIFY_TAIL_RE.finditer(masked, m.end())
+            if top[tm.start()]
         ),
         None,
     )
@@ -670,8 +608,8 @@ def rewrite_qualify(sql: str) -> str:
     # QUALIFY (right-branch case); `* EXCEPT (cols)` is skipped — it is a
     # select-list modifier, not a set operation
     head_start = 0
-    for sm in _QUALIFY_SETOP_RE.finditer(sql, 0, m.start()):
-        if not mask[sm.start()]:
+    for sm in _QUALIFY_SETOP_RE.finditer(masked, 0, m.start()):
+        if not top[sm.start()]:
             continue
         if sql[: sm.start()].rstrip().endswith("*"):
             continue

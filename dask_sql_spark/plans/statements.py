@@ -32,6 +32,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
+from dask_sql_spark.dialect import mask_literals, split_top_commas
+
 if TYPE_CHECKING:
     from dask_sql_spark.context import Context
 
@@ -189,27 +191,28 @@ def _resolve(context: "Context", name: str) -> tuple[str, str]:
     return context._split_qualified(_unquote(name))
 
 
+_PAREN_RE = re.compile(r"[()]")
+
+
+def _close_paren(masked: str, open_idx: int) -> int | None:
+    """Index of the ')' closing the '(' at ``open_idx`` in literal-masked
+    text, or None when it is unbalanced."""
+    depth = 0
+    for m in _PAREN_RE.finditer(masked, open_idx):
+        depth += 1 if m.group() == "(" else -1
+        if depth == 0:
+            return m.start()
+    return None
+
+
 def _split_balanced(sql: str, open_idx: int) -> tuple[str, str] | None:
     """Given the index of an opening '(', return (inner, rest-after-close)
     using paren-depth scanning that skips string literals. Needed because a
     greedy regex would mis-split ``WITH (...) AS SELECT CAST(a AS ...)``."""
-    depth = 0
-    in_str = False
-    for i in range(open_idx, len(sql)):
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return sql[open_idx + 1 : i], sql[i + 1 :]
-    return None
+    close = _close_paren(mask_literals(sql), open_idx)
+    if close is None:
+        return None
+    return sql[open_idx + 1 : close], sql[close + 1 :]
 
 
 _KWARG_KEY_RE = re.compile(r"\s*,?\s*([\w.]+)\s*=\s*", re.DOTALL)
@@ -235,10 +238,13 @@ def parse_kwargs(body: str) -> dict:
 
     Values may be quoted strings, numbers, booleans, bare words, or
     parenthesized expressions with arbitrary nesting (reference parser.rs
-    key-value grammar). Parenthesized values are scanned with paren-depth
-    balancing (_split_balanced), not a non-greedy regex, so nested calls
-    like ``steps = (List(a(1), b(2)))`` parse whole."""
+    key-value grammar). Value ends are found on the literal-masked text
+    (``dialect.mask_literals``): a parenthesized value runs to its
+    balancing paren, not a non-greedy regex, so nested calls like
+    ``steps = (List(a(1), b(2)))`` parse whole, and a comma inside a
+    string literal never ends a bare value."""
     out: dict = {}
+    masked = mask_literals(body)
     i, n = 0, len(body)
     while i < n:
         m = _KWARG_KEY_RE.match(body, i)
@@ -247,58 +253,17 @@ def parse_kwargs(body: str) -> dict:
         key = m.group(1).lower()
         i = m.end()
         if i < n and body[i] == "(":
-            split = _split_balanced(body, i)
-            if split is None:
-                raw, i = body[i:], n
-            else:
-                inner, rest = split
-                raw = f"({inner})"
-                i = n - len(rest)
+            close = _close_paren(masked, i)
+            j = n if close is None else close + 1
         elif i < n and body[i] == "'":
-            j = i + 1
-            while j < n:
-                if body[j] == "'":
-                    if j + 1 < n and body[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            raw, i = body[i : j + 1], j + 1
+            # the mask keeps quotes: the next one closes this literal
+            j = masked.find("'", i + 1) + 1 or n
         else:
-            j = i
-            while j < n and body[j] != ",":
-                j += 1
-            raw, i = body[i:j], j
-        out[key] = _coerce_kwarg(raw)
+            j = masked.find(",", i)
+            j = n if j < 0 else j
+        out[key] = _coerce_kwarg(body[i:j])
+        i = j
     return out
-
-
-def _mask_literals(sql: str) -> str:
-    """Same-length copy of ``sql`` with string-literal CONTENTS blanked to
-    spaces (quotes kept, '' escapes preserved as two blanks), so the
-    structural statement regexes cannot match keywords like WHERE/WHEN
-    inside string VALUES. Group spans from a match on the masked text
-    index directly into the original (lengths are identical)."""
-    out: list[str] = []
-    in_str = False
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if not in_str:
-            out.append(ch)
-            if ch == "'":
-                in_str = True
-        elif ch == "'":
-            if i + 1 < n and sql[i + 1] == "'":
-                out.append("  ")
-                i += 2
-                continue
-            out.append("'")
-            in_str = False
-        else:
-            out.append(" ")
-        i += 1
-    return "".join(out)
 
 
 class _SpanMatch:
@@ -322,38 +287,13 @@ def _match_masked(pattern: re.Pattern, sql: str) -> _SpanMatch | None:
     proxy whose groups come from the original — for statements whose
     clause structure (WHERE/WHEN boundaries) must ignore keyword-looking
     text inside string values."""
-    m = pattern.match(_mask_literals(sql))
+    m = pattern.match(mask_literals(sql))
     return _SpanMatch(m, sql) if m else None
 
 
 def _split_top_commas(s: str) -> list[str]:
-    """Split on commas at paren depth 0, skipping string literals."""
-    parts: list[str] = []
-    buf: list[str] = []
-    depth = 0
-    in_str = False
-    for ch in s:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
+    """Non-empty, stripped pieces of ``s`` split on top-level commas."""
+    return [p.strip() for p in split_top_commas(s) if p.strip()]
 
 
 def _execute_merge(context: "Context", m: re.Match) -> DataFrame:
@@ -392,7 +332,7 @@ def _execute_merge(context: "Context", m: re.Match) -> DataFrame:
     # WHEN-clause boundaries found on literal-masked text (a SET value
     # like 'WHEN MATCHED THEN' must not start a new clause); the action
     # text itself is sliced from the original
-    for wm in _WHEN_CLAUSE.finditer(_mask_literals(whens)):
+    for wm in _WHEN_CLAUSE.finditer(mask_literals(whens)):
         neg = wm.group(1)
         action = whens[wm.start(2):wm.end(2)].strip()
         upper = action.upper()
@@ -425,14 +365,7 @@ def _execute_merge(context: "Context", m: re.Match) -> DataFrame:
     joined = t.join(s, F.expr(cond), "left")
     matched = F.col(marker).isNotNull()
 
-    assignments: dict[str, str] = {}
-    if update_set:
-        for part in _split_top_commas(update_set):
-            k, v = part.split("=", 1)
-            k = k.strip().strip('"`')
-            if "." in k:  # tolerate `t.col = ...`
-                k = k.split(".", 1)[1].strip().strip('"`')
-            assignments[k.lower()] = v.strip()
+    assignments = _parse_assignments(update_set) if update_set else {}
 
     cols = []
     for c in target.columns:
@@ -717,7 +650,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
 
     m = _ALTER_TABLE.match(sql)
     if m:
-        # reference alter.py:14-86: rename = re-register + drop old
+        # reference alter.py:14-86; a registry move via Context.alter_table
         if_exists, old, new = m.groups()
         old, new = _unquote(old), _unquote(new)
         if not context._table_exists(old):
@@ -730,25 +663,18 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
             new_schema, new_table = _resolve(context, new)
         else:
             new_schema, new_table = old_schema, new
-        df = context._get_table(old)
-        context.create_table(new_table, df, schema_name=new_schema)
-        context.drop_table(old_table, schema_name=old_schema)
+        if new_schema != old_schema:
+            # as Spark's session catalog: a rename never moves databases
+            raise ValueError(
+                f"ALTER TABLE {old} RENAME TO {new}: source and destination "
+                f"schemas do not match ({old_schema} vs {new_schema})"
+            )
+        context.alter_table(old_table, new_table, schema_name=old_schema)
         return context._empty_result()
 
     m = _ALTER_SCHEMA.match(sql)
     if m:
-        old, new = _unquote(m.group(1)), _unquote(m.group(2))
-        if old not in context.schemas:
-            raise RuntimeError(f"Schema {old} does not exist")
-        schema = context.schemas.pop(old)
-        schema.name = new
-        context.schemas[new] = schema
-        if context.schema_name == old:
-            context.schema_name = new
-        # re-register views under the new mangled names
-        for t, df in schema.tables.items():
-            context.spark.catalog.dropTempView(context._view_name(t, old))
-            df.createOrReplaceTempView(context._view_name(t, new))
+        context.alter_schema(_unquote(m.group(1)), _unquote(m.group(2)))
         return context._empty_result()
 
     m = _SHOW_SCHEMAS.match(sql)

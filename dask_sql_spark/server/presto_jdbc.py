@@ -18,6 +18,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
+from dask_sql_spark.dialect import mask_literals
+
 if TYPE_CHECKING:
     from dask_sql_spark.context import Context
 
@@ -82,10 +84,7 @@ def maybe_jdbc_query(context: "Context", sql: str) -> DataFrame | None:
     A ``system.jdbc.X`` occurrence inside a string literal is data, not a
     table reference — such queries pass through untouched (return None).
     """
-    from dask_sql_spark.dialect import _literal_mask
-
-    lit = _literal_mask(sql)
-    matches = [m for m in _JDBC_RE.finditer(sql) if not lit[m.start()]]
+    matches = list(_JDBC_RE.finditer(mask_literals(sql)))
     if not matches:
         return None
     spark = context.spark

@@ -150,6 +150,57 @@ def test_alter_schema_rename(context):
     context.drop_schema("new_s")
 
 
+def test_sql_alter_table_rename_keeps_cache_and_location(context, tmp_path):
+    """The SQL rename is the registry move of Context.alter_table: a
+    persisted parquet table keeps its cache and file location, so
+    OPTIMIZE still works on the new name."""
+    loc = str(tmp_path / "sql_alt")
+    context.spark.createDataFrame(pd.DataFrame({"a": [1, 2, 3]})).write.parquet(loc)
+    context.sql(
+        f"CREATE TABLE sql_alt_src WITH (location = '{loc}', "
+        "format = 'parquet', persist = true)"
+    )
+    schema = context.schemas[context.schema_name]
+    schema.tables["sql_alt_src"].count()  # materialize the cache
+    context.sql("ALTER TABLE sql_alt_src RENAME TO sql_alt_dst")
+    try:
+        assert schema.tables["sql_alt_dst"].is_cached
+        assert schema.filepaths["sql_alt_dst"] == loc
+        assert schema.fileformats["sql_alt_dst"] == "parquet"
+        dest = str(tmp_path / "sql_alt_done")
+        context.sql(f"OPTIMIZE sql_alt_dst WITH (dest = '{dest}')").collect()
+        assert schema.filepaths["sql_alt_dst"] == dest
+        n = context.sql("SELECT COUNT(*) AS n FROM sql_alt_dst").collect()[0].n
+        assert n == 3
+    finally:
+        context.drop_table("sql_alt_dst")
+
+
+def test_sql_alter_table_rename_across_schemas_raises(context):
+    context.create_schema("xs_a")
+    context.create_table("t1", pd.DataFrame({"x": [1]}), schema_name="xs_a")
+    try:
+        with pytest.raises(ValueError, match="schemas do not match"):
+            context.sql("ALTER TABLE xs_a.t1 RENAME TO root.t1")
+        assert "t1" in context.schemas["xs_a"].tables
+    finally:
+        context.drop_schema("xs_a")
+
+
+def test_sql_alter_schema_onto_live_schema_raises(context):
+    context.create_schema("live_a")
+    context.create_schema("live_b")
+    context.create_table("t1", pd.DataFrame({"x": [5]}), schema_name="live_b")
+    try:
+        with pytest.raises(RuntimeError, match="already exists"):
+            context.sql("ALTER SCHEMA live_a RENAME TO live_b")
+        assert "live_a" in context.schemas
+        assert context.sql("SELECT x FROM live_b.t1").collect()[0].x == 5
+    finally:
+        context.drop_schema("live_a")
+        context.drop_schema("live_b")
+
+
 def test_insert_into(context):
     import pandas as pd
 

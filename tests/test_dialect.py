@@ -493,3 +493,14 @@ def test_fetch_first_rewrites_to_limit():
     assert "FETCH FIRST 5 ROWS ONLY" in rewrite(
         "SELECT 'FETCH FIRST 5 ROWS ONLY' AS s"
     )
+
+
+def test_order_by_subquery_item_with_its_own_order_by():
+    """The last ORDER BY item may be a subquery with its own ORDER BY:
+    both get the default placement (this used to raise IndexError)."""
+    assert rewrite(
+        "SELECT a FROM t ORDER BY (SELECT max(x) FROM u ORDER BY y)"
+    ) == (
+        "SELECT a FROM t ORDER BY "
+        "(SELECT max(x) FROM u ORDER BY y NULLS LAST) NULLS LAST"
+    )

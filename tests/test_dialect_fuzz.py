@@ -263,3 +263,145 @@ def test_rewritten_queries_always_execute(context, q):
     produces a ParseException or drops a clause fails here loudly."""
     rows = context.sql(q).collect()
     assert rows is not None
+
+
+# ------------------- string-literal scanner (one grammar) ------------------- #
+# Text over quotes, escaped quotes, parens, commas and keywords, so literals
+# open and close anywhere, hold structure, and may run unterminated.
+_SQLISH = st.lists(
+    st.sampled_from(
+        ["'", "''", "a", "b", " ", "(", ")", ",", "=", "x", "WHERE", "QUALIFY",
+         "ORDER BY", "system.jdbc.tables"]
+    ),
+    max_size=20,
+).map("".join)
+# the content of one literal: anything, quotes included (escaped on splice)
+_LITERAL_BODY = st.lists(
+    st.sampled_from(["'", "a", " ", "(", ")", ",", "=", "WHEN", "--"]),
+    max_size=8,
+).map("".join)
+
+
+def _quote(body: str) -> str:
+    return "'" + body.replace("'", "''") + "'"
+
+
+def _reference_spans(sql: str) -> list[tuple[int, int]]:
+    """Char-by-char model of the literal grammar: '' inside a literal is
+    an escaped quote, an unterminated literal runs to the end."""
+    spans = []
+    i, n = 0, len(sql)
+    while i < n:
+        if sql[i] != "'":
+            i += 1
+            continue
+        start = i
+        i += 1
+        while i < n:
+            if sql[i] == "'":
+                if i + 1 < n and sql[i + 1] == "'":
+                    i += 2
+                    continue
+                i += 1
+                break
+            i += 1
+        spans.append((start, i))
+    return spans
+
+
+def _inside_literal(sql: str, pos: int) -> bool:
+    from dask_sql_spark.dialect import literal_spans
+
+    return any(lo < pos < hi for lo, hi in literal_spans(sql))
+
+
+@settings(max_examples=300, deadline=None)
+@given(sql=_SQLISH)
+def test_literal_spans_match_reference_model(sql):
+    from dask_sql_spark.dialect import literal_spans
+
+    assert literal_spans(sql) == _reference_spans(sql)
+
+
+@settings(max_examples=300, deadline=None)
+@given(sql=_SQLISH)
+def test_mask_literals_blanks_only_literal_interiors(sql):
+    from dask_sql_spark.dialect import mask_literals
+
+    masked = mask_literals(sql)
+    assert len(masked) == len(sql)
+    interior = set()
+    for lo, hi in _reference_spans(sql):
+        # quotes are kept: the opening one, and the closing one if present
+        interior.update(range(lo + 1, hi - 1 if _closes(sql, lo, hi) else hi))
+    for i, ch in enumerate(masked):
+        assert ch == (" " if i in interior else sql[i])
+
+
+def _closes(sql: str, lo: int, hi: int) -> bool:
+    """Whether the literal sql[lo:hi] has its closing quote: after the
+    opening quote, quotes pair up as escapes and the odd one closes."""
+    body = sql[lo + 1 : hi]
+    return (len(body) - len(body.rstrip("'"))) % 2 == 1
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    items=st.lists(
+        st.tuples(st.sampled_from(["a", "f(b, c)", "x ="]), _LITERAL_BODY),
+        min_size=1,
+        max_size=4,
+    )
+)
+def test_split_top_commas_never_splits_a_literal(items):
+    from dask_sql_spark.dialect import split_top_commas
+    from dask_sql_spark.plans.statements import _split_top_commas
+
+    pieces = [f"{expr} {_quote(body)}" for expr, body in items]
+    sql = ", ".join(pieces)
+    raw = split_top_commas(sql)
+    assert ",".join(raw) == sql
+    cut = 0
+    for part in raw[:-1]:
+        cut += len(part)
+        assert not _inside_literal(sql, cut)
+        cut += 1
+    assert _split_top_commas(sql) == pieces
+
+
+@settings(max_examples=200, deadline=None)
+@given(inner=_LITERAL_BODY, tail=_LITERAL_BODY)
+def test_split_balanced_never_closes_inside_a_literal(inner, tail):
+    from dask_sql_spark.plans.statements import _split_balanced
+
+    body = f"f({_quote(inner)}), {_quote(inner)}"
+    sql = f"WITH ({body}) AS {_quote(tail)}"
+    assert _split_balanced(sql, sql.index("(")) == (body, f" AS {_quote(tail)}")
+
+
+@settings(max_examples=200, deadline=None)
+@given(s=_LITERAL_BODY, t=_LITERAL_BODY)
+def test_parse_kwargs_never_splits_a_literal(s, t):
+    from dask_sql_spark.plans.statements import parse_kwargs
+
+    body = (
+        f"a = {_quote(s)}, b = (g({_quote(t)}, 1)), "
+        f"c = bare{_quote(t)}, d = 2"
+    )
+    assert parse_kwargs(body) == {
+        "a": s,
+        "b": f"(g({_quote(t)}, 1))",
+        "c": f"bare{_quote(t)}",
+        "d": 2,
+    }
+
+
+@settings(max_examples=100, deadline=None)
+@given(before=_LITERAL_BODY, after=_LITERAL_BODY)
+def test_jdbc_shim_leaves_string_literals_alone(before, after):
+    """A system.jdbc name inside a string value is data: the shim passes
+    the query through without touching the Context."""
+    from dask_sql_spark.server.presto_jdbc import maybe_jdbc_query
+
+    lit = _quote(f"{before}system.jdbc.tables{after}")
+    assert maybe_jdbc_query(None, f"SELECT {lit} AS s FROM t") is None
