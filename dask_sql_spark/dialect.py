@@ -236,11 +236,14 @@ def _ceil_step(unit: str) -> str:
 
 
 def _ceil_floor_repl(m: re.Match) -> str:
+    """``CEIL``/``FLOOR`` of group 2 to the unit in group 3; group 1 names
+    the function. Serves both ``CEIL(x TO unit)`` and ``TIMESTAMPCEIL(x,
+    'unit')``."""
     fn, expr, unit = m.group(1).upper(), m.group(2), m.group(3).upper()
-    if fn == "FLOOR":
-        return f"date_trunc('{unit}', {expr})"
-    # CEIL: truncate, and if truncation changed the value, add one unit
     trunc = f"date_trunc('{unit}', {expr})"
+    if fn == "FLOOR":
+        return trunc
+    # CEIL: truncate, and if truncation changed the value, add one unit
     return (
         f"CASE WHEN {trunc} = CAST({expr} AS TIMESTAMP) THEN {trunc} "
         f"ELSE {trunc} + INTERVAL {_ceil_step(unit)} END"
@@ -356,17 +359,6 @@ def _dsql_totimestamp_repl(m: re.Match) -> str:
     )
 
 
-def _timestamp_ceil_floor_repl(m: re.Match) -> str:
-    which, expr, unit = m.group(1).upper(), m.group(2), m.group(3).upper()
-    trunc = f"date_trunc('{unit}', {expr})"
-    if which == "FLOOR":
-        return trunc
-    return (
-        f"CASE WHEN {trunc} = CAST({expr} AS TIMESTAMP) THEN {trunc} "
-        f"ELSE {trunc} + INTERVAL {_ceil_step(unit)} END"
-    )
-
-
 # EXTRACT units Spark lacks: CENTURY/DECADE/MILLENNIUM/MILLISECONDS/
 # MICROSECONDS/EPOCH (reference call.py:909-960). Semantics follow
 # Postgres/DuckDB (century(2021)=21, milliseconds = within-minute,
@@ -415,21 +407,16 @@ _SUBSTRING_FROM_RE = re.compile(
     re.IGNORECASE,
 )
 _SUBSTR_COMMA_RE = re.compile(
-    r"\bSUBSTR(ING)?\s*\(\s*" + _ARG + r"\s*,\s*([^(),]+?)\s*"
+    r"\bSUBSTR(?:ING)?\s*\(\s*" + _ARG + r"\s*,\s*([^(),]+?)\s*"
     r"(?:,\s*([^(),]+?)\s*)?\)",
     re.IGNORECASE,
 )
 
 
-def _substring_from_repl(m: re.Match) -> str:
+def _substring_repl(m: re.Match) -> str:
+    """Both SUBSTRING forms: string, start and optional length are groups
+    1-3."""
     a, s, ln = m.group(1), m.group(2), m.group(3)
-    if ln is not None:
-        return f"SUBSTRING({a}, GREATEST({s}, 1), {ln})"
-    return f"SUBSTRING({a}, GREATEST({s}, 1))"
-
-
-def _substr_comma_repl(m: re.Match) -> str:
-    a, s, ln = m.group(2), m.group(3), m.group(4)
     if ln is not None:
         return f"SUBSTRING({a}, GREATEST({s}, 1), {ln})"
     return f"SUBSTRING({a}, GREATEST({s}, 1))"
@@ -653,9 +640,7 @@ def rewrite(sql: str) -> str:
     # STARTS inside a quoted string is skipped (it is string data, not SQL).
     sql = _sub_skipping_literals(_CEIL_FLOOR_RE, _ceil_floor_repl, sql)
     sql = _sub_skipping_literals(_DSQL_TOTIMESTAMP_RE, _dsql_totimestamp_repl, sql)
-    sql = _sub_skipping_literals(
-        _TIMESTAMP_CEIL_FLOOR_RE, _timestamp_ceil_floor_repl, sql
-    )
+    sql = _sub_skipping_literals(_TIMESTAMP_CEIL_FLOOR_RE, _ceil_floor_repl, sql)
     sql = _rewrite_outside_literals(
         sql, lambda chunk: _RAND_INTEGER_RE.sub(_rand_integer_repl, chunk)
     )
@@ -668,8 +653,8 @@ def rewrite(sql: str) -> str:
     # SUBSTRING/SUBSTR args may be string literals or nested calls, so
     # these run on the full text with the literal-span guard (a match
     # starting inside a string value must not be rewritten)
-    sql = _sub_skipping_literals(_SUBSTRING_FROM_RE, _substring_from_repl, sql)
-    sql = _sub_skipping_literals(_SUBSTR_COMMA_RE, _substr_comma_repl, sql)
+    sql = _sub_skipping_literals(_SUBSTRING_FROM_RE, _substring_repl, sql)
+    sql = _sub_skipping_literals(_SUBSTR_COMMA_RE, _substring_repl, sql)
 
     # SIMILAR TO spans a literal, so run on the full text
     def _similar_repl(m: re.Match) -> str:

@@ -16,6 +16,8 @@ driver.
 from __future__ import annotations
 
 import math
+import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,6 +74,38 @@ def compaction_plan(
     )
 
 
+def _guard_disjoint_paths(src: str, dest: str) -> None:
+    """Refuse compaction when one location nests inside the other: a
+    dest under src would be double-counted by every later scan of src
+    (and re-ingested by a second compaction); src under dest would be
+    clobbered by the overwrite (round-10 audit). Paths are normalized
+    first — scheme stripped, made absolute, '..'/'//' collapsed — so
+    equivalent-but-differently-spelled paths ('file:/x' vs '/x',
+    'a/../b' vs 'b') can't bypass the guard (round-10 advisor)."""
+
+    def _norm(p: str) -> str:
+        # strip a URI scheme ("file:", "hdfs://nn") down to the path
+        # part; non-local schemes keep their authority as the root
+        # component so hdfs://a/x vs hdfs://b/x stay distinct
+        m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*):(?://([^/]*))?(.*)$", p)
+        if m:
+            scheme, auth, rest = m.group(1), m.group(2) or "", m.group(3)
+            if scheme.lower() == "file":
+                p = rest or "/"
+            else:
+                return f"{scheme}://{auth}" + os.path.normpath("/" + rest)
+        return os.path.normpath(os.path.abspath(p))
+
+    a = _norm(src).rstrip("/") + "/"
+    b = _norm(dest).rstrip("/") + "/"
+    if a.startswith(b) or b.startswith(a):
+        raise ValueError(
+            f"compaction source {src!r} and destination {dest!r} "
+            "overlap; write to a disjoint location and swap in the "
+            "catalog after validation"
+        )
+
+
 def compact_files(
     spark: SparkSession,
     path: str,
@@ -86,11 +120,6 @@ def compact_files(
     write-audit-publish discipline as every lakehouse compactor).
     Returns the post-compaction :func:`compaction_plan` of ``dest``.
     """
-    # refuse in-place AND nested rewrites: a dest under path would be
-    # double-counted by every later scan of path; a path under dest
-    # would be clobbered by the overwrite (round-10 audit)
-    from dask_sql_spark.sources.maintenance import _guard_disjoint_paths
-
     _guard_disjoint_paths(path, dest)
     total = sum(b for _, b in _list_files(spark, path))
     n = max(1, math.ceil(total / target_bytes))

@@ -240,7 +240,7 @@ def _assign_cells(
     shuffled the narrow fan AND re-shuffled the full vector payload
     through the rejoin's sort-merge join at build scale; this removes
     both, and with them 2 of the 3 driver jobs the old plan needed
-    (profile_query r13: ann_ivf_topk 7 jobs → see OPTIMIZATION_r13.md).
+    (r13 stage profile: ann_ivf_topk 7 jobs → see OPTIMIZATION_r13.md).
 
     Duplicate ``id_b`` rows (a contract violation — uniqueness is
     validated by :func:`ivf_build_index`) now each keep their own row

@@ -31,6 +31,7 @@ import re
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from dask_sql_spark.dialect import mask_literals, split_top_commas
 
@@ -878,8 +879,13 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
             raise RuntimeError(f"Experiment {name} already exists")
         results = create_experiment(
             context, name, parse_kwargs(body), rest_m.group(1)
+        ).astype(str)
+        fields = [T.StructField(str(c), T.StringType()) for c in results.columns]
+        return local_frame(
+            spark,
+            list(results.itertuples(index=False, name=None)),
+            T.StructType(fields),
         )
-        return context.spark.createDataFrame(results.astype(str))
 
     m = _PREDICT.match(sql)
     if m:

@@ -1,115 +1,13 @@
-"""Table-maintenance operations: small-file compaction.
+"""Clustered parquet layout: range-sorted writes and the footer
+statistics that show whether a layout lets scans skip files.
 
-Long-running ingestion (streaming sinks, micro-batch appends, per-task
-writes) leaves thousands of small parquet files; at 100 TB the scan's
-task-scheduling and footer-reading overhead dominates. Compaction
-rewrites a location into ~target-sized files — the `OPTIMIZE` of
-Delta/Iceberg re-expressed with plain Spark primitives.
-
-File sizes are read through the Hadoop FileSystem API (works for HDFS /
-S3A / local alike), the row data never touches the driver, and the
-rewrite is a single ``repartition(n)`` — one round-robin shuffle sized
-so each output file lands near the target.
+Compaction of small files is ``operators/maintenance.compact_files``
+(the ``OPTIMIZE`` statement).
 """
 
 from __future__ import annotations
 
-import math
-import os
-import re
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def _guard_disjoint_paths(src: str, dest: str) -> None:
-    """Refuse compaction when one location nests inside the other: a
-    dest under src would be double-counted by every later scan of src
-    (and re-ingested by a second compaction); src under dest would be
-    clobbered by the overwrite (round-10 audit). Paths are normalized
-    first — scheme stripped, made absolute, '..'/'//' collapsed — so
-    equivalent-but-differently-spelled paths ('file:/x' vs '/x',
-    'a/../b' vs 'b') can't bypass the guard (round-10 advisor)."""
-
-    def _norm(p: str) -> str:
-        # strip a URI scheme ("file:", "hdfs://nn") down to the path
-        # part; non-local schemes keep their authority as the root
-        # component so hdfs://a/x vs hdfs://b/x stay distinct
-        m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*):(?://([^/]*))?(.*)$", p)
-        if m:
-            scheme, auth, rest = m.group(1), m.group(2) or "", m.group(3)
-            if scheme.lower() == "file":
-                p = rest or "/"
-            else:
-                return f"{scheme}://{auth}" + os.path.normpath("/" + rest)
-        return os.path.normpath(os.path.abspath(p))
-
-    a = _norm(src).rstrip("/") + "/"
-    b = _norm(dest).rstrip("/") + "/"
-    if a.startswith(b) or b.startswith(a):
-        raise ValueError(
-            f"compaction source {src!r} and destination {dest!r} "
-            "overlap; write to a disjoint location and swap in the "
-            "catalog after validation"
-        )
-
-
-def _total_bytes(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(total_bytes, n_files) under ``path`` via the Hadoop FS API."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    total = 0
-    n = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        total += st.getLen()
-        n += 1
-    return total, n
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_mb: int = 128,
-    sort_by: list[str] | None = None,
-) -> dict:
-    """Rewrite the parquet location ``path`` into ``out_path`` with
-    ~``target_file_mb``-sized files, optionally re-clustering rows with
-    ``sort_by`` (restores row-group skipping that appends destroyed).
-    Returns {files_before, files_after, bytes, target_files}.
-
-    Deliberately writes to a NEW location: an in-place rewrite that
-    fails mid-way would lose data; callers swap paths atomically in
-    their catalog (exactly how lakehouse OPTIMIZE commits).
-    """
-    _guard_disjoint_paths(path, out_path)
-    total, before = _total_bytes(spark, path)
-    target = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    # read_location, not a raw parquet scan: under the session default
-    # nanosAsLong=true a timestamp[ns] column reads as epoch-nanos
-    # BIGINT, and a raw-scan compaction would WRITE it back as BIGINT —
-    # silently degrading the table schema (round-10 audit; same fix as
-    # operators/maintenance.compact_files)
-    from dask_sql_spark.sources.location import read_location
-
-    df: DataFrame = read_location(spark, path, format="parquet")
-    out = df.repartition(target)
-    if sort_by:
-        out = out.sortWithinPartitions(*sort_by)
-    out.write.mode("overwrite").parquet(out_path)
-    _, after = _total_bytes(spark, out_path)
-    return {
-        "files_before": before,
-        "files_after": after,
-        "bytes": total,
-        "target_files": target,
-    }
+from pyspark.sql import DataFrame
 
 
 def write_sorted(

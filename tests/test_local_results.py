@@ -98,3 +98,25 @@ def test_statement_results_are_local(context, tmp_path):
     finally:
         context.sql("DROP MODEL IF EXISTS loc_m")
         context.drop_table("loc_t")
+
+
+def test_create_experiment_result_is_local(context):
+    """CREATE EXPERIMENT's result table is a local relation with the schema
+    and rows of the pandas path it replaced: every column a string."""
+    res = context.sql(
+        """CREATE OR REPLACE EXPERIMENT loc_exp WITH (
+             model_class = 'tests.dummy_estimator.MeanRegressor',
+             target_column = 'b',
+             folds = 2,
+             tune_parameters.shift = (0.0, 1.0)
+           ) AS SELECT CAST(a AS DOUBLE) AS a, b FROM df_simple"""
+    )
+    try:
+        results = context.schemas["root"].experiments["loc_exp"]["results"]
+        ref = context.spark.createDataFrame(results.astype(str))
+        assert res.isLocal()
+        assert res.schema == ref.schema
+        assert res.collect() == ref.collect()
+        assert len(res.collect()) == 2
+    finally:
+        context.sql("DROP MODEL IF EXISTS loc_exp")

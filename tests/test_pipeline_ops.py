@@ -1284,19 +1284,19 @@ def test_zorder_key_preserves_2d_locality(spark, tmp_path):
     assert back.count() == 1024
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
+def test_compact_files_merges_small_files(spark, tmp_path):
     import pandas as pd
 
-    from dask_sql_spark.sources.maintenance import compact_parquet
+    from dask_sql_spark.operators.maintenance import compact_files, compaction_plan
 
     src = str(tmp_path / "small_files")
     pdf = pd.DataFrame({"k": range(2000), "v": [str(i) * 20 for i in range(2000)]})
     # simulate fragmented ingestion: 40 tiny files
     spark.createDataFrame(pdf).repartition(40).write.parquet(src)
     dst = str(tmp_path / "compacted")
-    stats = compact_parquet(spark, src, dst, target_file_mb=128)
-    assert stats["files_before"] == 40
-    assert stats["files_after"] == stats["target_files"] == 1
+    assert compaction_plan(spark, src).first().n_files == 40
+    after = compact_files(spark, src, dst).first()
+    assert after.n_files == after.target_n_files == 1
     back = spark.read.parquet(dst)
     assert back.count() == 2000
     assert back.agg(F.sum("k")).collect()[0][0] == sum(range(2000))
@@ -1308,7 +1308,7 @@ def test_compact_guard_normalizes_path_spellings():
     segments, '//' — not just raw string prefixes."""
     import pytest
 
-    from dask_sql_spark.sources.maintenance import _guard_disjoint_paths
+    from dask_sql_spark.operators.maintenance import _guard_disjoint_paths
 
     for src, dest in [
         ("/data/t", "/data/t/compacted"),  # plain nesting (old guard)
@@ -1325,17 +1325,17 @@ def test_compact_guard_normalizes_path_spellings():
     _guard_disjoint_paths("hdfs://nn1/data/t", "hdfs://nn2/data/t/x")
 
 
-def test_compact_parquet_preserves_nanos_timestamps(spark, tmp_path):
+def test_compact_files_preserves_nanos_timestamps(spark, tmp_path):
     """Round-10 audit, pinned: compacting a table whose parquet carries
     timestamp[ns] columns must write real TIMESTAMPs back. Under the
     session default nanosAsLong=true a raw scan reads them as
-    epoch-nanos BIGINT, and the old compact_parquet wrote the BIGINT
+    epoch-nanos BIGINT, and a raw-scan compaction writes the BIGINT
     degradation into the compacted table."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dask_sql_spark.sources.maintenance import compact_parquet
+    from dask_sql_spark.operators.maintenance import compact_files
 
     src = tmp_path / "ns_table"
     src.mkdir()
@@ -1347,23 +1347,22 @@ def test_compact_parquet_preserves_nanos_timestamps(spark, tmp_path):
         coerce_timestamps=None,  # keep ns
     )
     dst = str(tmp_path / "ns_compacted")
-    compact_parquet(spark, str(src), dst, target_file_mb=128)
+    compact_files(spark, str(src), dst)
     assert dict(spark.read.parquet(dst).dtypes)["ts"].startswith("timestamp")
 
 
 def test_compaction_rejects_nested_paths(spark, tmp_path):
     """Round-10 audit, pinned: a dest nested under the source would be
     double-counted by every later scan of the source (and vice versa
-    clobbered) — both compactors refuse."""
+    clobbered) — the compactor refuses both."""
     import pytest
 
     from dask_sql_spark.operators.maintenance import compact_files
-    from dask_sql_spark.sources.maintenance import compact_parquet
 
     src = str(tmp_path / "t")
     spark.range(10).write.parquet(src)
     with pytest.raises(ValueError, match="overlap"):
-        compact_parquet(spark, src, src + "/compacted")
+        compact_files(spark, src, src + "/compacted")
     with pytest.raises(ValueError, match="overlap"):
         compact_files(spark, src + "/sub", src)
 
