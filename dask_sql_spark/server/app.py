@@ -13,21 +13,31 @@ PAGED (reference behavior: server/app.py:40-66 + responses.py): each
 ``GET /v1/status/{uuid}`` returns up to ``page_size`` rows plus a
 ``nextUri`` while more remain.
 
-Where the rows come from depends on the result frame. A local result
+Where the rows come from depends on the result frame. A result is
+collected in one piece with ``collect()`` when it is local
 (``df.isLocal()``: a ``LocalRelation`` such as the DDL, SHOW and JDBC
 metadata answers built by ``context.local_frame``, or a Spark command
-result) is read with ``collect()``, which starts no Spark job. That
-collects rows the driver already holds: for the statement results built
-by ``local_frame`` these are a few rows, and Spark turns an Arrow table
-above ``spark.sql.execution.arrow.localRelationThreshold`` into a
-distributed relation, which streams. Every other result streams via
-``toLocalIterator``, so the driver never materializes the full result set
-of a distributed query. Either way pages are pulled through the same
-iterator. Every Spark job a query triggers runs under a job group named
-by the query id, so DELETE
+result) or when its optimized plan's size estimate is at most the
+session's ``spark.sql.autoBroadcastJoinThreshold``, the estimate Spark
+itself trusts to pull a plan's output onto the driver for a broadcast.
+A local result, and a plan that optimizes to a ``LocalRelation`` (a JDBC
+metadata query with a WHERE), starts no Spark job; any other collected
+result reads all partitions of its final stage in one job. Every other
+result (the estimate above the threshold, or the threshold ``-1``)
+streams via ``toLocalIterator``, one job per partition, so the driver never
+materializes the full result set of a large query;
+``spark.driver.maxResultSize`` is the backstop for an estimate that is
+badly low. Either way pages are pulled through the same iterator.
+
+``GET /v1/status/{uuid}`` long-polls: on an unfinished query it waits up
+to ``SQLServer.POLL_WAIT_SECONDS`` (1 s, the Presto protocol's default
+``maxWait``) for the query to finish before it answers RUNNING, so a short
+query's first page comes back on the first GET. Every Spark job a query
+triggers runs under a job group named by the query id, so DELETE
 /v1/cancel/{uuid} interrupts running stages via ``cancelJobGroup`` (not
-just a flag). Finished/failed/canceled query states are evicted after
-their final status poll (plus a TTL sweep), so ``queries`` stays bounded.
+just a flag), and a GET waiting on that query answers CANCELED.
+Finished/failed/canceled query states are evicted after their final
+status poll (plus a TTL sweep), so ``queries`` stays bounded.
 """
 
 from __future__ import annotations
@@ -38,7 +48,7 @@ import math
 import threading
 import time
 import uuid as uuidlib
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import TYPE_CHECKING, Any
 
@@ -122,6 +132,22 @@ def _json_value(v: Any) -> Any:
     return v
 
 
+def _fits_driver(df: Any) -> bool:
+    """True when ``df`` should be collected in one piece: it is local, or
+    its optimized plan's size estimate is at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (``-1``: never). Spark trusts
+    that estimate when it pulls a plan's output onto the driver for a
+    broadcast. The estimate reads the ``QueryExecution`` that ``collect()``
+    then runs, so the plan is optimized once."""
+    if df.isLocal():
+        return True
+    qe = df._jdf.queryExecution()
+    limit = qe.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0:
+        return False
+    return qe.optimizedPlan().stats().sizeInBytes() <= limit
+
+
 class _QueryState:
     def __init__(self, future: Future | None = None):
         self.future = future
@@ -140,6 +166,9 @@ class SQLServer:
     # finished states evicted after final poll; this TTL sweeps states the
     # client abandoned without polling to completion
     STATE_TTL_SECONDS = 300.0
+    # how long a status GET waits on an unfinished query before it answers
+    # RUNNING (the Presto protocol's default maxWait)
+    POLL_WAIT_SECONDS = 1.0
     MAX_QUERY_STATES = 256
 
     def __init__(
@@ -171,9 +200,10 @@ class SQLServer:
 
     def _execute(self, qid: str, sql: str) -> None:
         """Plan the query and pre-pull the first page (the heavy compute)
-        under the query's job group. A local result (``df.isLocal()``) is
-        collected: that starts no Spark job, and its rows already sit on the
-        driver. Every other result streams via toLocalIterator, so the
+        under the query's job group. A local result, or one whose size
+        estimate is within the broadcast threshold (``_fits_driver``), is
+        collected: its final stage runs as one job (none for a local
+        relation). Every other result streams via toLocalIterator, so the
         driver holds at most one page plus Spark's partition buffer."""
         from dask_sql_spark.server.presto_jdbc import maybe_jdbc_query
 
@@ -184,7 +214,7 @@ class SQLServer:
             jdbc = maybe_jdbc_query(self.context, sql)
             df = jdbc if jdbc is not None else self.context.sql(sql)
             state.columns = _columns_payload(df.schema)
-            rows = df.collect() if df.isLocal() else df.toLocalIterator()
+            rows = df.collect() if _fits_driver(df) else df.toLocalIterator()
             state.row_iter = iter(rows)
             state.page = list(itertools.islice(state.row_iter, self.page_size))
         finally:
@@ -218,6 +248,10 @@ class SQLServer:
             self.queries.pop(qid, None)
 
     def status_payload(self, qid: str, base_url: str) -> tuple[int, dict]:
+        """The query's next status response. On an unfinished query it
+        first waits up to ``POLL_WAIT_SECONDS`` for the query to finish,
+        then answers CANCELED if a DELETE came meanwhile, RUNNING if it is
+        still running, FAILED with the error, or the next page of rows."""
         state = self.queries.get(qid)
         if state is None:
             return 404, {"error": {"message": f"unknown query {qid}"}}
@@ -225,6 +259,7 @@ class SQLServer:
             "id": qid,
             "infoUri": f"{base_url}/v1/status/{qid}",
         }
+        wait([state.future], timeout=self.POLL_WAIT_SECONDS)
         if state.cancelled:
             payload["stats"] = {"state": "CANCELED"}
             state.finished_at = time.monotonic()

@@ -82,14 +82,67 @@ def test_statement_error_reported(server):
     assert "error" in payload
 
 
-def test_cancel(server):
-    first = _post(server, "SELECT COUNT(*) AS n FROM df")
-    qid = first["id"]
+def _delete(server, qid: str) -> int:
     req = urllib.request.Request(
         f"http://127.0.0.1:{server.port}/v1/cancel/{qid}", method="DELETE"
     )
     with urllib.request.urlopen(req) as resp:
-        assert resp.status == 200
+        return resp.status
+
+
+def test_cancel(server):
+    first = _post(server, "SELECT COUNT(*) AS n FROM df")
+    assert _delete(server, first["id"]) == 200
+    payload = _poll(first)
+    assert payload["stats"]["state"] == "CANCELED"
+    assert "error" not in payload
+    assert first["id"] not in server.queries
+
+
+def test_cancel_during_long_poll(server):
+    """A DELETE that arrives while a status GET waits on the running query
+    ends that GET with CANCELED (not FAILED) within the wait bound."""
+    import threading
+
+    from dask_sql_spark.server.app import SQLServer
+
+    first = _post(
+        server, "SELECT reflect('java.lang.Thread', 'sleep', 3000L) AS z"
+    )
+    tracker = server.context.spark.sparkContext.statusTracker()
+    got: dict = {}
+
+    def status_get():
+        t0 = time.monotonic()
+        with urllib.request.urlopen(first["nextUri"]) as resp:
+            got["payload"] = _read_json(resp)
+        got["elapsed"] = time.monotonic() - t0
+
+    deadline = time.time() + 10
+    while not tracker.getJobIdsForGroup(first["id"]) and time.time() < deadline:
+        time.sleep(0.02)
+    getter = threading.Thread(target=status_get)
+    getter.start()
+    time.sleep(0.2)  # the GET waits on the sleeping query now
+    assert _delete(server, first["id"]) == 200
+    getter.join(timeout=10)
+    assert not getter.is_alive()
+    assert got["payload"]["stats"]["state"] == "CANCELED", got
+    assert "error" not in got["payload"]
+    assert "nextUri" not in got["payload"]
+    assert got["elapsed"] < SQLServer.POLL_WAIT_SECONDS + 0.5
+
+
+def test_one_page_select_finishes_on_first_get(server):
+    """The first status GET waits for a short query, so a one-page result
+    arrives FINISHED after the POST plus one GET."""
+    _poll(_post(server, "SELECT 5 AS five"))  # warm
+    first = _post(server, "SELECT 5 AS five")
+    with urllib.request.urlopen(first["nextUri"]) as resp:
+        payload = _read_json(resp)
+    assert payload["stats"]["state"] == "FINISHED"
+    assert payload["data"] == [[5]]
+    assert "nextUri" not in payload
 
 
 def test_jdbc_metadata(server):
@@ -189,19 +242,25 @@ def test_non_utf8_body_is_400(server):
 
 
 def test_multi_page_fetch(context):
-    """A result larger than page_size streams across several nextUri pages
-    (reference pages via server/app.py:40-66 + responses.py)."""
+    """A result larger than page_size arrives across several nextUri pages
+    (reference pages via server/app.py:40-66 + responses.py), both when it
+    is collected (size estimate within spark.sql.autoBroadcastJoinThreshold)
+    and when it streams via toLocalIterator (threshold -1)."""
     from dask_sql_spark.server.app import run_server
 
+    before = context.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s = run_server(context, host="127.0.0.1", port=0, blocking=False, page_size=7)
     try:
-        payload = _poll(
-            _post(s, "SELECT id FROM RANGE(25) ORDER BY id"), timeout=60.0
-        )
-        assert payload["stats"]["state"] == "FINISHED"
-        assert payload["pages"] >= 3  # 25 rows / 7 per page
-        assert [r[0] for r in payload["data"]] == list(range(25))
+        for threshold in (before, "-1"):
+            context.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            payload = _poll(
+                _post(s, "SELECT id FROM RANGE(25) ORDER BY id"), timeout=60.0
+            )
+            assert payload["stats"]["state"] == "FINISHED"
+            assert payload["pages"] >= 3  # 25 rows / 7 per page
+            assert [r[0] for r in payload["data"]] == list(range(25))
     finally:
+        context.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
         s.stop()
 
 
@@ -284,6 +343,44 @@ def test_local_results_start_no_job(server, tmp_path):
         server.context.schema_name = "root"
         server.context.sql("DROP SCHEMA IF EXISTS nojob_s")
         server.context.drop_table("nojob_src")
+
+
+def test_small_result_collected_in_one_job(server, tmp_path):
+    """A SELECT whose size estimate is within the broadcast threshold is
+    collected: one job over a 3-file parquet table, where streaming it
+    starts one job per partition."""
+    import pandas as pd
+
+    src = tmp_path / "three_files"
+    src.mkdir()
+    for i in range(3):
+        pd.DataFrame({"k": [3 * i, 3 * i + 1, 3 * i + 2]}).to_parquet(
+            src / f"part-{i}.parquet"
+        )
+    server.context.create_table("three_files", str(src))
+    try:
+        payload, jobs = _finished_jobs(server, "SELECT k FROM three_files")
+        assert sorted(r[0] for r in payload["data"]) == list(range(9))
+        assert len(jobs) == 1, jobs
+    finally:
+        server.context.drop_table("three_files")
+
+
+def test_jdbc_query_folded_to_local_starts_no_job(server):
+    """A JDBC metadata query with a WHERE over the local views optimizes to
+    a LocalRelation (isLocal() is still false): collected with no job."""
+    import pandas as pd
+
+    server.context.create_table("t_jdbc", pd.DataFrame({"a": [1]}))
+    try:
+        payload, jobs = _finished_jobs(
+            server, "SELECT * FROM system.jdbc.tables WHERE table_name LIKE 't%'"
+        )
+        assert jobs == []
+        names = [row[2] for row in payload["data"]]
+        assert "t_jdbc" in names and all(n.startswith("t") for n in names)
+    finally:
+        server.context.drop_table("t_jdbc")
 
 
 def test_local_result_pages(context):
