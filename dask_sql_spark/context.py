@@ -61,6 +61,11 @@ def default_spark_session(
     Arrow on (vectorized pandas interchange for the UDF path). On a real
     cluster, ``master``/executors come from spark-submit; locally we default
     to all cores.
+
+    ``spark.sql.codegen.cache.maxEntries`` is 2048, not Spark's 100, so a
+    repeated workload finds its generated classes still compiled. The cache
+    is static and JVM-wide: the size takes effect only when this function
+    builds the process's first session.
     """
     import os
 
@@ -84,6 +89,13 @@ def default_spark_session(
         # read TIMESTAMP(NANOS) parquet as long; sources/location.py
         # restores them to timestamps losslessly
         "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # Janino-compiled classes are cached in one JVM-wide LRU, 100
+        # entries by default. The 16 relational statements of a
+        # sql_analytics pass need ~200 classes and the 63 bench.HEADLINE
+        # queries ~810 (sf0.01, local[2]), so at 100 every pass evicted
+        # and recompiled nearly all of them. 2048 holds both with room
+        # for one-shot classes (1600 of them: +5 MB metaspace).
+        "spark.sql.codegen.cache.maxEntries": "2048",
     }
     if shuffle_partitions is not None:
         defaults["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -11,9 +11,9 @@ OP_Q = "dedup_minhash_lsh"  # a _dfq operator with Python-built lambdas
 
 LAYERS = {
     "name", "cpus", "wall_s", "wall_min_s", "build_s", "build_py4j",
-    "analysis_ms", "optimization_ms", "planning_ms", "jobs", "stages",
-    "tasks", "task_ms", "shuffle_read_bytes", "shuffle_write_bytes",
-    "slowest_stages",
+    "analysis_ms", "optimization_ms", "planning_ms", "codegen_compiles",
+    "jobs", "stages", "tasks", "task_ms", "shuffle_read_bytes",
+    "shuffle_write_bytes", "slowest_stages",
 }
 
 
@@ -26,6 +26,8 @@ def test_measure_records_every_layer_and_stable_plans(spark, tmp_path):
         assert set(rec) == LAYERS
         assert len(rec["wall_s"]) == 1 and rec["wall_min_s"] > 0
         assert rec["jobs"] >= 1 and rec["stages"] >= 1
+        # the warm pass compiled the query's classes; the timed pass reuses them
+        assert rec["codegen_compiles"] == 0
         assert rec["slowest_stages"]
     assert sql["name"] == SQL_Q and op1["name"] == op2["name"] == OP_Q
     assert sql["cpus"] == spark.sparkContext.defaultParallelism

@@ -1,6 +1,7 @@
 """Layered per-query measurement: one JSON record per query with its wall
-time, plan-build time and py4j round trips, Catalyst phase times, and the
-jobs, stages, task time and shuffle bytes its timed passes ran.
+time, plan-build time and py4j round trips, Catalyst phase times, the
+Janino compilations, jobs, stages, task time and shuffle bytes its timed
+passes ran.
 
 Usage: SPARK_GRAFT_SF_DIR=<dir of the sf tables> python tools/measure.py
            [-n 5] [--plans DIR] [name ...]
@@ -13,6 +14,10 @@ Env: SPARK_GRAFT_SF_DIR (required, the tables bench.py reads),
 
 Per query: one untimed warm pass, then ``-n`` timed passes. A pass is
 timed as bench.py times it: build plus a noop write, ``clearCache`` after.
+Each query is warmed and timed alone, so its passes reuse the generated
+classes its own warm pass compiled: what a query loses when other queries
+evict its classes from Spark's shared codegen cache shows only in bench.py
+and perfbench, which run many queries per pass.
 Record fields:
   wall_s, wall_min_s   seconds of each timed pass, and their min
   build_s              min over the timed passes of the plan-build seconds
@@ -20,6 +25,8 @@ Record fields:
                        untimed build (py4j's finalizer thread is not counted)
   analysis_ms, optimization_ms, planning_ms
                        Catalyst phases of that build's query execution
+  codegen_compiles     Janino compilations per timed pass (Spark's
+                       CodegenMetrics compilation-time histogram count)
   jobs, stages, tasks, task_ms, shuffle_read_bytes, shuffle_write_bytes
                        per timed pass, from the Spark status REST API
   slowest_stages       the five stages of the timed passes with the most
@@ -75,6 +82,13 @@ def _new_stages(rest: SparkRest, job0: int, stage0: int):
     return jobs, list(stages.values())
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compilations in this JVM so far: the count of Spark's
+    compile-time histogram, which every compilation adds one sample to."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 def _last_ids(rest: SparkRest) -> tuple[int, int]:
     rest.settle()
     job0 = max((j["jobId"] for j in rest.get("/jobs")), default=-1)
@@ -99,6 +113,7 @@ def measure(spark, names, sf_dir: str, n: int = 5, plans_dir: str | None = None)
         for i in range(n + 1):  # pass 0 is the untimed warm pass
             if i == 1:
                 job0, stage0 = _last_ids(rest)
+                compiles0 = codegen_compiles(spark)
             t0 = time.time()
             df = query(spark, sf_dir)
             t1 = time.time()
@@ -108,6 +123,7 @@ def measure(spark, names, sf_dir: str, n: int = 5, plans_dir: str | None = None)
             if i:
                 walls.append(dt)
                 builds.append(t1 - t0)
+        compiles = codegen_compiles(spark) - compiles0
         jobs, stages = _new_stages(rest, job0, stage0)
         df, build_py4j = _py4j_sends(lambda: query(spark, sf_dir))
         phases = Tracer.catalyst_phases(df)
@@ -131,6 +147,7 @@ def measure(spark, names, sf_dir: str, n: int = 5, plans_dir: str | None = None)
             "build_s": round(min(builds), 4),
             "build_py4j": build_py4j,
             **{f"{k}_ms": v for k, v in phases.items()},
+            "codegen_compiles": compiles / n,
             "jobs": len(jobs) / n,
             "stages": len(stages) / n,
             "tasks": per_pass("numCompleteTasks"),
