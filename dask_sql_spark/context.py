@@ -48,6 +48,24 @@ from dask_sql_spark.sources.location import to_spark_dataframe
 
 DEFAULT_SCHEMA_NAME = "root"
 
+# Runtime confs that the engine's results and dialect depend on. Every
+# session gets them: default_spark_session builds with them and
+# Context.__init__ sets them on whatever session it is given, so a session
+# built elsewhere cannot drift from the engine's semantics.
+SESSION_CONTRACT = {
+    # timestamps collect as naive UTC whatever the host timezone
+    "spark.sql.session.timeZone": "UTC",
+    # reference dialect parity (Calcite/ANSI, reference planner): a
+    # double-quoted token is an IDENTIFIER, not a string literal —
+    # `SELECT "from" FROM "select"` works for keyword-laden names.
+    # This also makes the dialect layer's single-quote-only literal
+    # masks exactly right for what Spark treats as string data.
+    "spark.sql.ansi.doubleQuotedIdentifiers": "true",
+    # read TIMESTAMP(NANOS) parquet as long; sources/location.py
+    # restores them to timestamps losslessly
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 
 def default_spark_session(
     app_name: str = "dask_sql_spark",
@@ -60,7 +78,13 @@ def default_spark_session(
     AQE on (runtime re-planning, skew handling, partition coalescing),
     Arrow on (vectorized pandas interchange for the UDF path). On a real
     cluster, ``master``/executors come from spark-submit; locally we default
-    to all cores.
+    to all cores. These performance defaults are the session owner's to
+    change through ``conf``.
+
+    The session is also built with ``SESSION_CONTRACT``: the UTC session
+    timezone, double-quoted identifiers and nano-timestamps read as longs.
+    Results and the dialect depend on those, so ``Context`` sets them again
+    on every session it is given.
 
     ``spark.sql.codegen.cache.maxEntries`` is 2048, not Spark's 100, so a
     repeated workload finds its generated classes still compiled. The cache
@@ -79,16 +103,6 @@ def default_spark_session(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # reference dialect parity (Calcite/ANSI, reference planner): a
-        # double-quoted token is an IDENTIFIER, not a string literal —
-        # `SELECT "from" FROM "select"` works for keyword-laden names.
-        # This also makes the dialect layer's single-quote-only literal
-        # masks exactly right for what Spark now treats as string data.
-        "spark.sql.ansi.doubleQuotedIdentifiers": "true",
-        # read TIMESTAMP(NANOS) parquet as long; sources/location.py
-        # restores them to timestamps losslessly
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Janino-compiled classes are cached in one JVM-wide LRU, 100
         # entries by default. The 16 relational statements of a
         # sql_analytics pass need ~200 classes and the 63 bench.HEADLINE
@@ -97,6 +111,7 @@ def default_spark_session(
         # for one-shot classes (1600 of them: +5 MB metaspace).
         "spark.sql.codegen.cache.maxEntries": "2048",
     }
+    defaults.update(SESSION_CONTRACT)
     if shuffle_partitions is not None:
         defaults["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     defaults.update(conf)
@@ -145,22 +160,18 @@ class Context:
         c.create_table("lineitem", "/data/lineitem.parquet")
         df = c.sql("SELECT l_returnflag, sum(l_quantity) FROM lineitem GROUP BY 1")
         df.show()
+
+    Whatever session it is given, the Context sets ``SESSION_CONTRACT`` on
+    it: the UTC session timezone, double-quoted identifiers (as in the
+    reference's Calcite dialect, so string literals take single quotes)
+    and nano-timestamps read as longs. The engine's results and its
+    dialect layer assume all three.
     """
 
     def __init__(self, spark: SparkSession | None = None, **session_conf: str):
         self.spark = spark or default_spark_session(**session_conf)
-        # dynamic confs the engine depends on even when the session was
-        # built outside default_spark_session: nano-timestamp parquet
-        # inputs, and a pinned UTC session timezone (timestamps must
-        # collect identically regardless of host timezone)
-        for key, value in (
-            ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-            ("spark.sql.session.timeZone", "UTC"),
-        ):
-            try:
-                self.spark.conf.set(key, value)
-            except Exception:
-                pass
+        for key, value in SESSION_CONTRACT.items():
+            self.spark.conf.set(key, value)
         self.schemas: dict[str, SchemaContainer] = {
             DEFAULT_SCHEMA_NAME: SchemaContainer(DEFAULT_SCHEMA_NAME)
         }

@@ -267,6 +267,33 @@ def parse_kwargs(body: str) -> dict:
     return out
 
 
+def _create_with_as(
+    m: re.Match, sql: str, kind: str, registry: dict
+) -> tuple[str, str, str] | None:
+    """The head shared by ``CREATE [OR REPLACE] MODEL|EXPERIMENT [IF NOT
+    EXISTS] <name> WITH (...) AS <select>``, matched by ``m`` up to the
+    opening paren. ``kind`` ("Model" or "Experiment") names the statement
+    in errors; ``registry`` holds the names it already has. Returns
+    ``(name, with_body, select)``, or None when IF NOT EXISTS finds the
+    name registered."""
+    replace, if_not_exists, name = m.groups()
+    split = _split_balanced(sql, m.end() - 1)
+    if split is None:
+        raise ValueError(
+            f"CREATE {kind.upper()}: unbalanced parentheses in WITH (...)"
+        )
+    body, rest = split
+    rest_m = re.match(r"\s*AS\s+(.*)$", rest, _FLAGS)
+    if rest_m is None:
+        raise ValueError(f"CREATE {kind.upper()} requires `AS <select>`")
+    name = _unquote(name)
+    if name in registry and if_not_exists:
+        return None
+    if name in registry and not replace:
+        raise RuntimeError(f"{kind} {name} already exists")
+    return name, body, rest_m.group(1)
+
+
 class _SpanMatch:
     """re.Match-alike whose groups slice the ORIGINAL text using the span
     of a match made on the literal-masked twin (same length)."""
@@ -681,8 +708,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     m = _SHOW_SCHEMAS.match(sql)
     if m:
         catalog, like_q, like_u = m.group(1), m.group(2), m.group(3)
-        catalog_name = getattr(context, "catalog_name", "dask_sql_spark")
-        if catalog and _unquote(catalog) != catalog_name:
+        if catalog and _unquote(catalog) != context.catalog_name:
             raise RuntimeError(
                 f"A catalog with the name {_unquote(catalog)} is not present."
             )
@@ -703,7 +729,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         # leading catalog part must name the context's catalog
         if "." in schema:
             catalog, schema = schema.split(".", 1)
-            if catalog != getattr(context, "catalog_name", "dask_sql_spark"):
+            if catalog != context.catalog_name:
                 raise RuntimeError(
                     f"A catalog with the name {catalog} is not present."
                 )
@@ -771,21 +797,11 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     if m:
         from dask_sql_spark.ml.model import create_model
 
-        replace, if_not_exists, name = m.groups()
-        split = _split_balanced(sql, m.end() - 1)
-        if split is None:
-            raise ValueError("CREATE MODEL: unbalanced parentheses in WITH (...)")
-        body, rest = split
-        rest_m = re.match(r"\s*AS\s+(.*)$", rest, _FLAGS)
-        if rest_m is None:
-            raise ValueError("CREATE MODEL requires `AS <select>`")
-        select = rest_m.group(1)
-        name = _unquote(name)
-        schema = context.schemas[context.schema_name]
-        if name in schema.models and if_not_exists:
+        models = context.schemas[context.schema_name].models
+        head = _create_with_as(m, sql, "Model", models)
+        if head is None:
             return context._empty_result()
-        if name in schema.models and not replace:
-            raise RuntimeError(f"Model {name} already exists")
+        name, body, select = head
         create_model(context, name, parse_kwargs(body), select)
         return context._empty_result()
 
@@ -861,24 +877,13 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     if m:
         from dask_sql_spark.ml.experiment import create_experiment
 
-        replace, if_not_exists, name = m.groups()
-        split = _split_balanced(sql, m.end() - 1)
-        if split is None:
-            raise ValueError(
-                "CREATE EXPERIMENT: unbalanced parentheses in WITH (...)"
-            )
-        body, rest = split
-        rest_m = re.match(r"\s*AS\s+(.*)$", rest, _FLAGS)
-        if rest_m is None:
-            raise ValueError("CREATE EXPERIMENT requires `AS <select>`")
-        name = _unquote(name)
-        schema = context.schemas[context.schema_name]
-        if name in schema.experiments and if_not_exists:
+        experiments = context.schemas[context.schema_name].experiments
+        head = _create_with_as(m, sql, "Experiment", experiments)
+        if head is None:
             return context._empty_result()
-        if name in schema.experiments and not replace:
-            raise RuntimeError(f"Experiment {name} already exists")
+        name, body, select = head
         results = create_experiment(
-            context, name, parse_kwargs(body), rest_m.group(1)
+            context, name, parse_kwargs(body), select
         ).astype(str)
         fields = [T.StructField(str(c), T.StringType()) for c in results.columns]
         return local_frame(

@@ -156,15 +156,14 @@ class _QueryState:
         self.row_iter: Any = None  # over collect() or toLocalIterator()
         self.page: list | None = None  # next page, pre-pulled
         self.created = time.monotonic()
-        self.finished_at: float | None = None  # set once terminal state polled
         self.lock = threading.Lock()  # serializes page pulls per query
 
 
 class SQLServer:
     """HTTP server speaking the Presto protocol over a Context."""
 
-    # finished states evicted after final poll; this TTL sweeps states the
-    # client abandoned without polling to completion
+    # a state is evicted when its terminal status is answered; this TTL
+    # sweeps states the client abandoned without polling to completion
     STATE_TTL_SECONDS = 300.0
     # how long a status GET waits on an unfinished query before it answers
     # RUNNING (the Presto protocol's default maxWait)
@@ -221,31 +220,32 @@ class SQLServer:
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     def submit(self, sql: str) -> str:
-        self._sweep()
         qid = str(uuidlib.uuid4())
         state = _QueryState()
         with self._queries_lock:
             self.queries[qid] = state
+        self._sweep()  # after registering, so the cap counts this state
         state.future = self.pool.submit(self._execute, qid, sql)
         return qid
 
     def _sweep(self) -> None:
-        """Evict abandoned states (TTL) and cap the registry size (oldest
-        finished first, then oldest overall)."""
+        """Evict states older than ``STATE_TTL_SECONDS``, then cap the
+        registry at ``MAX_QUERY_STATES`` by evicting in submission order."""
         now = time.monotonic()
         with self._queries_lock:
             for qid, st in list(self.queries.items()):
-                if st.finished_at is not None:
-                    if now - st.finished_at >= 1.0:  # grace for in-flight poll
-                        self.queries.pop(qid, None)
-                elif now - st.created > self.STATE_TTL_SECONDS:
+                if now - st.created > self.STATE_TTL_SECONDS:
                     self.queries.pop(qid, None)
             while len(self.queries) > self.MAX_QUERY_STATES:
                 self.queries.pop(next(iter(self.queries)), None)
 
-    def _evict(self, qid: str) -> None:
+    def _finish(self, qid: str, payload: dict, state: str) -> tuple[int, dict]:
+        """The query's terminal status response: its state is evicted, since
+        a client polls no further after it."""
+        payload["stats"] = {"state": state}
         with self._queries_lock:
             self.queries.pop(qid, None)
+        return 200, payload
 
     def status_payload(self, qid: str, base_url: str) -> tuple[int, dict]:
         """The query's next status response. On an unfinished query it
@@ -261,10 +261,7 @@ class SQLServer:
         }
         wait([state.future], timeout=self.POLL_WAIT_SECONDS)
         if state.cancelled:
-            payload["stats"] = {"state": "CANCELED"}
-            state.finished_at = time.monotonic()
-            self._evict(qid)
-            return 200, payload
+            return self._finish(qid, payload, "CANCELED")
         if not state.future.done():
             payload["nextUri"] = f"{base_url}/v1/status/{qid}"
             payload["stats"] = {"state": "RUNNING"}
@@ -275,10 +272,7 @@ class SQLServer:
                 "message": str(exc),
                 "errorType": type(exc).__name__,
             }
-            payload["stats"] = {"state": "FAILED"}
-            state.finished_at = time.monotonic()
-            self._evict(qid)
-            return 200, payload
+            return self._finish(qid, payload, "FAILED")
         with state.lock:
             page = state.page if state.page is not None else []
             # pre-pull the NEXT page (on a pool thread, under the job
@@ -289,24 +283,15 @@ class SQLServer:
                 ).result()
             except Exception as e:  # cancelled mid-iteration
                 if state.cancelled:
-                    payload["stats"] = {"state": "CANCELED"}
-                    state.finished_at = time.monotonic()
-                    self._evict(qid)
-                    return 200, payload
+                    return self._finish(qid, payload, "CANCELED")
                 payload["error"] = {"message": str(e), "errorType": type(e).__name__}
-                payload["stats"] = {"state": "FAILED"}
-                state.finished_at = time.monotonic()
-                self._evict(qid)
-                return 200, payload
+                return self._finish(qid, payload, "FAILED")
             payload["columns"] = state.columns
             payload["data"] = [[_json_value(v) for v in row] for row in page]
-            if state.page:
-                payload["nextUri"] = f"{base_url}/v1/status/{qid}"
-                payload["stats"] = {"state": "RUNNING"}
-            else:
-                payload["stats"] = {"state": "FINISHED"}
-                state.finished_at = time.monotonic()
-                self._evict(qid)
+            if not state.page:
+                return self._finish(qid, payload, "FINISHED")
+            payload["nextUri"] = f"{base_url}/v1/status/{qid}"
+            payload["stats"] = {"state": "RUNNING"}
         return 200, payload
 
     def cancel(self, qid: str) -> bool:

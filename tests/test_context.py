@@ -430,3 +430,32 @@ def test_create_table_unsupported_object_clear_error(context):
 
     with pytest.raises(ValueError, match="Unsupported input type 'object'"):
         context.create_table("bad", object())
+
+
+def test_context_pins_session_contract(spark):
+    """A session that drifted from the engine's confs is pinned back by
+    Context: the timezone, double-quoted identifiers and nano timestamps
+    read back at their contract values, and a double-quoted name is a
+    column, not the string 'a'."""
+    from dask_sql_spark import Context
+
+    contract = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.ansi.doubleQuotedIdentifiers": "true",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }
+    before = {k: spark.conf.get(k) for k in contract}
+    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "false")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    c = None
+    try:
+        c = Context(spark=spark)
+        assert {k: spark.conf.get(k) for k in contract} == contract
+        c.create_table("contract_t", pd.DataFrame({"a": ["x", "y"]}))
+        rows = c.sql('SELECT "a" FROM contract_t ORDER BY 1').collect()
+        assert [r[0] for r in rows] == ["x", "y"]
+    finally:
+        if c is not None and c._table_exists("contract_t"):
+            c.drop_table("contract_t")
+        for k, v in before.items():
+            spark.conf.set(k, v)

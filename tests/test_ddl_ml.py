@@ -881,3 +881,24 @@ def test_dml_sequence_matches_pandas_model(context):
             context.drop_table("dml_fuzz")
 
     check()
+
+
+@pytest.mark.parametrize("kind", ["Model", "Experiment"])
+def test_create_model_experiment_head_guards(context, kind):
+    """CREATE MODEL and CREATE EXPERIMENT share their head: each error
+    names its own statement, and the exists guards act on that
+    statement's registry before anything is trained."""
+    word = kind.upper()
+    with pytest.raises(ValueError, match=f"CREATE {word}: unbalanced"):
+        context.sql(f"CREATE {word} g WITH (a = 1 AS SELECT 1")
+    with pytest.raises(ValueError, match=f"CREATE {word} requires `AS"):
+        context.sql(f"CREATE {word} g WITH (a = 1) SELECT 1")
+    registry = getattr(context.schemas[context.schema_name], f"{kind.lower()}s")
+    registry["dup_g"] = (None, [])
+    try:
+        with pytest.raises(RuntimeError, match=f"{kind} dup_g already exists"):
+            context.sql(f"CREATE {word} dup_g WITH (a = 1) AS SELECT 1")
+        context.sql(f"CREATE {word} IF NOT EXISTS dup_g WITH (a = 1) AS SELECT 1")
+        assert registry["dup_g"] == (None, [])
+    finally:
+        registry.pop("dup_g", None)

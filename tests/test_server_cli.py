@@ -497,3 +497,34 @@ def test_cli_display_is_driver_bounded(context):
         assert " 0" in out.splitlines()[1]
     finally:
         context.drop_table("cli_big")
+
+
+@pytest.fixture
+def unstarted_server(context):
+    """A server whose registry the test drives through ``submit`` alone;
+    no HTTP listener is started."""
+    from dask_sql_spark.server.app import SQLServer
+
+    s = SQLServer(context, host="127.0.0.1", port=0)
+    yield s
+    s.pool.shutdown(wait=True)
+
+
+def test_sweep_evicts_states_past_ttl(unstarted_server):
+    s = unstarted_server
+    old = s.submit("SELECT 1 AS one")
+    s.queries[old].future.result()
+    s.queries[old].created -= s.STATE_TTL_SECONDS + 1
+    new = s.submit("SELECT 2 AS two")
+    assert old not in s.queries
+    assert new in s.queries
+
+
+def test_sweep_caps_registry_in_submission_order(unstarted_server):
+    s = unstarted_server
+    s.MAX_QUERY_STATES = 2
+    first = s.submit("SELECT 1 AS one")
+    s.submit("SELECT 2 AS two")
+    s.submit("SELECT 3 AS three")
+    assert len(s.queries) == 2
+    assert first not in s.queries

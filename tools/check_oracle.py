@@ -3,11 +3,15 @@ entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare
 row-count + (column-name-sorted) values, exact for non-floats and
 exact-or-1e-9-relative for floats. Usage:
 
-    python tools/check_oracle.py [name_filter ...]
+    python tools/check_oracle.py [--hash] [--bitwise] [name_filter ...]
+
+``run_gate`` is the gate loop; tools/hostile_check.py runs it too.
 """
 
 from __future__ import annotations
 
+import gc
+import os
 import sys
 import time
 import traceback
@@ -16,9 +20,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import os
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -114,6 +118,97 @@ def value_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def run_gate(spark, sf_dir, filters, hash_mode=False, bitwise=False, excluded=()):
+    """Run every ``queries()`` entry whose name contains one of the
+    ``filters`` strings (all entries when empty) on ``spark``, and its
+    oracle on DuckDB over the same ``sf_dir``; skip names in ``excluded``.
+    Print one line per query and a summary, and return the exit code (1 if
+    any query failed). ``hash_mode`` prints both engines' ``value_hash``;
+    ``bitwise`` fails a query whose hashes differ even when ``compare``
+    passes."""
+    import __spark_entry__ as entrymod
+
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):  # Spark-written dataset: glob the parts
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    n_pass = n_rows_only = n_skip = 0
+    failures: list[str] = []
+    n_run = 0
+    for name, fn in qs.items():
+        if filters and not any(f in name for f in filters):
+            continue
+        if name in excluded:
+            n_skip += 1
+            print(f"skip  {name}: CHECK_EXCLUDE")
+            continue
+        # long single-session sweeps age badly: localCheckpoint RDD
+        # blocks stay pinned until BOTH the Python ref dies AND Spark's
+        # ContextCleaner sees the JVM ref collected — a 290-query run
+        # accumulated enough to turn an ~80s sf1 gate into 835s. Drop
+        # Python-side garbage every few queries so the cleaner can run.
+        n_run += 1
+        if n_run % 10 == 0:
+            gc.collect()
+        t0 = time.time()
+        try:
+            sdf = fn(spark, sf_dir).toPandas()
+        except Exception:
+            failures.append(name)
+            print(f"FAIL  {name}: SPARK ERROR\n{traceback.format_exc()}")
+            continue
+        t_spark = time.time() - t0
+        if name not in oracles:
+            n_rows_only += 1
+            print(f"rows  {name}: {len(sdf)} rows ({t_spark:.1f}s) [no oracle]")
+            continue
+        t1 = time.time()
+        try:
+            odf = con.execute(oracles[name]).df()
+        except Exception:
+            failures.append(name)
+            print(f"FAIL  {name}: DUCKDB ERROR\n{traceback.format_exc()}")
+            continue
+        t_oracle = time.time() - t1
+        if hash_mode or bitwise:
+            hs, ho = value_hash(sdf), value_hash(odf)
+            tag = "==" if hs == ho else "!="
+            if hash_mode:
+                print(f"hash  {name}: spark={hs[:16]} {tag} duckdb={ho[:16]}")
+        diff = compare(sdf, odf)
+        if bitwise and not diff and hs != ho:
+            diff = (
+                f"BITWISE hash mismatch spark={hs[:16]} != duckdb={ho[:16]} "
+                "(tolerant compare passed — a float column differs in the "
+                "last ulp; the driver would record this red)"
+            )
+        if diff:
+            failures.append(name)
+            print(
+                f"FAIL  {name}: {diff}  ({len(sdf)} rows, "
+                f"spark {t_spark:.1f}s + oracle {t_oracle:.1f}s)"
+            )
+        else:
+            n_pass += 1
+            print(
+                f"pass  {name}: {len(sdf)} rows "
+                f"(spark {t_spark:.1f}s + oracle {t_oracle:.1f}s)"
+            )
+    print(
+        f"\n== {n_pass} pass, {len(failures)} fail, {n_rows_only} rows-only, "
+        f"{n_skip} excluded =="
+    )
+    if failures:
+        print("failures:", " ".join(failures))
+    return 1 if failures else 0
+
+
 def main() -> int:
     args = sys.argv[1:]
     hash_mode = "--hash" in args
@@ -125,7 +220,6 @@ def main() -> int:
     # keeps a float/double column.
     bitwise = "--bitwise" in args
     filters = [a for a in args if a not in ("--hash", "--bitwise")]
-    import __spark_entry__ as entrymod
     from dask_sql_spark.context import default_spark_session
 
     if hash_mode:
@@ -147,21 +241,10 @@ def main() -> int:
             "spark.driver.maxResultSize": os.environ.get(
                 "CHECK_MAX_RESULT", "1g"
             ),
+            # Python workers (UDFs) import the package from any cwd
+            "spark.executorEnv.PYTHONPATH": ROOT,
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{SF_DIR}/{t}.parquet"
-        if os.path.isdir(path):  # Spark-written dataset: glob the parts
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rows_only = n_skip = 0
-    failures: list[str] = []
-    n_run = 0
     # CHECK_EXCLUDE: comma-separated exact names to skip — for sf1
     # sweeps where a handful of closure-style ORACLES (recursive-CTE
     # transitive reach, all-pairs levenshtein) are super-linear in
@@ -169,77 +252,7 @@ def main() -> int:
     excluded = {
         n for n in os.environ.get("CHECK_EXCLUDE", "").split(",") if n
     }
-    for name, fn in qs.items():
-        if filters and not any(f in name for f in filters):
-            continue
-        if name in excluded:
-            n_skip += 1
-            print(f"skip  {name}: CHECK_EXCLUDE")
-            continue
-        # long single-session sweeps age badly: localCheckpoint RDD
-        # blocks stay pinned until BOTH the Python ref dies AND Spark's
-        # ContextCleaner sees the JVM ref collected — a 290-query run
-        # accumulated enough to turn an ~80s sf1 gate into 835s. Drop
-        # Python-side garbage every few queries so the cleaner can run.
-        n_run += 1
-        if n_run % 10 == 0:
-            import gc
-
-            gc.collect()
-        t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR).toPandas()
-        except Exception:
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name}: SPARK ERROR\n{traceback.format_exc()}")
-            continue
-        t_spark = time.time() - t0
-        if name not in oracles:
-            n_rows_only += 1
-            print(f"rows  {name}: {len(sdf)} rows ({t_spark:.1f}s) [no oracle]")
-            continue
-        t1 = time.time()
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception:
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name}: DUCKDB ERROR\n{traceback.format_exc()}")
-            continue
-        t_oracle = time.time() - t1
-        if hash_mode or bitwise:
-            hs, ho = value_hash(sdf), value_hash(odf)
-            tag = "==" if hs == ho else "!="
-            if hash_mode:
-                print(f"hash  {name}: spark={hs[:16]} {tag} duckdb={ho[:16]}")
-        diff = compare(sdf, odf)
-        if bitwise and not diff and hs != ho:
-            diff = (
-                f"BITWISE hash mismatch spark={hs[:16]} != duckdb={ho[:16]} "
-                "(tolerant compare passed — a float column differs in the "
-                "last ulp; the driver would record this red)"
-            )
-        if diff:
-            n_fail += 1
-            failures.append(name)
-            print(
-                f"FAIL  {name}: {diff}  ({len(sdf)} rows, "
-                f"spark {t_spark:.1f}s + oracle {t_oracle:.1f}s)"
-            )
-        else:
-            n_pass += 1
-            print(
-                f"pass  {name}: {len(sdf)} rows "
-                f"(spark {t_spark:.1f}s + oracle {t_oracle:.1f}s)"
-            )
-    print(
-        f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only, "
-        f"{n_skip} excluded =="
-    )
-    if failures:
-        print("failures:", " ".join(failures))
-    return 1 if n_fail else 0
+    return run_gate(spark, SF_DIR, filters, hash_mode, bitwise, excluded)
 
 
 if __name__ == "__main__":

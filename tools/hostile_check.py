@@ -1,30 +1,27 @@
-"""Driver-hostility replica: run the correctness gate the way a hostile
-driver would — a PLAIN SparkSession (no Context defaults) with a nasty
-half-hour-offset session timezone — to flush out hidden assumptions
-about spark.sql.session.timeZone pinning or Context-applied configs.
+"""Driver-hostility replica: check_oracle's gate loop (``run_gate``, bitwise)
+on a PLAIN SparkSession, built without default_spark_session's confs and
+with a half-hour-offset timezone. The queries' Context pins
+``SESSION_CONTRACT`` (UTC, double-quoted identifiers, nano-timestamps as
+longs) on it, so the leg checks that the pin holds and that results do not
+depend on the performance defaults, partition count or execution path.
 
 Usage:
     python tools/hostile_check.py [name_filter ...]
 Env:
-    HOSTILE_TZ       (default Asia/Kolkata)
+    HOSTILE_TZ       timezone the session is built with (default
+                     Asia/Kolkata); Context must replace it with UTC
     SF_DIR           (default /root/testdata/sf0.01)
     HOSTILE_PARTS    shuffle partition count (default 16 — pick odd to
                      shake out combine-order dependence)
     HOSTILE_CODEGEN  "false" disables whole-stage codegen: results must
                      be bitwise identical on the interpreted path too
-                     (round-10 verdict #4 — the TZ/partition axes catch
-                     environment dependence, this catches
-                     execution-path dependence)
     HOSTILE_AQE      "false" disables adaptive query execution
 """
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -32,13 +29,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    from tools.check_oracle import ROOT, SF_DIR, run_gate
+
     tz = os.environ.get("HOSTILE_TZ", "Asia/Kolkata")
-    sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-    # HOSTILE_PARTS shakes out partitioning-order dependence: a gate
-    # whose value changes with the shuffle partition count (i.e. with
-    # float combine order) is a latent driver red — every reduction is
-    # supposed to be integer-exact or ROUND-masked, so any odd count
-    # must produce bitwise-identical results
+    # a gate whose value changes with the shuffle partition count (i.e.
+    # with float combine order) is a latent driver red: every reduction
+    # is integer-exact or ROUND-masked, so any count must give
+    # bitwise-identical results
     parts = os.environ.get("HOSTILE_PARTS", "16")
     codegen = os.environ.get("HOSTILE_CODEGEN", "true")
     aqe = os.environ.get("HOSTILE_AQE", "true")
@@ -47,75 +44,14 @@ def main() -> int:
         .appName("hostile_check")
         .config("spark.sql.shuffle.partitions", parts)
         .config("spark.sql.session.timeZone", tz)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.wholeStage", codegen)
         .config("spark.sql.adaptive.enabled", aqe)
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
         .getOrCreate()
     )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    spec = importlib.util.spec_from_file_location(
-        "co", os.path.join(os.path.dirname(__file__), "check_oracle.py")
-    )
-    co = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(co)
-
-    import __spark_entry__ as entrymod
-
-    con = duckdb.connect()
-    for t in co.TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):  # Spark-written dataset: glob the parts
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
-    filters = sys.argv[1:]
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
-    failures = []
-    n_run = 0
-    for name, fn in qs.items():
-        if filters and not any(f in name for f in filters):
-            continue
-        n_run += 1
-        if n_run % 10 == 0:  # see check_oracle.py: let ContextCleaner run
-            import gc
-
-            gc.collect()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-            if name not in oracles:
-                n_rows_only += 1
-                print(f"rows-only  {name}: {len(sdf)} rows")
-                continue
-            odf = con.execute(oracles[name]).df()
-            msg = co.compare(sdf, odf)
-            if msg is None:
-                # driver-style raw hash: catches equal-but-differently-
-                # serialized values compare() can't (e.g. a partition-
-                # order-dependent sum landing on -0.0 on one engine and
-                # 0.0 on the other — == passes, repr() differs)
-                hs, ho = co.value_hash(sdf), co.value_hash(odf)
-                if hs != ho:
-                    msg = (
-                        f"BITWISE hash mismatch spark={hs[:16]} != "
-                        f"duckdb={ho[:16]} (tolerant compare passed)"
-                    )
-            if msg is None:
-                n_pass += 1
-                print(f"pass  {name}")
-            else:
-                n_fail += 1
-                failures.append(name)
-                print(f"FAIL  {name}: {msg}")
-        except Exception as ex:  # noqa: BLE001
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name}: {str(ex).splitlines()[0][:160]}")
-    print(f"\n== TZ={tz}: {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
-    if failures:
-        print("failures:", ", ".join(failures))
-    return 1 if failures else 0
+    print(f"hostile session: TZ={tz} partitions={parts} "
+          f"codegen={codegen} aqe={aqe}")
+    return run_gate(spark, SF_DIR, sys.argv[1:], bitwise=True)
 
 
 if __name__ == "__main__":
