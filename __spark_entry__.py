@@ -9708,11 +9708,12 @@ _REATTEST = [
     "dedup_ngram_jaccard",
     "dedup_containment",
     "dedup_fuzzy_levenshtein",
-    # r12 advice: connected_components contraction budget floored at 16
-    # rounds (tight caller budgets no longer starve the rescue phase),
-    # exhaustion warning names the attempt, and the star-contraction
-    # convergence probe is one symmetric-difference action per round.
-    # Banding graphs never reach the switch — plans byte-identical —
+    # connected_components is one loop: each round's aggregate carries
+    # the vertex's previous label, so one max(comp <> prev) action is the
+    # convergence probe for every id type, and rounds past the eighth
+    # hook and pointer-jump labels in place of the deleted
+    # large-star/small-star contraction and its switch_after hand-off.
+    # Banding graphs converge in 2-4 rounds and never reach the jump;
     # both CC consumers re-attest as the edited file's representatives.
     "dedup_components_minhash",
     "dedup_keeper_quality",

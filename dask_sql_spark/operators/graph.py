@@ -8,84 +8,23 @@ expressed as DataFrame ops:
 
     label(v) ← min(label(v), min over neighbors' labels)   until fixpoint
 
-Each iteration is ONE shuffle (join + groupBy-min); convergence takes
-O(graph diameter) iterations — near-dup graphs are shallow (clusters are
-cliques or near-cliques from banding), so 3-5 iterations typically
-suffice. Lineage is cut with localCheckpoint every few rounds so plans
-don't grow unboundedly — the standard Spark iterative-algorithm shape.
+Each iteration is ONE shuffle (join + groupBy-min); near-dup graphs are
+shallow (clusters are cliques or near-cliques from banding), so 2-4
+iterations typically suffice; deep graphs add a hook and a pointer jump
+to every round past the eighth. Lineage is cut with localCheckpoint
+every round so plans don't grow unboundedly — the standard Spark
+iterative-algorithm shape.
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _two_phase_components(
-    und: DataFrame, verts: DataFrame, max_rounds: int
-) -> DataFrame | None:
-    """Alternating large-star / small-star edge contraction (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14): the
-    pointer-jumping family — O(log n) rounds regardless of graph
-    diameter, where min-label propagation needs O(diameter) rounds.
-
-    ``und`` is the symmetric, distinct, NULL-free edge relation
-    :func:`connected_components` already builds. Each round:
-
-    - large-star: every neighbor v > u re-hooks to m(u) = min(Γ(u)∪{u})
-    - small-star: every edge oriented to its larger endpoint; each of
-      that endpoint's smaller neighbors (and the endpoint itself)
-      re-hooks to the smallest
-
-    Both preserve connectivity and strictly contract toward the
-    component-minimum star; at the fixpoint every non-minimum vertex
-    carries exactly one edge to its component minimum. ~5 shuffles per
-    round vs propagation's 1, so it only wins past the diameter
-    threshold — which is exactly when :func:`connected_components`
-    auto-selects it. Returns None if ``max_rounds`` is exhausted
-    (caller warns, mirroring the propagation cap)."""
-    # lazy: materialized by the first round's convergence probe — the
-    # symmetric, distinct und relation is already a checkpointed RDD, so
-    # this truncation costs no extra driver action of its own
-    E = und.where(F.col("a") > F.col("b")).localCheckpoint(eager=False)
-    for _ in range(max_rounds):
-        # --- large-star ---
-        S = E.union(
-            E.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        m = S.groupBy("a").agg(F.min("b").alias("mb"))
-        m = m.select("a", F.least(F.col("a"), F.col("mb")).alias("m"))
-        e1 = (
-            S.where(F.col("b") > F.col("a"))
-            .join(m, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-        # --- small-star (e1 is canonical a > b already) ---
-        m2 = e1.groupBy("a").agg(F.min("b").alias("m"))
-        e2 = (
-            e1.join(m2, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .union(m2.select("a", F.col("m").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # both sides are distinct canonical sets, so set equality is an
-        # empty symmetric difference — ONE action per round (previously
-        # two counts + an exceptAll probe; r11 verdict #7). The lazy
-        # checkpoint above is materialized by THIS probe, so the round
-        # stays a single driver action (r12)
-        converged = e2.exceptAll(E).union(E.exceptAll(e2)).isEmpty()
-        E = e2
-        if converged:
-            # fixpoint: E is the star set — one (vertex, component-min)
-            # edge per non-minimum vertex
-            stars = E.select(F.col("a").alias("id"), F.col("b").alias("comp"))
-            return verts.join(stars, "id", "left").select(
-                "id", F.coalesce("comp", F.col("id")).alias("comp")
-            )
-    return None
+# propagation-only rounds; every later round also hooks and jumps labels
+_JUMP_AFTER = 8
 
 
 def connected_components(
@@ -93,29 +32,24 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 25,
-    switch_after: int = 8,
 ) -> DataFrame:
     """(id, component) for every vertex in ``edges``; component = the
     minimum vertex id reachable through undirected edges.
 
-    Converges early when an iteration changes no label (an action per
-    iteration — the documented driver-side loop of distributed steps, like
-    spark.ml's own iterative fitters; no vertex data ever hits the
-    driver). Min-label propagation needs O(component diameter)
-    iterations. A graph still unconverged after ``switch_after``
-    propagation rounds has a deep diameter — not the shallow banding
-    shape this operator is tuned for — so the work is handed to
-    :func:`_two_phase_components` (alternating large-star/small-star
-    contraction, the pointer-jumping family), which finishes in O(log n)
-    rounds regardless of diameter, with a budget of
-    ``max(max_iterations - switch_after, 16)`` rounds — floored so a
-    tight caller budget cannot starve the rescue phase (contraction
-    halves depth per round; 16 rounds cover any practically reachable
-    depth). Results are identical either way
-    (component = min reachable id); only the round count differs. If
-    BOTH budgets exhaust, a ``RuntimeWarning`` is raised (round-9 audit:
-    a 40-node path graph under the default 25-iteration cap previously
-    returned wrong labels silently).
+    Each round is one join + groupBy: every vertex takes the min label
+    over itself and its neighbors, and the same aggregate carries its
+    label from before the round (off its self-loop row). One full
+    aggregate, ``max(comp <> prev)``, is the convergence probe for every
+    id type: a driver action per round, no vertex data on the driver.
+    Propagation alone needs O(diameter) rounds, so rounds after
+    ``_JUMP_AFTER`` also hook (the vertex whose id is a label takes the
+    min that label's carriers saw) and jump (``comp ← comp(comp)``), the
+    Shiloach-Vishkin hooking + shortcutting: deep components converge in
+    O(log D) more rounds (200,000-node paths: 21 rounds with shuffled
+    ids, 24 with ids in path order). ``max_iterations`` bounds every
+    round; when it runs out first a ``RuntimeWarning`` is raised
+    (round-9 audit: a 40-node path graph under a 25-iteration cap
+    previously returned wrong labels silently).
     Edges with a NULL endpoint are dropped entirely up front — the
     non-NULL endpoint does not surface as an isolated vertex unless
     another edge mentions it, and NULL itself is never a vertex.
@@ -127,8 +61,7 @@ def connected_components(
     :func:`dedup_clusters` coalesces ids absent from the components to
     themselves, so downstream keeper assignment stays total either way.
 
-    Shape notes, all three measured (sf0.1 minhash graph, ~2s → ~0.35s
-    per iteration):
+    Shape notes (sf0.1 minhash graph, ~2s → ~0.35s per iteration):
 
     - the undirected edge relation is ``localCheckpoint``-ed — it is
       referenced through multiple lineage paths (vertices, self-loops,
@@ -138,16 +71,10 @@ def connected_components(
       iteration, which dominates wall time for shallow graphs;
     - self-loops fold the "own label vs neighbor min" LEAST into the one
       groupBy-min, so each iteration is a SINGLE join + aggregate;
-    - every iteration's labels are ``localCheckpoint``-ed, keeping the
-      per-iteration plan O(1)-sized instead of one join deeper each
-      round, and min-label propagation only ever DECREASES labels, so
-      for exact-numeric vertex ids (integral/decimal) the fixpoint test
-      is one DECIMAL(38,0)-exact sum over the cached frame (no join
-      against the previous labels). Non-exact id types (strings, floats)
-      can't use the sum test — under ANSI the decimal cast of a string
-      id throws, and distinct float labels can alias to one integer —
-      so they fall back to a changed-label join against the previous
-      (checkpointed) labels, the classic convergence test.
+    - every iteration's labels are lazily ``localCheckpoint``-ed, keeping
+      the per-iteration plan O(1)-sized instead of one join deeper each
+      round; the probe is the action that materializes every partition
+      of that checkpoint, so a round costs one driver action.
     """
     # filter on the INPUT frame, before the a/b aliasing select — after
     # the rename, F.col(src) on a caller whose src column is itself
@@ -157,118 +84,61 @@ def connected_components(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
     ).select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        und.union(und.selectExpr("b AS a", "a AS b"))
         .distinct()
         # lazy: iteration 1's convergence probe is the materializing
-        # action; every later reference (verts, self-loops, contraction)
-        # shares the one checkpointed RDD exactly as with eager=True
+        # action; every later reference (verts, self-loops) shares the
+        # one checkpointed RDD exactly as with eager=True
         .localCheckpoint(eager=False)
     )
-    verts = und.select(F.col("a").alias("id")).distinct()
-    e = und.union(
-        verts.select(F.col("id").alias("a"), F.col("id").alias("b"))
-    )
+    verts = und.selectExpr("a AS id").distinct()
+    e = und.union(verts.selectExpr("id AS a", "id AS b"))
 
-    # labels start as the identity (comp = id); the frame itself is never
-    # materialized — iteration 1 fuses the identity join away (min over
-    # Γ(a)∪{a} of b IS groupBy(a).min(b) on the self-looped edge set), so
-    # the old eager identity checkpoint was a pure extra driver action
+    # labels start as the identity (comp = id), fused into iteration 1:
+    # min over Γ(a)∪{a} of b IS groupBy(a).min(b) on the self-looped edges
     labels = None
-
-    from pyspark.sql import types as T
-
-    comp_type = verts.schema["id"].dataType
-    # DECIMAL(p, s>0) ids would be ROUNDED by the decimal(38,0) cast below
-    # (2.4→2, 1.6→2), letting distinct label states alias to one sum —
-    # only scale-0 decimals are exact under the sum test.
-    sum_safe = isinstance(
-        comp_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ) or (isinstance(comp_type, T.DecimalType) and comp_type.scale == 0)
-    prev_sum = None
-    converged = False
-    tried_contraction = False
     for it in range(max_iterations):
         if labels is None:
-            nl = e.groupBy(F.col("a").alias("id")).agg(
-                F.min("b").alias("comp")
-            )
+            joined = e.selectExpr("a", "b", "b AS comp")
         else:
-            nl = (
-                e.join(labels.select(F.col("id").alias("b"), "comp"), "b")
-                .groupBy(F.col("a").alias("id"))
-                .agg(F.min("comp").alias("comp"))
-            )
-        # LAZY checkpoint: the convergence probe below is the action that
-        # materializes it, so each iteration costs ONE driver round trip
-        # (the old eager checkpoint + separate probe cost two; measured
-        # r12, ~8 scheduler jobs per iteration at bench scale)
-        new_labels = nl.localCheckpoint(eager=False)
-        if sum_safe:
-            label_sum = new_labels.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-            converged = label_sum == prev_sum
-            prev_sum = label_sum
-        elif labels is None:
-            converged = (
-                new_labels.where(F.col("comp") != F.col("id"))
-                .limit(1)
-                .count()
-                == 0
-            )
-        else:
-            converged = (
-                new_labels.join(
-                    labels.select("id", F.col("comp").alias("__prev")), "id"
-                )
-                .where(F.col("comp") != F.col("__prev"))
-                .limit(1)
-                .count()
-                == 0
-            )
-        labels = new_labels
-        if converged:
-            break
-        if it + 1 >= switch_after and max_iterations > switch_after:
-            # still moving after switch_after rounds: the graph's
-            # diameter exceeds the propagation sweet spot — hand off to
-            # the log-round star contraction, which finishes a D-diameter
-            # component in O(log D)-ish rounds instead of D-switch_after
-            # more label sweeps. The contraction budget is floored at 16
-            # rounds INDEPENDENTLY of the leftover propagation budget:
-            # contraction halves depth per round, so 16 covers any graph
-            # this operator could otherwise finish, and a tight caller
-            # budget (e.g. max_iterations=10, switch_after=8) must not
-            # starve the phase that exists to rescue exactly that case —
-            # the old 2-round remainder returned non-fixpoint labels
-            # where pure propagation would have converged (r11 advice).
-            tried_contraction = True
-            alt = _two_phase_components(
-                und, verts, max(max_iterations - switch_after, 16)
-            )
-            if alt is not None:
-                return alt
-            break  # both budgets exhausted → warn below
-    if not converged:
-        import warnings
-
-        extra = (
-            " (large-star/small-star contraction was attempted after "
-            f"{switch_after} propagation rounds and also exhausted its "
-            "budget)"
-            if tried_contraction
-            else ""
+            joined = e.join(labels.selectExpr("id AS b", "comp"), "b")
+        nl = joined.groupBy(F.expr("a AS id")).agg(
+            F.expr("min(comp) AS comp"),
+            F.expr("max(CASE WHEN a = b THEN comp END) AS prev"),
         )
+        if it >= _JUMP_AFTER:
+            # hook: a label's owner (the vertex whose id it is) also takes
+            # the min any vertex carrying that label saw, then jump:
+            # comp ← comp(comp). Jumping alone only shortens chains that
+            # already lead to the minimum — on a path with shuffled ids
+            # the minimum still crept one hop per round (a 1000-node
+            # path: 253 rounds; with the hook, 16)
+            nl = nl.union(
+                nl.selectExpr("prev AS id", "comp", "NULL AS prev")
+            ).groupBy("id").agg(
+                F.expr("min(comp) AS comp"), F.expr("max(prev) AS prev")
+            )
+            nl = nl.join(
+                nl.selectExpr("id AS comp", "comp AS root"), "comp"
+            ).selectExpr("id", "root AS comp", "prev")
+        # LAZY checkpoint: the probe below materializes it, so each
+        # iteration costs ONE driver round trip
+        labels = nl.localCheckpoint(eager=False)
+        probe = labels.selectExpr("max(CAST(comp <> prev AS INT))")
+        moved = probe.collect()[0][0]
+        if not moved:  # 0, or NULL on an empty graph
+            break
+    else:
         warnings.warn(
             f"connected_components did not converge within "
-            f"{max_iterations} iterations{extra}; labels may not be the "
+            f"{max_iterations} iterations; labels may not be the "
             f"component minimum — raise max_iterations (graph diameter "
             f"exceeds the cap)",
             RuntimeWarning,
             stacklevel=2,
         )
     if labels is None:  # max_iterations == 0: identity labels, warned above
-        return verts.withColumn("comp", F.col("id")).select("id", "comp")
+        return verts.selectExpr("id", "id AS comp")
     return labels.select("id", "comp")
 
 
@@ -341,7 +211,7 @@ def pagerank(
     uniformly. Per iteration: contributions flow src→dst through one join
     + one groupBy-sum (both shuffles on node id), the dangling-mass scalar
     rides as a broadcast 1-row cross join — no driver-side state. Lineage
-    is cut with localCheckpoint every few rounds (same discipline as
+    is cut with localCheckpoint every round (same discipline as
     :func:`connected_components`). Output: (node, rank) summing to ~1.
     """
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0)

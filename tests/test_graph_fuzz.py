@@ -209,30 +209,41 @@ def test_pagerank_mass_and_model(spark, seed):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-def test_two_phase_components_vs_union_find(spark, seed):
-    """Round-11 (r10 verdict #7): the star-contraction variant must
-    agree with the union-find model on the same seeded random graphs as
-    the propagation path — forced through the switch with
-    switch_after=1."""
+def test_path_tail_components_vs_union_find(spark, seed):
+    """Seeded random graphs with a 60-node path tail whose high-id end
+    is joined to vertex 0, so labels still move after the
+    propagation-only rounds and the hook-and-jump rounds run (jumping
+    alone leaves the tail one hop per round and warns at the cap);
+    checked against the union-find model with long ids and with string
+    ids, plus an isolated self-loop vertex."""
     from dask_sql_spark.operators.graph import connected_components
 
     rng = random.Random(seed + 100)
     es = _rand_edges(rng, n_nodes=40, n_edges=45)
+    es += [(1000 + i, 1000 + i + 1) for i in range(59)] + [(0, 1059)]
+    es += [(2000, 2000)]
     df = spark.createDataFrame(
         pd.DataFrame(es, columns=["id_a", "id_b"]), "id_a long, id_b long"
     )
     got = {
-        r["id"]: r["comp"]
-        for r in connected_components(df, switch_after=1).collect()
+        r["id"]: r["comp"] for r in connected_components(df).collect()
     }
     assert got == _union_find(es)
+
+    # zero-padded so string order is numeric order; "v" keeps them strings
+    ses = [(f"v{a:04d}", f"v{b:04d}") for a, b in es]
+    sdf = spark.createDataFrame(ses, "id_a string, id_b string")
+    got = {
+        r["id"]: r["comp"] for r in connected_components(sdf).collect()
+    }
+    assert got == _union_find(ses)
+    assert got["v2000"] == "v2000"
 
 
 def test_deep_path_auto_switches_and_converges(spark):
     """A 120-node path (diameter 119) under the DEFAULT cap: propagation
-    alone would blow the 25-iteration budget and warn; the auto-switch
-    hands it to star contraction, which must return the true components
-    with no warning."""
+    alone would blow the 25-iteration budget and warn; the hook-and-jump
+    rounds must return the true components with no warning."""
     import warnings
 
     from dask_sql_spark.operators.graph import connected_components
@@ -250,21 +261,48 @@ def test_deep_path_auto_switches_and_converges(spark):
     assert got == {i: 0 for i in range(120)}
 
 
-def test_two_phase_string_ids_and_isolated_selfloop(spark):
-    """The contraction path orders by the id type's own comparison —
-    string ids and self-loop-only (isolated) vertices must match the
-    propagation path exactly."""
+def test_deep_path_converges_within_13_rounds(spark):
+    """A 120-node path (diameter 119): propagation alone needs 119
+    rounds; 8 propagation rounds then hook-and-jump rounds (label
+    displacement 8 → 18 → 38 → 78 → all 0, one round to confirm) finish
+    it in 13 with no warning."""
+    import warnings
+
     from dask_sql_spark.operators.graph import connected_components
 
-    rows = [("b", "a"), ("c", "b"), ("e", "d"), ("z", "z")]
-    df = spark.createDataFrame(rows, "id_a string, id_b string")
-    want = {
-        r["id"]: r["comp"] for r in connected_components(df).collect()
-    }
-    got = {
-        r["id"]: r["comp"]
-        for r in connected_components(df, switch_after=1).collect()
-    }
-    assert got == want == {
-        "a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "z": "z",
-    }
+    es = [(i, i + 1) for i in range(119)]
+    df = spark.createDataFrame(
+        pd.DataFrame(es, columns=["id_a", "id_b"]), "id_a long, id_b long"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = {
+            r["id"]: r["comp"]
+            for r in connected_components(df, max_iterations=13).collect()
+        }
+    assert not any(w.category is RuntimeWarning for w in caught)
+    assert got == {i: 0 for i in range(120)}
+
+
+def test_shuffled_path_converges_under_default_cap(spark):
+    """A 1000-node path whose ids are shuffled along it: label chains do
+    not lead to the minimum, so jumping alone moves it about one hop per
+    round (hundreds of rounds); hooking each label's owner to the min
+    its carriers saw converges inside the default 25-round cap."""
+    import warnings
+
+    from dask_sql_spark.operators.graph import connected_components
+
+    p = list(range(1000))
+    random.Random(7).shuffle(p)
+    es = [(p[i], p[i + 1]) for i in range(999)]
+    df = spark.createDataFrame(
+        pd.DataFrame(es, columns=["id_a", "id_b"]), "id_a long, id_b long"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = {
+            r["id"]: r["comp"] for r in connected_components(df).collect()
+        }
+    assert not any(w.category is RuntimeWarning for w in caught)
+    assert got == {i: 0 for i in range(1000)}

@@ -2479,7 +2479,7 @@ def test_connected_components_long_path(spark):
     """Round-5 regression guard for the localCheckpoint LP loop: a
     diameter-9 path needs several propagation rounds (the shallow
     handcrafted graph above converges in 2) — exercises the truncated
-    per-iteration lineage and the monotonic label-sum fixpoint test."""
+    per-iteration lineage and the changed-label fixpoint probe."""
     from dask_sql_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -2539,7 +2539,8 @@ def test_repetition_signals_handcrafted(spark):
 
 # ----------------- round-5 review-fix regressions ----------------- #
 def test_connected_components_string_ids(spark):
-    """Non-numeric vertex ids use the changed-label join fixpoint (the
+    """Non-numeric vertex ids: the convergence probe compares each
+    vertex's label with its previous one, so it needs no numeric cast (a
     decimal-sum test would throw under ANSI on a string cast, or falsely
     converge on floats). Chain with diameter 3 so a single propagation
     step is provably not enough."""
@@ -2556,11 +2557,12 @@ def test_connected_components_string_ids(spark):
 
 
 def test_connected_components_decimal_scale_ids(spark):
-    """DECIMAL(p, s>0) ids must NOT take the decimal(38,0)-sum fixpoint:
-    the cast ROUNDS (2.4→2, 1.6→2), so distinct label states can alias
-    to one sum and falsely converge. This chain is built so that after
-    one propagation step the rounded label sum equals the converged
-    sum — only the changed-label join detects the difference."""
+    """DECIMAL(p, s>0) ids must not be probed by a decimal(38,0) label
+    sum: the cast ROUNDS (2.4→2, 1.6→2), so distinct label states can
+    alias to one sum and falsely converge. This chain is built so that
+    after one propagation step the rounded label sum equals the
+    converged sum — only a per-vertex changed-label probe detects the
+    difference."""
     from decimal import Decimal
 
     from dask_sql_spark.operators.graph import connected_components

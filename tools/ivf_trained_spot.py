@@ -29,7 +29,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -50,6 +51,8 @@ def main() -> int:
         **{
             "spark.driver.memory": mem,
             "spark.driver.maxResultSize": "4g",
+            # Python workers (UDFs) import the package from any cwd
+            "spark.executorEnv.PYTHONPATH": ROOT,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -44,7 +44,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from perfbench.layers import SparkRest, Tracer  # noqa: E402
 
@@ -191,6 +192,8 @@ def main() -> None:
         **{
             "spark.driver.memory": mem,
             "spark.cleaner.periodicGC.interval": "60s",
+            # Python workers (UDFs) import the package from any cwd
+            "spark.executorEnv.PYTHONPATH": ROOT,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
