@@ -17,9 +17,6 @@ package supplies the capability shim around it:
   has no streaming, SURVEY.md §2.10).
 """
 
-from dask_sql_spark.context import Context
-from dask_sql_spark.datacontainer import Aggregation, Statistics
-
 __version__ = "0.1.0"
 
 __all__ = [
@@ -31,17 +28,23 @@ __all__ = [
     "__version__",
 ]
 
+# name -> defining module. Imported on first access (PEP 562), so `import
+# dask_sql_spark` stays light: the Python worker daemon (``daemon``) runs
+# inside this package and must not load pandas or the Context with it. The
+# reference exports cmd_loop and run_server at package level too
+# (dask_sql/__init__.py:10-13).
+_LAZY = {
+    "Context": "dask_sql_spark.context",
+    "Aggregation": "dask_sql_spark.datacontainer",
+    "Statistics": "dask_sql_spark.datacontainer",
+    "cmd_loop": "dask_sql_spark.cmd",
+    "run_server": "dask_sql_spark.server.app",
+}
+
 
 def __getattr__(name: str):
-    # reference __init__.py exports cmd_loop and run_server at package
-    # level (dask_sql/__init__.py:10-13); import lazily so `import
-    # dask_sql_spark` stays light for query-only users
-    if name == "cmd_loop":
-        from dask_sql_spark.cmd import cmd_loop
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
 
-        return cmd_loop
-    if name == "run_server":
-        from dask_sql_spark.server.app import run_server
-
-        return run_server
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(_LAZY[name]), name)

@@ -90,6 +90,14 @@ def default_spark_session(
     repeated workload finds its generated classes still compiled. The cache
     is static and JVM-wide: the size takes effect only when this function
     builds the process's first session.
+
+    On a ``local`` master the Python workers run from the engine's daemon
+    (``spark.python.daemon.module``, see ``dask_sql_spark.daemon``), which
+    spares every task a re-read of Spark's zip archives, and the package's
+    parent directory goes first on ``spark.executorEnv.PYTHONPATH``, ahead
+    of any entries passed in ``conf``, so workers import the package from
+    any cwd. Both are static confs too: a session built elsewhere first
+    keeps Spark's own daemon.
     """
     import os
 
@@ -114,6 +122,13 @@ def default_spark_session(
     defaults.update(SESSION_CONTRACT)
     if shuffle_partitions is not None:
         defaults["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if (master or os.environ.get("SPARK_MASTER") or "local").startswith("local"):
+        defaults["spark.python.daemon.module"] = "dask_sql_spark.daemon"
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        given = conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            dict.fromkeys(p for p in [root, *given] if p)
+        )
     defaults.update(conf)
     for k, v in defaults.items():
         builder = builder.config(k, v)
@@ -338,10 +353,10 @@ class Context:
             spark_f = F.udf(f, spark_return)
         else:
             spark_f = F.pandas_udf(f, spark_return)
-        # registered under original, lower, and upper case like the
-        # reference (context.py:973-982)
-        for variant in {name, name.lower(), name.upper()}:
-            self.spark.udf.register(variant, spark_f)
+        # Spark resolves function names case-insensitively: one
+        # registration answers every case (the reference registers
+        # original, lower and upper case, context.py:973-982)
+        self.spark.udf.register(name, spark_f)
         schema.functions[lower] = UDFInfo(name, f, parameters, return_type, row_udf)
 
     def register_aggregation(
@@ -368,8 +383,7 @@ class Context:
         series_fn = f.as_series_fn() if isinstance(f, Aggregation) else f
         spark_return = python_to_spark_type(return_type)
         agg_udf = F.pandas_udf(series_fn, spark_return, F.PandasUDFType.GROUPED_AGG)
-        for variant in {name, name.lower(), name.upper()}:
-            self.spark.udf.register(variant, agg_udf)
+        self.spark.udf.register(name, agg_udf)
         schema.functions[name.lower()] = UDFInfo(
             name, series_fn, parameters, return_type, aggregation=True
         )
@@ -395,8 +409,7 @@ class Context:
         if lower in schema.functions and not replace:
             raise ValueError(f"Function {name} already registered; pass replace=True")
         wrapped = spark_udtf(cls, returnType=return_type) if return_type else spark_udtf(cls)
-        for variant in {name, name.lower(), name.upper()}:
-            self.spark.udtf.register(variant, wrapped)
+        self.spark.udtf.register(name, wrapped)
         schema.functions[lower] = UDFInfo(name, cls, [], return_type)
 
     def register_model(

@@ -2,9 +2,10 @@
 
 Parity target: the reference's FastAPI app (server/app.py:19-280,
 server/responses.py:1-149): ``POST /v1/statement`` executes SQL and
-returns Presto-format JSON; async queries poll ``GET /v1/status/{uuid}``
-and cancel via ``DELETE /v1/cancel/{uuid}``; a JDBC shim answers the
-``system.jdbc`` metadata queries.
+returns Presto-format JSON; a query not finished in the POST's response
+polls ``GET /v1/status/{uuid}`` and cancels via ``DELETE
+/v1/cancel/{uuid}``; a JDBC shim answers the ``system.jdbc`` metadata
+queries.
 
 FastAPI is not available in this environment, so the app is built on the
 stdlib ``ThreadingHTTPServer`` — same endpoints, same response shapes, no
@@ -29,15 +30,19 @@ materializes the full result set of a large query;
 ``spark.driver.maxResultSize`` is the backstop for an estimate that is
 badly low. Either way pages are pulled through the same iterator.
 
-``GET /v1/status/{uuid}`` long-polls: on an unfinished query it waits up
-to ``SQLServer.POLL_WAIT_SECONDS`` (1 s, the Presto protocol's default
-``maxWait``) for the query to finish before it answers RUNNING, so a short
-query's first page comes back on the first GET. Every Spark job a query
-triggers runs under a job group named by the query id, so DELETE
-/v1/cancel/{uuid} interrupts running stages via ``cancelJobGroup`` (not
-just a flag), and a GET waiting on that query answers CANCELED.
-Finished/failed/canceled query states are evicted after their final
-status poll (plus a TTL sweep), so ``queries`` stays bounded.
+The POST and every ``GET /v1/status/{uuid}`` long-poll: on an unfinished
+query they wait up to ``SQLServer.POLL_WAIT_SECONDS`` (1 s, the Presto
+protocol's default ``maxWait``) for the query to finish before they answer
+RUNNING with a ``nextUri``. So a short statement (DDL, SHOW, a point
+lookup) comes back FINISHED with its first page in the POST's own
+response and needs no poll at all; a POST can block for up to that wait.
+Every Spark job a query triggers runs under a job group named by the query
+id, so DELETE /v1/cancel/{uuid} interrupts running stages via
+``cancelJobGroup`` (not just a flag), and a GET waiting on that query
+answers CANCELED.
+Finished/failed/canceled query states are evicted once their final
+status is answered, by the POST or a GET (plus a TTL sweep), so
+``queries`` stays bounded.
 """
 
 from __future__ import annotations
@@ -329,6 +334,12 @@ class SQLServer:
                 return f"http://{self.headers.get('Host', f'{server.host}:{server.port}')}"
 
             def do_POST(self):
+                """Submit the statement and answer with its first status:
+                the same long-poll as a status GET. A statement that ends
+                within ``POLL_WAIT_SECONDS`` comes back in this response,
+                FINISHED with its first page (or FAILED); a longer one
+                comes back RUNNING with a ``nextUri`` after at most that
+                wait."""
                 if self.path.rstrip("/") != "/v1/statement":
                     return self._reply(404, {"error": {"message": "not found"}})
                 length = int(self.headers.get("Content-Length", 0))
@@ -345,16 +356,8 @@ class SQLServer:
                         400, {"error": {"message": "empty statement"}}
                     )
                 qid = server.submit(sql)
-                # mirror the reference: return a pollable handle immediately
-                self._reply(
-                    200,
-                    {
-                        "id": qid,
-                        "infoUri": f"{self._base}/v1/status/{qid}",
-                        "nextUri": f"{self._base}/v1/status/{qid}",
-                        "stats": {"state": "QUEUED"},
-                    },
-                )
+                code, payload = server.status_payload(qid, self._base)
+                self._reply(code, payload)
 
             def do_GET(self):
                 if self.path.startswith("/v1/status/"):

@@ -27,8 +27,10 @@ def test_udf_case_insensitive_names(context):
     )
     rows = context.sql("SELECT TRIPLEIT(a) AS t FROM df_simple").collect()
     assert sorted(r.t for r in rows) == [3, 6, 9]
-    rows = context.sql("SELECT tripleit(a) AS t FROM df_simple").collect()
-    assert len(rows) == 3
+    for spelling in ("tripleit", "tRiPlEiT"):
+        rows = context.sql(f"SELECT {spelling}(a) AS t FROM df_simple").collect()
+        assert len(rows) == 3
+    _one_registration(context, "TripleIt")
 
 
 def test_row_udf(context):
@@ -64,6 +66,13 @@ def test_duplicate_registration_raises(context):
     context.register_function(f1, "dupe_f", [("x", np.int64)], np.int64, replace=True)
     with pytest.raises(ValueError):
         context.register_function(f2, "dupe_f", [("x", np.int64)], np.int64)
+
+
+def _one_registration(context, name: str) -> None:
+    """Spark resolves function names case-insensitively: one registration
+    answers every spelling and lists once, in lower case."""
+    listed = [f.name for f in context.spark.catalog.listFunctions()]
+    assert listed.count(name.lower()) == 1
 
 
 def test_aggregation_triphase(context):
@@ -117,3 +126,26 @@ def test_udtf(context):
     assert [(r.word, r.pos) for r in rows] == [
         ("alpha", 0), ("beta", 1), ("gamma", 2)
     ]
+
+
+def test_aggregation_mixed_case_registered_once(context):
+    context.register_aggregation(
+        lambda s: float(s.sum()), "Mixed_Sum", [("x", np.float64)], np.float64,
+        replace=True,
+    )
+    for spelling in ("mixed_sum", "MIXED_SUM", "mIxEd_SuM"):
+        row = context.sql(f"SELECT {spelling}(a) AS s FROM df_simple").collect()[0]
+        assert row.s == 6.0
+    _one_registration(context, "Mixed_Sum")
+
+
+def test_udtf_mixed_case_registered_once(context):
+    class Repeat:
+        def eval(self, word: str, n: int):
+            for i in range(n):
+                yield word, i
+
+    context.register_udtf(Repeat, "Mixed_Repeat", "w string, i int", replace=True)
+    for spelling in ("mixed_repeat", "MIXED_REPEAT", "mIxEd_RePeAt"):
+        rows = context.sql(f"SELECT w, i FROM {spelling}('ab', 2)").collect()
+        assert [(r.w, r.i) for r in rows] == [("ab", 0), ("ab", 1)]

@@ -90,8 +90,14 @@ def _delete(server, qid: str) -> int:
         return resp.status
 
 
+_SLEEP_3S = "SELECT reflect('java.lang.Thread', 'sleep', 3000L) AS z"
+
+
 def test_cancel(server):
-    first = _post(server, "SELECT COUNT(*) AS n FROM df")
+    """A statement still running when its POST returns is cancelled by a
+    DELETE: the next status GET answers CANCELED."""
+    first = _post(server, _SLEEP_3S)
+    assert first["stats"]["state"] == "RUNNING"
     assert _delete(server, first["id"]) == 200
     payload = _poll(first)
     assert payload["stats"]["state"] == "CANCELED"
@@ -133,16 +139,31 @@ def test_cancel_during_long_poll(server):
     assert got["elapsed"] < SQLServer.POLL_WAIT_SECONDS + 0.5
 
 
-def test_one_page_select_finishes_on_first_get(server):
-    """The first status GET waits for a short query, so a one-page result
-    arrives FINISHED after the POST plus one GET."""
+def test_one_page_select_finishes_on_the_post(server):
+    """The POST waits for a short query, so a one-page result arrives
+    FINISHED in the POST's own response, and its state is evicted."""
     _poll(_post(server, "SELECT 5 AS five"))  # warm
-    first = _post(server, "SELECT 5 AS five")
-    with urllib.request.urlopen(first["nextUri"]) as resp:
-        payload = _read_json(resp)
+    payload = _post(server, "SELECT 5 AS five")
     assert payload["stats"]["state"] == "FINISHED"
     assert payload["data"] == [[5]]
     assert "nextUri" not in payload
+    assert payload["id"] not in server.queries
+
+
+def test_long_query_post_returns_running(server):
+    """A query that outlasts the long-poll gets RUNNING and a nextUri from
+    its POST within the wait bound, and finishes on a later GET."""
+    from dask_sql_spark.server.app import SQLServer
+
+    t0 = time.monotonic()
+    first = _post(server, _SLEEP_3S)
+    elapsed = time.monotonic() - t0
+    assert first["stats"]["state"] == "RUNNING"
+    assert "nextUri" in first
+    assert elapsed < SQLServer.POLL_WAIT_SECONDS + 0.5
+    payload = _poll(first)
+    assert payload["stats"]["state"] == "FINISHED"
+    assert len(payload["data"]) == 1
 
 
 def test_jdbc_metadata(server):

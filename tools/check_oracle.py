@@ -241,8 +241,6 @@ def main() -> int:
             "spark.driver.maxResultSize": os.environ.get(
                 "CHECK_MAX_RESULT", "1g"
             ),
-            # Python workers (UDFs) import the package from any cwd
-            "spark.executorEnv.PYTHONPATH": ROOT,
         },
     )
     # CHECK_EXCLUDE: comma-separated exact names to skip — for sf1

@@ -4,6 +4,9 @@ with a half-hour-offset timezone. The queries' Context pins
 ``SESSION_CONTRACT`` (UTC, double-quoted identifiers, nano-timestamps as
 longs) on it, so the leg checks that the pin holds and that results do not
 depend on the performance defaults, partition count or execution path.
+Its Python workers run from Spark's own ``pyspark.daemon``, not the
+engine's, so it is also the control leg for ``dask_sql_spark.daemon``; the
+session puts the checkout on the workers' path itself.
 
 Usage:
     python tools/hostile_check.py [name_filter ...]

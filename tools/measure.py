@@ -192,8 +192,6 @@ def main() -> None:
         **{
             "spark.driver.memory": mem,
             "spark.cleaner.periodicGC.interval": "60s",
-            # Python workers (UDFs) import the package from any cwd
-            "spark.executorEnv.PYTHONPATH": ROOT,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -49,8 +49,6 @@ def main() -> int:
         **{
             "spark.driver.memory": mem,
             "spark.driver.maxResultSize": "4g",
-            # Python workers (UDFs) import the package from any cwd
-            "spark.executorEnv.PYTHONPATH": ROOT,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
