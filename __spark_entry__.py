@@ -9312,7 +9312,7 @@ def _persist_flag_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx.create_table(
         "gate_persist_t", _table(spark, sf_dir, "nation"), persist=True
     )
-    stored = ctx.schemas[ctx.schema_name].tables["gate_persist_t"]
+    stored = ctx._get_table("gate_persist_t")
     lvl = stored.storageLevel
     res = ctx.sql(
         "SELECT COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS s "

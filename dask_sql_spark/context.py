@@ -40,6 +40,7 @@ from dask_sql_spark.datacontainer import (
     Aggregation,
     SchemaContainer,
     Statistics,
+    Table,
     UDFInfo,
 )
 from dask_sql_spark.mappings import python_to_spark_type
@@ -234,18 +235,20 @@ class Context:
         df = to_spark_dataframe(self.spark, input_table, format=format, **kwargs)
         if persist:
             df = df.cache()
-        schema = self.schemas[schema_name]
-        self._unpersist_if_cached(schema.tables.get(table_name.lower()))
-        schema.tables[table_name.lower()] = df
+        tables = self.schemas[schema_name].tables
+        old = tables.get(table_name.lower())
+        record = Table(df, statistics=statistics)
+        if old is not None:
+            # the replaced frame's cache is released; only OPTIMIZE's
+            # superseded-location ledger outlives a re-registration
+            self._unpersist_if_cached(old.df)
+            record.superseded = old.superseded
         if isinstance(input_table, str):
-            schema.filepaths[table_name.lower()] = input_table
             from dask_sql_spark.sources.location import _infer_format
 
-            schema.fileformats[table_name.lower()] = (
-                format or _infer_format(input_table)
-            ).lower()
-        if statistics:
-            schema.statistics[table_name.lower()] = statistics
+            record.location = input_table
+            record.format = (format or _infer_format(input_table)).lower()
+        tables[table_name.lower()] = record
         df.createOrReplaceTempView(self._view_name(table_name, schema_name))
 
     @staticmethod
@@ -261,12 +264,9 @@ class Context:
 
     def drop_table(self, table_name: str, schema_name: str | None = None) -> None:
         schema_name = schema_name or self.schema_name
-        self._unpersist_if_cached(
-            self.schemas[schema_name].tables.get(table_name.lower())
-        )
-        self.schemas[schema_name].tables.pop(table_name.lower(), None)
-        self.schemas[schema_name].filepaths.pop(table_name.lower(), None)
-        self.schemas[schema_name].fileformats.pop(table_name.lower(), None)
+        record = self.schemas[schema_name].tables.pop(table_name.lower(), None)
+        if record is not None:
+            self._unpersist_if_cached(record.df)
         self.spark.catalog.dropTempView(self._view_name(table_name, schema_name))
 
     def create_schema(self, schema_name: str) -> None:
@@ -279,11 +279,11 @@ class Context:
         if schema_name == self.schema_name:
             self.schema_name = DEFAULT_SCHEMA_NAME
         schema = self.schemas.pop(schema_name)
-        for t in list(schema.tables):
+        for t, record in schema.tables.items():
             # release executor cache like drop_table does — dropping a
             # schema full of persisted tables used to leak their storage
             # memory (round-10 audit)
-            self._unpersist_if_cached(schema.tables.get(t))
+            self._unpersist_if_cached(record.df)
             self.spark.catalog.dropTempView(self._view_name(t, schema_name))
         if DEFAULT_SCHEMA_NAME not in self.schemas:
             # the default schema always exists (dropping it empties it)
@@ -296,16 +296,19 @@ class Context:
             return table_name.lower()
         return f"{schema_name}__{table_name.lower()}"
 
-    def _table_exists(self, name: str) -> bool:
+    def _resolve(self, name: str) -> tuple[str, str, Table | None]:
+        """(schema, key, record) for a possibly-qualified table name; the
+        record is None when no table is registered under it."""
         schema_name, table = self._split_qualified(name)
-        return table.lower() in self.schemas.get(schema_name, SchemaContainer("")).tables
+        schema = self.schemas.get(schema_name)
+        key = table.lower()
+        return schema_name, key, schema.tables.get(key) if schema else None
 
     def _get_table(self, name: str) -> DataFrame:
-        schema_name, table = self._split_qualified(name)
-        try:
-            return self.schemas[schema_name].tables[table.lower()]
-        except KeyError:
-            raise RuntimeError(f"Table {name} does not exist") from None
+        record = self._resolve(name)[2]
+        if record is None:
+            raise RuntimeError(f"Table {name} does not exist")
+        return record.df
 
     def _split_qualified(self, name: str) -> tuple[str, str]:
         if "." in name:
@@ -456,8 +459,8 @@ class Context:
         if self.schema_name == old_schema_name:
             self.schema_name = new_schema_name
         # temp views carry the schema prefix — re-register under the new one
-        for t, df in schema.tables.items():
-            df.createOrReplaceTempView(self._view_name(t, new_schema_name))
+        for t, record in schema.tables.items():
+            record.df.createOrReplaceTempView(self._view_name(t, new_schema_name))
             self.spark.catalog.dropTempView(
                 self._view_name(t, old_schema_name)
             )
@@ -468,46 +471,22 @@ class Context:
         new_table_name: str,
         schema_name: str | None = None,
     ) -> None:
-        """Rename a table by MOVING its registry entries (reference
-        context.py:599-613 / alter.py:14-86).
-
-        A move, not create-new+drop-old: the old shape unpersisted the
-        shared cached frame out from under the new name and silently
-        dropped the table's filepath/format/statistics entries, so
-        OPTIMIZE after a rename no longer knew the file location
-        (round-10 audit)."""
+        """Rename a table by moving its record (reference context.py:599-613
+        / alter.py:14-86): the frame keeps its cache, and OPTIMIZE and
+        VACUUM keep the location and ledger under the new name."""
         schema_name = schema_name or self.schema_name
-        qualified = f"{schema_name}.{old_table_name}"
-        if not self._table_exists(qualified):
+        tables = self.schemas[schema_name].tables
+        lower_old, lower_new = old_table_name.lower(), new_table_name.lower()
+        if lower_old not in tables:
             raise RuntimeError(f"Table {old_table_name} does not exist")
-        schema = self.schemas[schema_name]
-        lower_old = old_table_name.lower()
-        lower_new = new_table_name.lower()
-        df = schema.tables[lower_old]
-        if lower_new != lower_old:
-            # displacing a live table: release its cache AND clear its
-            # registry entries — otherwise a source table with no
-            # filepath entry would leave the displaced table's stale
-            # location under the new name, so OPTIMIZE after the rename
-            # would compact the WRONG files (round-10 advisor). A
-            # case-only rename (Foo -> FOO) displaces nothing and must
-            # not unpersist its own frame (round-10 advisor).
-            self._unpersist_if_cached(schema.tables.get(lower_new))
-            for reg in (
-                schema.filepaths,
-                schema.fileformats,
-                schema.statistics,
-            ):
-                reg.pop(lower_new, None)
-        schema.tables[lower_new] = schema.tables.pop(lower_old)
-        for reg in (
-            schema.filepaths,
-            schema.fileformats,
-            schema.statistics,
-        ):
-            if lower_old in reg:
-                reg[lower_new] = reg.pop(lower_old)
-        df.createOrReplaceTempView(self._view_name(new_table_name, schema_name))
+        record = tables.pop(lower_old)
+        displaced = tables.get(lower_new)
+        if displaced is not None:
+            self._unpersist_if_cached(displaced.df)
+        tables[lower_new] = record
+        record.df.createOrReplaceTempView(
+            self._view_name(new_table_name, schema_name)
+        )
         if lower_new != lower_old:
             self.spark.catalog.dropTempView(
                 self._view_name(old_table_name, schema_name)

@@ -1,11 +1,7 @@
-"""Registries backing the Context API.
-
-The reference wraps every table in a DataContainer/ColumnContainer pair to
-track SQL-name→backend-name column mappings (datacontainer.py:14-231). Spark
-tracks logical column identity inside Catalyst, so no wrapper is needed —
-what remains is the *schema namespace* object (reference SchemaContainer,
-datacontainer.py:281-291): a named registry of tables, functions, models,
-experiments and statistics.
+"""Registries backing the Context API: the schema namespace object
+``SchemaContainer``. The reference also wraps every table in a
+DataContainer/ColumnContainer pair to track SQL-name→backend-name column
+mappings (datacontainer.py:14-231); Spark tracks column identity in Catalyst.
 """
 
 from __future__ import annotations
@@ -16,9 +12,8 @@ from typing import Any, Callable
 
 @dataclass
 class Statistics:
-    """Table statistics; row count only, mirroring the reference
-    (datacontainer.py:174-188). Spark CBO stats are richer — this object is
-    only the user-facing API carrier."""
+    """Table statistics: the row count, as in the reference
+    (datacontainer.py:174-188); only the user-facing API carrier."""
 
     row_count: float | None = None
 
@@ -32,12 +27,10 @@ class Aggregation:
     - ``agg``: combines chunk results (pandas Series of chunk outputs → scalar)
     - ``finalize``: optional final transform (scalar → scalar)
 
-    Spark note: PySpark's GROUPED_AGG pandas UDF offers no partial/merge
-    hook, so when this is registered we execute chunk over the whole group's
-    series and then agg over the single result — semantically equivalent for
-    any decomposable aggregation, but without tree reduction. At 100 TB a
-    Scala ``Aggregator`` would be the fast path; the groupBy shuffle still
-    distributes by key, so per-group work is bounded by group size.
+    PySpark's GROUPED_AGG pandas UDF has no partial/merge hook, so chunk
+    runs over the whole group's series and agg over its one result: the same
+    answer for any decomposable aggregation, without tree reduction (a Scala
+    ``Aggregator`` would add it); per-group work is bounded by group size.
     """
 
     name: str
@@ -70,18 +63,24 @@ class UDFInfo:
 
 
 @dataclass
+class Table:
+    """A registered table. ``location``/``format`` are set only when it was
+    read from a location string; ``superseded`` lists what VACUUM deletes."""
+
+    df: Any
+    location: str | None = None
+    format: str | None = None
+    statistics: Statistics | None = None
+    superseded: list[str] = field(default_factory=list)
+
+
+@dataclass
 class SchemaContainer:
-    """One SQL schema namespace (reference datacontainer.py:281-291)."""
+    """One SQL schema namespace (reference datacontainer.py:281-291): one
+    ``Table`` record per table name, and functions, models and experiments."""
 
     name: str
-    tables: dict[str, Any] = field(default_factory=dict)  # name -> DataFrame
-    statistics: dict[str, Statistics] = field(default_factory=dict)
+    tables: dict[str, Table] = field(default_factory=dict)
     functions: dict[str, UDFInfo] = field(default_factory=dict)
     models: dict[str, tuple[Any, list[str]]] = field(default_factory=dict)
     experiments: dict[str, Any] = field(default_factory=dict)
-    filepaths: dict[str, str] = field(default_factory=dict)
-    # resolved source format per file-backed table (parquet/csv/json/orc…)
-    # so maintenance ops (OPTIMIZE) rewrite in the table's real format
-    fileformats: dict[str, str] = field(default_factory=dict)
-    # locations superseded by OPTIMIZE's swap-on-publish, awaiting VACUUM
-    stale_locations: dict[str, list[str]] = field(default_factory=dict)

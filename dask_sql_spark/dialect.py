@@ -99,27 +99,6 @@ def sql_similar_to_regex(pattern: str, escape: str | None = None) -> str:
     return "(?s)^(?:" + "".join(out) + ")$"
 
 
-def sql_like_to_regex(pattern: str, escape: str | None = None) -> str:
-    """Translate a SQL LIKE pattern to an anchored Java regex (used by the
-    LIKE-with-custom-escape path; plain LIKE goes straight to Spark)."""
-    out = []
-    i = 0
-    while i < len(pattern):
-        ch = pattern[i]
-        if escape and ch == escape and i + 1 < len(pattern):
-            out.append(re.escape(pattern[i + 1]))
-            i += 2
-            continue
-        if ch == "%":
-            out.append(".*")
-        elif ch == "_":
-            out.append(".")
-        else:
-            out.append(re.escape(ch))
-        i += 1
-    return "^(?:" + "".join(out) + ")$"
-
-
 # the front door's one string-literal grammar (module docstring); group 1
 # is None for an unterminated literal
 _LITERAL_RE = re.compile(r"'(?:[^']|'')*(')?")

@@ -167,3 +167,12 @@ def spark_type_to_sql_name(dt: T.DataType) -> str:
             f"{spark_type_to_sql_name(dt.valueType)}>"
         )
     return dt.simpleString().upper()
+
+
+def column_rows(schema: T.StructType) -> list[tuple[str, str, str]]:
+    """(name, SQL type name, nullable YES/NO) per field: the column listing
+    that SHOW COLUMNS and ``system.jdbc.columns`` both answer with."""
+    return [
+        (f.name, spark_type_to_sql_name(f.dataType), "YES" if f.nullable else "NO")
+        for f in schema.fields
+    ]

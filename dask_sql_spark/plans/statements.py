@@ -37,6 +37,7 @@ from dask_sql_spark.dialect import mask_literals, split_top_commas
 
 if TYPE_CHECKING:
     from dask_sql_spark.context import Context
+    from dask_sql_spark.datacontainer import Table
 
 _FLAGS = re.IGNORECASE | re.DOTALL
 
@@ -185,11 +186,17 @@ def _unquote(name: str) -> str:
     return ".".join(parts)
 
 
-def _resolve(context: "Context", name: str) -> tuple[str, str]:
-    """Split a statement's table target into (schema_name, table) so every
-    handler routes schema-qualified names to the right registry (the
-    reference resolves via plugin context; here Context._split_qualified)."""
-    return context._split_qualified(_unquote(name))
+def _lookup(
+    context: "Context", raw: str, missing_ok: bool = False
+) -> tuple[str, str, "Table | None"]:
+    """A statement's raw table name (possibly quoted and qualified) as
+    (schema_name, key, record); raises ``Table X does not exist`` when no
+    table is registered under it, unless ``missing_ok`` (record None)."""
+    name = _unquote(raw)
+    schema_name, key, record = context._resolve(name)
+    if record is None and not missing_ok:
+        raise RuntimeError(f"Table {name} does not exist")
+    return schema_name, key, record
 
 
 _PAREN_RE = re.compile(r"[()]")
@@ -338,20 +345,17 @@ def _execute_merge(context: "Context", m: re.Match) -> DataFrame:
     from pyspark.sql import functions as F
 
     target_raw, t_alias, source_raw, s_alias, cond, whens = m.groups()
-    schema_name, table = _resolve(context, target_raw)
+    schema_name, key, record = _lookup(context, target_raw)
+    target = record.df
     # unaliased names are referenced by their bare table name in ON/SET
-    t_alias = t_alias or table
-    if not s_alias:
-        s_alias = (
-            "__merge_src__"
-            if source_raw.startswith("(")
-            else _resolve(context, source_raw)[1]
-        )
-    target = context._get_table(_unquote(target_raw))
+    t_alias = t_alias or key
     if source_raw.startswith("("):
         source = context.sql(source_raw[1:-1])
+        s_alias = s_alias or "__merge_src__"
     else:
-        source = context._get_table(_unquote(source_raw))
+        _, s_key, s_record = _lookup(context, source_raw)
+        source = s_record.df
+        s_alias = s_alias or s_key
 
     update_set: str | None = None
     do_delete = False
@@ -421,7 +425,7 @@ def _execute_merge(context: "Context", m: re.Match) -> DataFrame:
                 ins_cols.append(F.expr(v).cast(f.dataType).alias(f.name))
         updated = updated.unionByName(anti.select(*ins_cols))
 
-    context.create_table(table, updated, schema_name=schema_name)
+    context.create_table(key, updated, schema_name=schema_name)
     return context._empty_result()
 
 
@@ -437,33 +441,39 @@ def _parse_assignments(set_clause: str) -> dict[str, str]:
     return out
 
 
-def _execute_delete(context: "Context", m: re.Match) -> DataFrame:
+def _execute_delete(context: "Context", m: re.Match) -> DataFrame | None:
     """DELETE FROM over a registry table: keep rows where the predicate is
     false or NULL (SQL DELETE semantics), re-register. One codegen filter
-    — no shuffle, no driver materialization."""
+    — no shuffle, no driver materialization. None (Spark's DELETE) when
+    the target is not a registry table."""
     from pyspark.sql import functions as F
 
     name_raw, where = m.groups()
-    schema_name, table = _resolve(context, name_raw)
-    df = context._get_table(_unquote(name_raw))
+    schema_name, key, record = _lookup(context, name_raw, missing_ok=True)
+    if record is None:
+        return None
+    df = record.df
     kept = (
         df.where(~F.coalesce(F.expr(where), F.lit(False)))
         if where
         else df.limit(0)
     )
-    context.create_table(table, kept, schema_name=schema_name)
+    context.create_table(key, kept, schema_name=schema_name)
     return context._empty_result()
 
 
-def _execute_update(context: "Context", m: re.Match) -> DataFrame:
+def _execute_update(context: "Context", m: re.Match) -> DataFrame | None:
     """UPDATE ... SET over a registry table: CASE-rewrite the assigned
     columns under the WHERE predicate (false/NULL rows unchanged),
-    re-register. Pure projection — no shuffle."""
+    re-register. Pure projection — no shuffle. None (Spark's UPDATE) when
+    the target is not a registry table."""
     from pyspark.sql import functions as F
 
     name_raw, set_clause, where = m.groups()
-    schema_name, table = _resolve(context, name_raw)
-    df = context._get_table(_unquote(name_raw))
+    schema_name, key, record = _lookup(context, name_raw, missing_ok=True)
+    if record is None:
+        return None
+    df = record.df
     assignments = _parse_assignments(set_clause)
     unknown = set(assignments) - {c.lower() for c in df.columns}
     if unknown:
@@ -482,7 +492,7 @@ def _execute_update(context: "Context", m: re.Match) -> DataFrame:
                 .otherwise(F.col(f.name))
                 .alias(f.name)
             )
-    context.create_table(table, df.select(*cols), schema_name=schema_name)
+    context.create_table(key, df.select(*cols), schema_name=schema_name)
     return context._empty_result()
 
 
@@ -496,12 +506,12 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     m = _CREATE_TABLE_WITH.match(sql)
     if m:
         replace, if_not_exists, name, body = m.groups()
-        name = _unquote(name)
-        schema_name, table = _resolve(context, name)
-        if not replace and not if_not_exists and context._table_exists(name):
-            raise RuntimeError(f"Table {name} already exists")
-        if if_not_exists and context._table_exists(name):
-            return context._empty_result()
+        schema_name, key, record = _lookup(context, name, missing_ok=True)
+        if record is not None:
+            if if_not_exists:
+                return context._empty_result()
+            if not replace:
+                raise RuntimeError(f"Table {_unquote(name)} already exists")
         kwargs = parse_kwargs(body)
         location = kwargs.pop("location", None)
         fmt = kwargs.pop("format", None)
@@ -509,7 +519,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         if location is None:
             raise ValueError("CREATE TABLE ... WITH requires location=...")
         context.create_table(
-            table,
+            key,
             location,
             format=fmt,
             persist=persist,
@@ -521,15 +531,12 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     m = _OPTIMIZE_TABLE.match(sql)
     if m:
         name, body = m.groups()
-        name = _unquote(name)
-        schema_name, table = _resolve(context, name)
-        if not context._table_exists(name):
-            raise RuntimeError(f"Table {name} does not exist")
-        location = context.schemas[schema_name].filepaths.get(table.lower())
+        schema_name, key, record = _lookup(context, name)
+        location, fmt = record.location, record.format
         if location is None:
             raise RuntimeError(
-                f"OPTIMIZE requires a file-backed table; {name} has no "
-                "registered location"
+                f"OPTIMIZE requires a file-backed table; {_unquote(name)} has "
+                "no registered location"
             )
         kwargs = parse_kwargs(body) if body else {}
         target = int(kwargs.pop("target_bytes", 128 * 1024 * 1024))
@@ -539,44 +546,33 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         if kwargs:
             raise ValueError(f"unknown OPTIMIZE options: {sorted(kwargs)}")
         from dask_sql_spark.operators.maintenance import compact_files
-        from dask_sql_spark.sources.location import _infer_format
 
-        # rewrite in the table's REAL format (a csv/json table must not be
-        # recompacted as parquet); nano-timestamp parquet is re-materialized
-        # with true TIMESTAMP columns inside compact_files
-        fmt = (
-            context.schemas[schema_name].fileformats.get(table.lower())
-            or _infer_format(location)
-        )
-        # write-audit-publish: compact to dest, then swap the registration;
-        # the superseded location is retained for time-travel/rollback
-        # until an explicit VACUUM reclaims it
+        # write-audit-publish: compact to dest in the table's REAL format
+        # (nano-timestamp parquet is re-materialized with true TIMESTAMP
+        # columns inside compact_files), then swap the registration; the
+        # superseded location is kept for rollback until VACUUM reclaims it
         report = compact_files(
             spark, location, dest, target_bytes=target, fmt=fmt
         )
-        context.create_table(table, dest, format=fmt, schema_name=schema_name)
-        context.schemas[schema_name].stale_locations.setdefault(
-            table.lower(), []
-        ).append(location)
+        context.create_table(
+            key, dest, format=fmt, schema_name=schema_name,
+            statistics=record.statistics,
+        )
+        context.schemas[schema_name].tables[key].superseded.append(location)
         return report
 
     m = _VACUUM_TABLE.match(sql)
     if m:
         name, body = m.groups()
-        name = _unquote(name)
-        schema_name, table = _resolve(context, name)
-        if not context._table_exists(name):
-            raise RuntimeError(f"Table {name} does not exist")
+        record = _lookup(context, name)[2]
         kwargs = parse_kwargs(body) if body else {}
         dry_run = bool(kwargs.pop("dry_run", False))
         if kwargs:
             raise ValueError(f"unknown VACUUM options: {sorted(kwargs)}")
-        schema = context.schemas[schema_name]
-        stale = schema.stale_locations.get(table.lower(), [])
-        current = schema.filepaths.get(table.lower())
+        current = record.location
         rows = []
         remaining: list[str] = []
-        for loc in stale:
+        for loc in record.superseded:
             if current and loc.rstrip("/") == current.rstrip("/"):
                 # never delete the live location, whatever the ledger says
                 remaining.append(loc)
@@ -592,7 +588,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
             deleted = bool(fs.delete(p, True))
             rows.append((loc, "deleted" if deleted else "missing", deleted))
         if not dry_run:
-            schema.stale_locations[table.lower()] = remaining
+            record.superseded = remaining
         return local_frame(
             spark,
             rows or [(None, "nothing_to_vacuum", False)],
@@ -602,31 +598,26 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     m = _CREATE_TABLE_AS.match(sql)
     if m:
         replace, kind, if_not_exists, name, select = m.groups()
-        name = _unquote(name)
-        schema_name, table = _resolve(context, name)
-        if context._table_exists(name):
+        schema_name, key, record = _lookup(context, name, missing_ok=True)
+        if record is not None:
             if if_not_exists:
                 return context._empty_result()
             if not replace:
-                raise RuntimeError(f"Table {name} already exists")
+                raise RuntimeError(f"Table {_unquote(name)} already exists")
         df = context.sql(select)
         # TABLE persists (eager cache), VIEW stays lazy
         # (reference create_memory_table.py:64-66)
         context.create_table(
-            table, df, persist=kind.upper() == "TABLE", schema_name=schema_name
+            key, df, persist=kind.upper() == "TABLE", schema_name=schema_name
         )
         return context._empty_result()
 
     m = _DROP_TABLE.match(sql)
     if m:
         if_exists, name = m.groups()
-        name = _unquote(name)
-        if not context._table_exists(name):
-            if if_exists:
-                return context._empty_result()
-            raise RuntimeError(f"Table {name} does not exist")
-        schema_name, table = _resolve(context, name)
-        context.drop_table(table, schema_name=schema_name)
+        schema_name, key, record = _lookup(context, name, missing_ok=bool(if_exists))
+        if record is not None:
+            context.drop_table(key, schema_name=schema_name)
         return context._empty_result()
 
     m = _DROP_MODEL.match(sql)
@@ -680,24 +671,23 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
     if m:
         # reference alter.py:14-86; a registry move via Context.alter_table
         if_exists, old, new = m.groups()
-        old, new = _unquote(old), _unquote(new)
-        if not context._table_exists(old):
-            if if_exists:
-                return context._empty_result()
-            raise RuntimeError(f"Table {old} does not exist")
-        old_schema, old_table = _resolve(context, old)
+        old_schema, old_key, record = _lookup(
+            context, old, missing_ok=bool(if_exists)
+        )
+        if record is None:
+            return context._empty_result()
+        new = _unquote(new)
         # unqualified new name stays in the old table's schema
-        if "." in new:
-            new_schema, new_table = _resolve(context, new)
-        else:
-            new_schema, new_table = old_schema, new
+        new_schema, new_table = (
+            context._split_qualified(new) if "." in new else (old_schema, new)
+        )
         if new_schema != old_schema:
             # as Spark's session catalog: a rename never moves databases
             raise ValueError(
-                f"ALTER TABLE {old} RENAME TO {new}: source and destination "
-                f"schemas do not match ({old_schema} vs {new_schema})"
+                f"ALTER TABLE {_unquote(old)} RENAME TO {new}: source and "
+                f"destination schemas do not match ({old_schema} vs {new_schema})"
             )
-        context.alter_table(old_table, new_table, schema_name=old_schema)
+        context.alter_table(old_key, new_table, schema_name=old_schema)
         return context._empty_result()
 
     m = _ALTER_SCHEMA.match(sql)
@@ -740,14 +730,9 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
 
     m = _SHOW_COLUMNS.match(sql)
     if m:
-        from dask_sql_spark.mappings import spark_type_to_sql_name
+        from dask_sql_spark.mappings import column_rows
 
-        name = _unquote(m.group(1))
-        df = context._get_table(name)
-        rows = [
-            (f.name, spark_type_to_sql_name(f.dataType), "YES" if f.nullable else "NO")
-            for f in df.schema.fields
-        ]
+        rows = column_rows(_lookup(context, m.group(1))[2].df.schema)
         return local_frame(
             spark, rows, "Column: string, Type: string, Nullable: string"
         )
@@ -785,7 +770,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
             spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS {native_suffix}")
             df = spark.table(name)
         else:
-            df = context._get_table(name)
+            df = _lookup(context, name)[2].df
         if cols_spec.upper().startswith("COLUMNS"):
             cols = [c.strip().strip('"').strip("`") for c in m.group(3).split(",")]
             df = df.select(*cols)
@@ -814,11 +799,11 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         return _execute_merge(context, m)
 
     m = _match_masked(_DELETE_FROM, sql)
-    if m and context._table_exists(_unquote(m.group(1))):
+    if m:
         return _execute_delete(context, m)
 
     m = _match_masked(_UPDATE_TABLE, sql)
-    if m and context._table_exists(_unquote(m.group(1))):
+    if m:
         return _execute_update(context, m)
 
     m = _INSERT_INTO.match(sql)
@@ -827,12 +812,13 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         # the registered frame and re-register (temp views are not
         # writable targets; real lakehouse tables should use
         # spark.sql INSERT on catalog tables instead)
-        name, select = _unquote(m.group(1)), m.group(2)
-        if not context._table_exists(name):
+        name, select = m.groups()
+        schema_name, key, record = _lookup(context, name, missing_ok=True)
+        if record is None:
             # not a registry table — let Spark handle it (real catalog
             # tables support INSERT natively)
             return None
-        existing = context._get_table(name)
+        existing = record.df
         if select.upper().startswith("VALUES"):
             select = f"SELECT * FROM ({select}) AS __v__"
         new_rows = context.sql(select)
@@ -841,9 +827,8 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         ):
             # VALUES lists arrive as col1..colN → positional mapping
             new_rows = new_rows.toDF(*existing.columns)
-        schema_name, table = _resolve(context, name)
         context.create_table(
-            table, existing.unionByName(new_rows), schema_name=schema_name
+            key, existing.unionByName(new_rows), schema_name=schema_name
         )
         return context._empty_result()
 
@@ -856,7 +841,7 @@ def maybe_handle_custom_statement(context: "Context", sql: str) -> DataFrame | N
         if src.startswith("("):
             df = context.sql(src[1:-1])
         else:
-            df = context._get_table(_unquote(src))
+            df = _lookup(context, src)[2].df
         # sort_by: cluster rows within output files so parquet row-group
         # min/max stats enable skipping on those columns at read time (the
         # poor man's Z-order; at 100 TB this is the difference between

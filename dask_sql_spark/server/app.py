@@ -47,6 +47,8 @@ status is answered, by the POST or a GET (plus a TTL sweep), so
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import itertools
 import json
 import math
@@ -57,6 +59,7 @@ from concurrent.futures import Future, ThreadPoolExecutor, wait
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import TYPE_CHECKING, Any
 
+from pyspark.sql import Row
 from pyspark.sql import types as T
 
 if TYPE_CHECKING:
@@ -113,11 +116,6 @@ def _json_value(v: Any) -> Any:
     a collect_list / named_struct crashed the handler connection. NaN and
     ±inf become the strings "NaN"/"Infinity"/"-Infinity" (Presto's JSON
     encoding): bare NaN/Infinity tokens are not JSON (RFC 8259)."""
-    import datetime
-    import decimal
-
-    from pyspark.sql import Row
-
     if isinstance(v, Row):
         return {k: _json_value(x) for k, x in v.asDict().items()}
     if isinstance(v, dict):

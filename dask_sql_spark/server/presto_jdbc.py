@@ -47,23 +47,14 @@ def _catalog_frame(context: "Context", what: str) -> DataFrame | None:
             "TABLE_TYPE string, REMARKS string",
         )
     if what == "columns":
-        from dask_sql_spark.mappings import spark_type_to_sql_name
+        from dask_sql_spark.mappings import column_rows
 
-        rows = []
-        for schema_name, schema in sorted(context.schemas.items()):
-            for t, df in sorted(schema.tables.items()):
-                for i, f in enumerate(df.schema.fields):
-                    rows.append(
-                        (
-                            "dask_sql_spark",
-                            schema_name,
-                            t,
-                            f.name,
-                            spark_type_to_sql_name(f.dataType),
-                            "YES" if f.nullable else "NO",
-                            i + 1,
-                        )
-                    )
+        rows = [
+            ("dask_sql_spark", schema_name, t, *column, i)
+            for schema_name, schema in sorted(context.schemas.items())
+            for t in sorted(schema.tables)
+            for i, column in enumerate(column_rows(schema.tables[t].df.schema), 1)
+        ]
         return local_frame(
             spark,
             rows,

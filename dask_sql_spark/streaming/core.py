@@ -279,8 +279,11 @@ def upsert_sink_query(
     ``foreachBatch`` — the lakehouse CDC-apply pattern without Delta.
     Returns the started StreamingQuery.
 
-    Each batch is deduplicated to the LAST row per key first (a batch can
-    carry several updates for one key; ANSI MERGE would fan out).
+    Each batch is first deduplicated to one row per key (a batch can
+    carry several updates for one key; ANSI MERGE would fan out): the row
+    whose non-key columns sort greatest, ``desc`` over each in turn. Batch
+    order follows the source (a file source: modification time), and a
+    later batch wins whatever its values.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window

@@ -121,13 +121,13 @@ def test_drop_and_replace_unpersist_cached_tables(context, spark):
     context.create_table(
         "cached_t", pd.DataFrame({"a": [1, 2]}), persist=True
     )
-    df = context.schemas[context.schema_name].tables["cached_t"]
+    df = context.schemas[context.schema_name].tables["cached_t"].df
     df.count()
     assert df.is_cached
     # replacing the registration releases the old cache
     context.create_table("cached_t", pd.DataFrame({"a": [3]}), persist=True)
     assert not df.is_cached
-    df2 = context.schemas[context.schema_name].tables["cached_t"]
+    df2 = context.schemas[context.schema_name].tables["cached_t"].df
     df2.count()
     context.drop_table("cached_t")
     assert not df2.is_cached
@@ -189,15 +189,16 @@ def test_alter_table_moves_registry_and_keeps_cache(context, tmp_path):
     ).write.parquet(loc)
     context.create_table("alt_src", loc, persist=True)
     schema = context.schemas[context.schema_name]
-    df = schema.tables["alt_src"]
+    df = schema.tables["alt_src"].df
     df.count()  # materialize the cache
     assert df.is_cached
     context.alter_table("alt_src", "alt_dst")
     try:
-        assert schema.tables["alt_dst"].is_cached  # cache survives rename
-        assert schema.filepaths["alt_dst"] == loc  # registry moved
-        assert schema.fileformats["alt_dst"] == "parquet"
-        assert "alt_src" not in schema.filepaths
+        moved = schema.tables["alt_dst"]
+        assert moved.df.is_cached  # cache survives rename
+        assert moved.location == loc  # record moved
+        assert moved.format == "parquet"
+        assert "alt_src" not in schema.tables
         n = context.sql("SELECT COUNT(*) AS n FROM alt_dst").collect()[0]["n"]
         assert n == 3
     finally:
@@ -221,11 +222,11 @@ def test_alter_table_displacing_rename_clears_stale_registry(
     # source registered from a DataFrame: NO filepath entry
     context.create_table("adv_src", pd.DataFrame({"b": [9]}))
     schema = context.schemas[context.schema_name]
-    assert schema.filepaths["adv_victim"] == loc
+    assert schema.tables["adv_victim"].location == loc
     context.alter_table("adv_src", "adv_victim")
     try:
-        assert "adv_victim" not in schema.filepaths  # stale entry gone
-        assert "adv_victim" not in schema.fileformats
+        assert schema.tables["adv_victim"].location is None  # stale entry gone
+        assert schema.tables["adv_victim"].format is None
         n = context.sql(
             "SELECT COUNT(*) AS n FROM adv_victim"
         ).collect()[0]["n"]
@@ -244,12 +245,12 @@ def test_alter_table_case_only_rename_keeps_cache(context):
         "case_t", pd.DataFrame({"a": [1, 2]}), persist=True
     )
     schema = context.schemas[context.schema_name]
-    df = schema.tables["case_t"]
+    df = schema.tables["case_t"].df
     df.count()  # materialize the cache
     assert df.is_cached
     context.alter_table("case_t", "CASE_T")
     try:
-        assert schema.tables["case_t"].is_cached
+        assert schema.tables["case_t"].df.is_cached
     finally:
         context.drop_table("case_t")
 
@@ -272,7 +273,7 @@ def test_schema_rename_and_drop_guards(context):
     context.create_table(
         "g_cached", pd.DataFrame({"x": [1]}), schema_name="g_b", persist=True
     )
-    df = context.schemas["g_b"].tables["g_cached"]
+    df = context.schemas["g_b"].tables["g_cached"].df
     df.count()
     assert df.is_cached
     context.drop_schema("g_b")
@@ -455,7 +456,7 @@ def test_context_pins_session_contract(spark):
         rows = c.sql('SELECT "a" FROM contract_t ORDER BY 1').collect()
         assert [r[0] for r in rows] == ["x", "y"]
     finally:
-        if c is not None and c._table_exists("contract_t"):
-            c.drop_table("contract_t")
+        if c is not None:
+            c.drop_table("contract_t")  # a no-op when it was never created
         for k, v in before.items():
             spark.conf.set(k, v)

@@ -161,15 +161,15 @@ def test_sql_alter_table_rename_keeps_cache_and_location(context, tmp_path):
         "format = 'parquet', persist = true)"
     )
     schema = context.schemas[context.schema_name]
-    schema.tables["sql_alt_src"].count()  # materialize the cache
+    schema.tables["sql_alt_src"].df.count()  # materialize the cache
     context.sql("ALTER TABLE sql_alt_src RENAME TO sql_alt_dst")
     try:
-        assert schema.tables["sql_alt_dst"].is_cached
-        assert schema.filepaths["sql_alt_dst"] == loc
-        assert schema.fileformats["sql_alt_dst"] == "parquet"
+        assert schema.tables["sql_alt_dst"].df.is_cached
+        assert schema.tables["sql_alt_dst"].location == loc
+        assert schema.tables["sql_alt_dst"].format == "parquet"
         dest = str(tmp_path / "sql_alt_done")
         context.sql(f"OPTIMIZE sql_alt_dst WITH (dest = '{dest}')").collect()
-        assert schema.filepaths["sql_alt_dst"] == dest
+        assert schema.tables["sql_alt_dst"].location == dest
         n = context.sql("SELECT COUNT(*) AS n FROM sql_alt_dst").collect()[0].n
         assert n == 3
     finally:
@@ -753,6 +753,73 @@ def test_vacuum_reclaims_superseded_location(context, tmp_path):
 
     with _pytest.raises(RuntimeError):
         context.sql("VACUUM no_such_table")
+
+
+@pytest.mark.parametrize(
+    "stmt, want",
+    [
+        ("INSERT INTO {t} VALUES (4)", [1, 2, 3, 4]),
+        ("DELETE FROM {t} WHERE a = 1", [2, 3]),
+        ("UPDATE {t} SET a = 20 WHERE a = 2", [1, 3, 20]),
+        (
+            "MERGE INTO {t} AS tt USING (SELECT 3 AS a) AS s ON tt.a = s.a "
+            "WHEN MATCHED THEN DELETE",
+            [1, 2],
+        ),
+        ("CREATE OR REPLACE TABLE {t} AS SELECT 42 AS a", [42]),
+    ],
+    ids=["insert", "delete", "update", "merge", "ctas_replace"],
+)
+def test_optimize_refuses_table_rewritten_by_dml(context, tmp_path, stmt, want):
+    """A statement that re-registers a parquet-backed table from a
+    DataFrame leaves it with no file location: OPTIMIZE must refuse it
+    rather than compact the original files and undo the statement."""
+    loc = str(tmp_path / "dml_opt")
+    context.spark.createDataFrame(pd.DataFrame({"a": [1, 2, 3]})).write.parquet(loc)
+    context.create_table("dml_opt_t", loc)
+    try:
+        context.sql(stmt.format(t="dml_opt_t"))
+        with pytest.raises(RuntimeError, match="requires a file-backed table"):
+            context.sql(f"OPTIMIZE dml_opt_t WITH (dest = '{tmp_path / 'done'}')")
+        got = context.sql("SELECT a FROM dml_opt_t").collect()
+        assert sorted(r.a for r in got) == want
+    finally:
+        context.drop_table("dml_opt_t")
+
+
+def test_drop_discards_statistics_and_rename_keeps_vacuum_ledger(
+    context, tmp_path
+):
+    """DROP TABLE discards the whole record, statistics included; ALTER
+    TABLE RENAME moves it, so VACUUM on the new name still reclaims the
+    location OPTIMIZE superseded under the old one."""
+    from dask_sql_spark import Statistics
+
+    tables = context.schemas[context.schema_name].tables
+    frame = pd.DataFrame({"a": [1]})
+    context.create_table("stat_t", frame, statistics=Statistics(row_count=99))
+    assert tables["stat_t"].statistics.row_count == 99
+    context.sql("DROP TABLE stat_t")
+    context.create_table("stat_t", frame)
+    try:
+        assert tables["stat_t"].statistics is None
+    finally:
+        context.drop_table("stat_t")
+
+    src = str(tmp_path / "ren_src")
+    context.spark.createDataFrame(pd.DataFrame({"a": [1, 2, 3]})).write.parquet(src)
+    context.create_table("ren_a", src)
+    context.sql(f"OPTIMIZE ren_a WITH (dest = '{tmp_path / 'ren_done'}')").collect()
+    context.sql("ALTER TABLE ren_a RENAME TO ren_b")
+    try:
+        real = context.sql("VACUUM ren_b").collect()
+        assert [(r.location, r.action, r.deleted) for r in real] == [
+            (src, "deleted", True)
+        ]
+        assert not os.path.exists(src)
+        assert context.sql("SELECT COUNT(*) AS n FROM ren_b").collect()[0].n == 3
+    finally:
+        context.drop_table("ren_b")
 
 
 def test_optimize_preserves_csv_format(context, tmp_path):

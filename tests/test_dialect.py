@@ -5,7 +5,6 @@ import re
 
 from dask_sql_spark.dialect import (
     rewrite,
-    sql_like_to_regex,
     sql_similar_to_regex,
 )
 
@@ -45,9 +44,13 @@ def test_similar_to_char_range_passthrough():
     assert re.match(rgx, "yes") and not re.match(rgx, "xeno")
 
 
-def test_like_to_regex_escapes_metachars():
-    assert sql_like_to_regex("a.b%") == "^(?:a\\.b.*)$"
-    assert re.match(sql_like_to_regex("100%"), "100three")
+def test_like_escape_clause_parsed_by_spark(context):
+    # LIKE ... ESCAPE reaches Spark's own parser: '!%' is a literal '%'
+    row = context.sql(
+        "SELECT 'a%b' LIKE 'a!%b' ESCAPE '!' AS hit, "
+        "'axb' LIKE 'a!%b' ESCAPE '!' AS miss"
+    ).collect()[0]
+    assert row.hit is True and row.miss is False
 
 
 def test_rewrite_similar_to():

@@ -2,6 +2,7 @@
 streaming, SURVEY §2.10). Uses a file stream over a temp parquet dir and
 the memory sink; deterministic."""
 
+import os
 import time
 
 import pandas as pd
@@ -171,6 +172,10 @@ def test_streaming_upsert_sink(spark, tmp_path):
     pd.DataFrame({"k": [3, 3], "v": [31.0, 32.0], "seq": [2, 3]}).to_parquet(
         src / "b2.parquet"
     )
+    # the file source orders new files by modification time, and two
+    # files written back to back can tie: make b2 strictly the later batch
+    b1_mtime = os.stat(src / "b1.parquet").st_mtime
+    os.utime(src / "b2.parquet", (b1_mtime + 10, b1_mtime + 10))
     stream = (
         spark.readStream.schema("k BIGINT, v DOUBLE, seq BIGINT")
         .option("maxFilesPerTrigger", 1)
