@@ -2108,13 +2108,12 @@ def _jaccard_prefix_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filter plan (round-12: each doc emits only its
     |S|−⌈t|S|⌉+1 rarest shingles into the candidate self-join, plus the
     PPJoin positional filter on every emission; measured 25.5× fewer
-    candidate pairs at t=0.8/sf10, SCALING.md). t=0.5 is exactly the
-    prefix_filter=None auto-cutoff, so this gate attests the plan the
-    auto rule selects at its boundary; the t=0.12 gate above
-    auto-selects the legacy bucket-count plan (pruning ≈1.27× cannot
-    pay there) — both under the same plan-independent oracle, and
-    tests/test_jaccard_prefix.py pins the two plans pair-for-pair
-    equal at every threshold."""
+    candidate pairs at t=0.8/sf10, SCALING.md). t=0.5 is exactly
+    Jaccard's prefix cutoff, so this gate attests the plan the threshold
+    rule selects at its boundary; the t=0.12 gate above runs the
+    bucket-count plan (pruning ≈1.27× cannot pay there) — both under
+    the same plan-independent oracle, and tests/test_jaccard_prefix.py
+    pins the two plans pair-for-pair equal at every threshold."""
     from dask_sql_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
@@ -2146,16 +2145,10 @@ WHERE ROUND(common / CAST(sa.sz + sb.sz - common AS DOUBLE), 6) >= 0.5
 
 
 def _minhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from dask_sql_spark.operators.dedup import minhash_lsh_pairs
 
-    # SPARK_GRAFT_LSH_PARTS: harness hook for the sized
-    # repartition(n, "band", "bucket") scale knob (SCALING.md r7 A/B)
-    parts = int(os.environ.get("SPARK_GRAFT_LSH_PARTS", "0")) or None
     return minhash_lsh_pairs(
-        _table(spark, sf_dir, "documents"), num_perm=16, bands=8,
-        band_partitions=parts,
+        _table(spark, sf_dir, "documents"), num_perm=16, bands=8
     )
 
 
@@ -9693,18 +9686,17 @@ _VERIFY_FIRST = [
 # in-session after the edit; the driver rows below are the
 # belt-and-braces re-attestation.
 _REATTEST = [
-    # r12 verdict #1: ngram_jaccard_pairs / containment_pairs gained the
-    # AllPairs/PPJoin prefix-filter plan (df-ordered prefixes, length +
-    # positional filters, array_intersect verification), selected by a
-    # measurement-derived auto rule (prefix_filter=None → prefix iff
-    # threshold ≥ 0.5 jaccard / 0.75 containment; the measured volume
-    # model is in dedup.py + SCALING.md r12). Pinned lossless — prefix
-    # == legacy == a pure-Python oracle across thresholds
-    # (tests/test_jaccard_prefix.py). These gates (t=0.12 / t=0.3)
-    # auto-select the LEGACY plan — byte-compatible with their r1-r11
-    # attestation — and dedup_jaccard_prefix (t=0.5) attests the prefix
-    # plan at the auto boundary; fuzzy re-attests as the edited file's
-    # threshold-0 (legacy path) consumer.
+    # ngram_jaccard_pairs / containment_pairs share one overlap core
+    # with two plans: the AllPairs/PPJoin prefix plan (df-ordered
+    # prefixes, length + positional filters, array_intersect
+    # verification) and the bucket-count plan, picked by the threshold
+    # alone (prefix iff threshold ≥ 0.5 jaccard / 0.75 containment; the
+    # measured volume model is in dedup.py + SCALING.md r12). Pinned
+    # lossless — prefix == bucket-count == a pure-Python oracle across
+    # thresholds (tests/test_jaccard_prefix.py). These gates (t=0.12 /
+    # t=0.3) run the bucket-count plan, and dedup_jaccard_prefix (t=0.5)
+    # attests the prefix plan at the cutoff; fuzzy re-attests as the
+    # edited file's representative.
     "dedup_ngram_jaccard",
     "dedup_containment",
     "dedup_fuzzy_levenshtein",

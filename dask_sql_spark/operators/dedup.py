@@ -129,33 +129,87 @@ def shingles(
 
 
 # --------------------------------------------------------------------- #
-# n-gram Jaccard                                                        #
+# n-gram overlap: Jaccard and containment                               #
 # --------------------------------------------------------------------- #
-def ngram_doc_lists(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_df: int | None = None,
+# Both measures read one relation, (id_a, id_b, common, sz_a, sz_b):
+# |A∩B| and both shingle-set sizes for every pair that can reach the
+# threshold. :func:`_overlap` builds it by one of two plans, picked by
+# the threshold alone, and each measure applies its arithmetic to it once.
+# - Bucket-count plan (:func:`_bucket_overlap`): count common shingles
+#   per co-bucketed pair. Exact for every pair sharing a shingle.
+# - Prefix plan (:func:`_prefix_overlap`, AllPairs/PPJoin): candidate
+#   pairs come only from each doc's rarest shingles and are verified
+#   against the full sets (:func:`_verify_pairs`).
+
+
+def _shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """(shingle-hash, sorted doc-id list) — the reusable intermediate of
-    :func:`ngram_jaccard_pairs`. Build it yourself, ``persist()`` it, and
-    pass it via ``lists=`` when you need cache-lifecycle control (the
-    internally-built cache lives until session end); ``unpersist()`` it
-    after the pairs are consumed. ``max_df`` caps each list at the
-    stopword-gram blowup guard documented on the pairs function."""
-    sh = shingles(df, id_col, text_col, n).select(
+    """(id, shingle) with each distinct shingle as its 60-bit hash: the
+    join key of both plans, ~3× smaller to shuffle than the string. A
+    cross-document hash collision would inflate ``common`` by 1; at 2^60
+    key space that is negligible against corpus sizes up to ~2^25
+    distinct shingles per bucketed join."""
+    return shingles(df, id_col, text_col, n).select(
         F.col(id_col), portable_hash64(F.col("shingle")).alias("shingle")
     )
-    lists = sh.groupBy("shingle").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
+
+
+def _bucket_overlap(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_df: int | None
+) -> DataFrame:
+    """Bucket-count plan: the overlap row of EVERY pair sharing a shingle.
+
+    ONE groupBy(shingle) collects the sorted doc-id list per shingle
+    (lists longer than ``max_df`` dropped); co-shingle pairs come from an
+    in-row pair explode of each list, counted by groupBy(id_a, id_b), and
+    per-doc sizes from a flat explode of the same lists. One corpus
+    shuffle and no verify join, so it is the cheap plan at small scale;
+    its pair explode is the quadratic term the prefix plan removes.
+    """
+    lists = (
+        _shingle_hashes(df, id_col, text_col, n)
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
     )
     if max_df is not None:
-        # rows in `sh` are distinct per (doc, shingle), so size(ids) is the
-        # shingle's document frequency; the cap bounds every downstream
-        # list at max_df entries (a shingle in d docs is d²/2 pairs)
+        # rows are distinct per (doc, shingle), so size(ids) is the
+        # shingle's document frequency; the cap bounds every list at
+        # max_df entries (a shingle in d docs is d²/2 pairs)
         lists = lists.where(F.size("ids") <= max_df)
-    return lists
+    # PERSISTED: the sizes and the pairs branch both consume it, and
+    # Catalyst/AQE does NOT reuse the exchange across the two (verified
+    # in the executed plan: 0 ReusedExchange, 3 FileScans without the
+    # cache) — uncached, the whole tokenize+md5+explode pipeline re-ran
+    # per branch, 2.3× slower at sf1 and neutral at sf0.1. The cache
+    # lives until session end; query-loop callers that care should
+    # spark.catalog.clearCache() between batches.
+    lists = lists.persist(StorageLevel.MEMORY_AND_DISK)
+    # dual-consumer relation (sz_a and sz_b join sides): uncached, each
+    # side re-ran the explode+groupBy pass over the cached lists — two
+    # extra corpus-lists passes at scale, ~0.5 s at sf0.1 (r12). The
+    # relation is one compact (id, sz) row per document.
+    sizes = (
+        lists.select(F.explode("ids").alias(id_col))
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("sz"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    pair_structs = F.expr(
+        "flatten(transform(ids, (a, i) -> "
+        "transform(slice(ids, i + 2, size(ids) - i - 1), "
+        "b -> struct(a AS id_a, b AS id_b))))"
+    )
+    common = (
+        lists.where(F.size("ids") >= 2)
+        .select(F.explode(pair_structs).alias("p"))
+        .select("p.id_a", "p.id_b")
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    sza = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
+    szb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    return common.join(sza, "id_a").join(szb, "id_b")
 
 
 def _prefix_doc_sets(
@@ -174,7 +228,7 @@ def _prefix_doc_sets(
     the prefix length ``sz − ⌈t_eff·sz⌉ + 1``. Rarest shingles sort
     first, so prefixes index the most selective tokens (Chaudhuri et al.
     SSJoin / Bayardo et al. AllPairs). ``max_df`` drops hot shingles
-    BEFORE sizes are computed, matching the legacy plan's semantics.
+    BEFORE sizes are computed, matching the bucket-count plan.
 
     The ceil argument is nudged down 1e-9 so float noise can only
     LENGTHEN the prefix (a too-short prefix would drop true pairs; a
@@ -182,9 +236,7 @@ def _prefix_doc_sets(
     """
     from pyspark.sql import Window
 
-    sh = shingles(df, id_col, text_col, n).select(
-        F.col(id_col), portable_hash64(F.col("shingle")).alias("shingle")
-    )
+    sh = _shingle_hashes(df, id_col, text_col, n)
     # document frequency via an unordered window over shingle: ONE
     # exchange of the (id, shingle) relation instead of groupBy + rejoin
     # (two exchanges of the same rows) — df attaches in place
@@ -209,12 +261,111 @@ def _prefix_doc_sets(
     )
 
 
+def _prefix_emissions(docs: DataFrame, id_col: str, measure: str) -> DataFrame:
+    """The prefix plan's candidate emission: one (id_a, id_b, sz_a, sz_b,
+    pa, pb) row per shared bucketed shingle of a pair (id_a < id_b), with
+    pa/pb the shingle's position in each doc's ordered set.
+
+    Jaccard (both-sides prefix): J ≥ t bounds |A∩B| ≥ ⌈t·|A|⌉ for BOTH
+    docs, so a qualifying pair's globally-smallest common shingle lies
+    inside both prefixes (had it fallen outside A's, all its common
+    tokens would sit in A's last ⌈t·|A|⌉−1 positions — impossible). Only
+    prefix shingles enter the buckets; lists sort by (id, sz, pos), so
+    the in-row i<j explode emits each pair once with id_a<id_b (ids are
+    unique within a bucket, so sz/pos never decide the order).
+
+    Containment (one-sided prefix): containment ≥ t only bounds the
+    overlap by the SMALLER side (|A∩B| ≥ ⌈t·min(|A|,|B|)⌉), so a
+    qualifying pair's smallest common shingle lies inside the smaller
+    doc's prefix, while the larger doc contributes its FULL set. Every
+    shingle enters the buckets flagged ``pfx`` (inside its doc's
+    prefix); lists sort by (sz, id) and pair (i, j), i<j, is emitted
+    only when the i (min-size) side's token is a prefix token. On size
+    ties the bound holds for both docs, so checking i alone is lossless.
+    """
+    if measure == "jaccard":
+        pre = docs.select(
+            F.col(id_col).alias("id"),
+            "sz",
+            F.posexplode(F.expr("slice(set_, 1, plen)")).alias(
+                "pos", "shingle"
+            ),
+        )
+        entry = ("id", "sz", "pos")
+        partners = "slice(m, i + 2, size(m) - i - 1)"
+        ids = "a.id AS id_a, b.id AS id_b"
+    else:
+        pre = docs.select(
+            F.col(id_col).alias("id"),
+            "sz",
+            "plen",
+            F.posexplode("set_").alias("pos", "shingle"),
+        ).select(
+            "id",
+            "sz",
+            "pos",
+            "shingle",
+            (F.col("pos") < F.col("plen")).alias("pfx"),
+        )
+        entry = ("sz", "id", "pfx", "pos")
+        # the empty branch is slice(m, 1, 0) — an empty array of m's own
+        # struct type, keeping both CASE arms type-identical for flatten
+        partners = (
+            "CASE WHEN a.pfx THEN slice(m, i + 2, size(m) - i - 1) "
+            "ELSE slice(m, 1, 0) END"
+        )
+        ids = "least(a.id, b.id) AS id_a, greatest(a.id, b.id) AS id_b"
+    pair_structs = F.expr(
+        f"flatten(transform(m, (a, i) -> transform({partners}, "
+        f"b -> struct({ids}, a.sz AS sz_a, b.sz AS sz_b, "
+        "a.pos AS pa, b.pos AS pb))))"
+    )
+    return (
+        pre.groupBy("shingle")
+        .agg(F.sort_array(F.collect_list(F.struct(*entry))).alias("m"))
+        .where(F.size("m") >= 2)
+        .select(F.explode(pair_structs).alias("p"))
+        .select("p.*")
+    )
+
+
+def _length_ok(t_eff: float) -> Column:
+    """Jaccard's length filter on an emission row: J is bounded by the
+    size ratio, so a pair needs min(|A|,|B|) ≥ t·max(|A|,|B|)."""
+    need = F.greatest("sz_a", "sz_b") * F.lit(t_eff) - F.lit(1e-9)
+    return F.least("sz_a", "sz_b") >= need
+
+
+def _positional_ok(measure: str, t_eff: float) -> Column:
+    """PPJoin positional filter (Xiao et al. WWW'08, adapted to one global
+    token order) on an emission row: a token shared at positions
+    (pa, pb) bounds the overlap by ``min(pa,pb) + 1 + min(|A|−pa−1,
+    |B|−pb−1)`` — common tokens ordered before it number at most
+    min(pa, pb) because every doc uses the SAME total order. The row
+    survives when that bound reaches the measure's required overlap:
+    ``⌈t·(|A|+|B|)/(1+t)⌉`` for Jaccard, ``⌈t·min(|A|,|B|)⌉`` for
+    containment. Lossless: every emission of a true pair carries a bound
+    ≥ its actual overlap ≥ the requirement. The −1e-9 nudge can only
+    LOWER the requirement, so float noise cannot drop a true pair."""
+    if measure == "jaccard":
+        need = (F.col("sz_a") + F.col("sz_b")) * F.lit(t_eff / (1.0 + t_eff))
+    else:
+        need = F.least("sz_a", "sz_b") * F.lit(t_eff)
+    bound = (
+        F.least("pa", "pb")
+        + 1
+        + F.least(
+            F.col("sz_a") - F.col("pa") - 1, F.col("sz_b") - F.col("pb") - 1
+        )
+    )
+    return bound >= F.ceil(need - F.lit(1e-9))
+
+
 def _verify_pairs(cand: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
     """Exact-overlap verification of candidate pairs: join both sides'
     full shingle sets back on and count |A∩B| JVM-side via
     ``array_intersect`` (hash-set build, O(|A|+|B|) per pair). Output:
-    (id_a, id_b, common, sz_a, sz_b) — the same contract the legacy
-    bucket-count stage feeds the similarity arithmetic."""
+    (id_a, id_b, common, sz_a, sz_b), the bucket-count plan's contract."""
     da = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("set_").alias("set_a"),
@@ -246,219 +397,88 @@ def _verify_pairs(cand: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
 # rounding satisfies sim >= t_eff); 1e-9 absorbs double multiply noise.
 _ROUND6_SLACK = 1e-6
 
-# prefix_filter=None auto-cutoffs, from the measured volume model
-# (SCALING.md r12): jaccard candidate pairs shrink ≈ (1−t)⁻² (both-sides
-# prefix), containment ≈ (1−t)⁻¹ (the prefix applies to the smaller side
-# only). Below ~4× reduction the pruning cannot pay for the df-ordered
-# doc-set build + verify join the prefix plan adds (sf10 t=0.12: 270 s
-# prefix vs 60 s legacy for 1.27×); above it the 100 TB candidate-shuffle
-# headroom dominates (sf10 t=0.8: 25.5× fewer candidate pairs).
-_PREFIX_AUTO_JACCARD = 0.5  # (1−t)⁻² ≥ 4
-_PREFIX_AUTO_CONTAINMENT = 0.75  # (1−t)⁻¹ ≥ 4
 
-
-def ngram_jaccard_pairs(
+def _prefix_overlap(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int | None = None,
-    lists: DataFrame | None = None,
-    prefix_filter: bool | None = None,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    max_df: int | None,
+    measure: str,
 ) -> DataFrame:
-    """All document pairs with shingle-set Jaccard ≥ threshold.
-
-    Prefix plan (``prefix_filter=True``, AllPairs/PPJoin): order each
-    doc's shingles by ascending global document frequency and emit only
-    the first ``|S| − ⌈t·|S|⌉ + 1`` into the candidate self-join. Any
-    pair with J ≥ t shares its globally-smallest common shingle inside
-    BOTH prefixes (if the smallest common token fell outside A's prefix,
-    all |A∩B| ≥ ⌈t·|A|⌉ common tokens would sit in A's last ⌈t·|A|⌉−1
-    positions — impossible), so the pruned candidate set is lossless.
-    Emissions then pass the length filter ``min(|A|,|B|) ≥ t·max`` (J is
-    bounded by the size ratio) and the PPJoin POSITIONAL filter (Xiao et
-    al. WWW'08, adapted to one global token order): a token shared at
-    positions (i, j) bounds the overlap by ``min(i,j) + 1 +
-    min(|A|−i−1, |B|−j−1)`` — common tokens ordered before it number at
-    most min(i, j) because the ordering is the SAME total order in every
-    doc — so emissions whose bound can't reach the required overlap
-    ``⌈t·(|A|+|B|)/(1+t)⌉`` are dropped before the distinct. Per-emission
-    pruning is lossless: for a true pair every common token's bound ≥
-    the actual overlap ≥ required, so every one of its emissions
-    survives. Exact verification then rejoins the full sets and computes
-    |A∩B| via ``array_intersect``. Measured at sf10/500k docs
-    (SCALING.md r12): candidate pairs drop 25.5× at t=0.8 — the
-    operator's scale driver at 5M docs was a 26 GB candidate-pair
-    shuffle, which this bounds by prefix-bucket occupancy instead of
-    full-bucket occupancy.
-
-    Legacy plan (``prefix_filter=False``, automatically when
-    ``threshold ≤ 0`` — a zero threshold means full-length prefixes, so
-    pruning buys nothing and verification is pure overhead — or when a
-    prebuilt ``lists=`` relation is supplied): explode shingles →
-    groupBy(shingle) doc lists → in-row pair explode → count common →
-    join per-doc sizes. Cheaper at small scale (one corpus shuffle, no
-    verify join); its candidate-pair stage is the quadratic term the
-    prefix plan removes.
-
-    ``prefix_filter=None`` (default) picks by the measured volume model:
-    per-doc emission fraction ≈ (1−t), so candidate pairs shrink
-    ≈ (1−t)⁻² — validated at sf1/sf10 (t=0.12 → 1.27×, t=0.8 → 25.5×
-    measured vs 1.29×/25× predicted). Below the ``≥ 0.5`` cutoff
-    (reduction < 4×) the pruning cannot pay for the df-ordered doc-set
-    build + verify join it adds (measured sf10 t=0.12: prefix 270 s vs
-    legacy 60 s for a 1.27× reduction), so low thresholds run the legacy
-    plan; at and above it the prefix plan wins asymptotically — at t=0.8
-    the single node pays ~2× wall at sf10 for a 25× smaller candidate
-    shuffle, which is the trade that keeps the operator alive at 5M+
-    docs where the legacy candidate stage is measured-infeasible.
-
-    ``max_df`` is the stopword-gram blowup guard: shingles appearing in
-    more than max_df documents are dropped BEFORE pairing (a shingle in
-    d docs contributes d²/2 pairs — one stopword 3-gram in 1M docs is
-    5×10¹¹ rows). Per-doc sizes are computed on the filtered shingle set
-    so Jaccard stays internally consistent (the oracle CTE applies the
-    same filter). At 100 TB always set max_df; None keeps exact semantics.
-
-    The join key is the 60-bit hash of the shingle, not the string —
-    ~3× smaller shuffle. A cross-document hash collision would inflate
-    `common` by 1; at 2^60 key space that is negligible against corpus
-    sizes up to ~2^25 distinct shingles per bucketed join.
-    """
-    if prefix_filter is None:
-        prefix_filter = threshold >= _PREFIX_AUTO_JACCARD
-    if prefix_filter and lists is None and threshold > 0:
-        if max_df is not None and max_df < 1:
-            raise ValueError("ngram_jaccard_pairs: max_df must be >= 1")
-        t_eff = max(threshold - _ROUND6_SLACK, 0.0)
-        docs = _prefix_doc_sets(
-            df, id_col, text_col, n, t_eff, max_df
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        pre = docs.select(
-            F.col(id_col).alias("id"),
-            "sz",
-            F.posexplode(F.expr("slice(set_, 1, plen)")).alias(
-                "pos", "shingle"
-            ),
-        )
-        # bucket lists sort by (id, sz, pos): struct field order makes
-        # the in-row i<j explode emit each unordered pair once with
-        # id_a<id_b (ids are unique within a bucket — shingles are
-        # distinct per doc — so sz/pos never participate in ordering)
-        pair_structs = F.expr(
-            "flatten(transform(m, (a, i) -> "
-            "transform(slice(m, i + 2, size(m) - i - 1), "
-            "b -> struct(a.id AS id_a, b.id AS id_b, "
-            "a.sz AS sz_a, b.sz AS sz_b, "
-            "a.pos AS pa, b.pos AS pb))))"
-        )
-        # required overlap for J ≥ t: common ≥ t·(|A|+|B|)/(1+t); the
-        # −1e-9 nudge can only LOWER the requirement (fewer prunes, so
-        # float noise can't drop a true pair)
-        req = F.ceil(
-            (F.col("sz_a") + F.col("sz_b"))
-            * F.lit(t_eff / (1.0 + t_eff))
-            - F.lit(1e-9)
-        )
-        cand = (
-            pre.groupBy("shingle")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col("id"), F.col("sz"), F.col("pos"))
-                    )
-                ).alias("m")
-            )
-            .where(F.size("m") >= 2)
-            .select(F.explode(pair_structs).alias("p"))
-            .select("p.id_a", "p.id_b", "p.sz_a", "p.sz_b", "p.pa", "p.pb")
-            .where(
-                F.least("sz_a", "sz_b")
-                >= F.greatest("sz_a", "sz_b") * F.lit(t_eff) - F.lit(1e-9)
-            )
-            # PPJoin positional filter: overlap ≤ min(pa,pb) + 1 +
-            # min(|A|−pa−1, |B|−pb−1) for ANY shared token (one global
-            # order ⇒ common tokens before it ≤ min(pa, pb))
-            .where(
-                F.least("pa", "pb")
-                + 1
-                + F.least(
-                    F.col("sz_a") - F.col("pa") - 1,
-                    F.col("sz_b") - F.col("pb") - 1,
-                )
-                >= req
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return (
-            _verify_pairs(cand, docs, id_col)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("common")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-                    6,
-                ),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    # plan shape: ONE groupBy(shingle) collects the (sorted, max_df-capped)
-    # doc list per shingle; co-shingle pairs come from an in-row pair
-    # explode of that list and per-doc sizes from a flat explode. The
-    # list relation is PERSISTED: both branches consume it, and in
-    # practice Catalyst/AQE does NOT fire ReuseExchange across the two
-    # (verified in the executed plan: 0 ReusedExchange, 3 FileScans
-    # without the cache) — uncached, the whole tokenize+md5+explode
-    # pipeline re-ran per branch, 2.3× slower at sf1 and neutral at
-    # sf0.1. The internal cache lives until session end; long-lived
-    # multi-corpus sessions should build via ngram_doc_lists, persist,
-    # pass lists=, and unpersist after consumption (max_df is applied by
-    # ngram_doc_lists, so a caller-supplied ``lists`` must already carry
-    # its own cap — passing both is a contract violation, not a no-op).
-    if lists is None:
-        lists = ngram_doc_lists(df, id_col, text_col, n, max_df).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    elif max_df is not None:
-        raise ValueError(
-            "ngram_jaccard_pairs: max_df is applied when BUILDING the "
-            "shingle→doc lists and cannot be applied to a caller-supplied "
-            "lists= relation; pass max_df to ngram_doc_lists instead "
-            "(an uncapped lists relation explodes pairs quadratically "
-            "per hot shingle)"
-        )
-    # dual-consumer relation (sz_a and sz_b join sides): uncached, each
-    # side re-ran the explode+groupBy pass over the cached lists — two
-    # extra corpus-lists passes at scale, ~0.5 s at sf0.1 (r12). The
-    # relation is one compact (id, sz) row per document.
-    sizes = (
-        lists.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    """Prefix plan: the overlap rows of the candidate pairs that survive
+    :func:`_prefix_emissions` and the measure's filters — a superset of
+    the pairs whose ``measure`` reaches ``threshold``, verified exactly.
+    Per-emission pruning is lossless, so the distinct candidate set
+    keeps every true pair. Measured at sf10/500k docs (SCALING.md r12):
+    candidate pairs drop 25.5× for Jaccard at t=0.8 — the operator's
+    dominant cost at 5M docs was a 26 GB candidate-pair shuffle, which
+    this bounds by prefix-bucket occupancy instead of full-bucket
+    occupancy."""
+    t_eff = max(threshold - _ROUND6_SLACK, 0.0)
+    docs = _prefix_doc_sets(df, id_col, text_col, n, t_eff, max_df).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    pair_structs = F.expr(
-        "flatten(transform(ids, (a, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-        "b -> struct(a AS id_a, b AS id_b))))"
+    keep = _positional_ok(measure, t_eff)
+    if measure == "jaccard":
+        keep = _length_ok(t_eff) & keep
+    cand = (
+        _prefix_emissions(docs, id_col, measure)
+        .where(keep)
+        .select("id_a", "id_b")
+        .distinct()
     )
-    common = (
-        lists.where(F.size("ids") >= 2)
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sza = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    return _verify_pairs(cand, docs, id_col)
+
+
+# Thresholds at and above which each measure runs the prefix plan, from
+# the measured volume model (SCALING.md r12): per-doc emission fraction
+# ≈ (1−t), so Jaccard candidate pairs shrink ≈ (1−t)⁻² (both-sides
+# prefix) and containment's ≈ (1−t)⁻¹ (the prefix applies to the
+# smaller side only) — validated at sf1/sf10 (Jaccard t=0.12 → 1.27×,
+# t=0.8 → 25.5× measured vs 1.29×/25× predicted). Below ~4× reduction
+# the pruning cannot pay for the df-ordered doc-set build + verify join
+# the prefix plan adds (sf10 t=0.12: 270 s prefix vs 60 s bucket-count
+# for 1.27×); above it the 100 TB candidate-shuffle headroom dominates
+# (at t=0.8 the single node pays ~2× wall at sf10 for a 25× smaller
+# candidate shuffle, the trade that keeps the operator alive at 5M+
+# docs where the bucket-count candidate stage is measured-infeasible).
+_PREFIX_FROM = {
+    "jaccard": 0.5,  # (1−t)⁻² ≥ 4
+    "containment": 0.75,  # (1−t)⁻¹ ≥ 4
+}
+
+
+def _overlap(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    max_df: int | None,
+    measure: str,
+) -> DataFrame:
+    """(id_a, id_b, common, sz_a, sz_b) for a superset of the pairs whose
+    ``measure`` reaches ``threshold``: the prefix plan at or above the
+    measure's ``_PREFIX_FROM`` cutoff, the bucket-count plan below it.
+    A zero threshold always runs the bucket-count plan (its prefixes
+    would be the full sets, so verification would be pure overhead)."""
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
+    if max_df is not None and max_df < 1:
+        raise ValueError(f"max_df must be None or >= 1, got {max_df}")
+    if threshold >= _PREFIX_FROM[measure]:
+        return _prefix_overlap(
+            df, id_col, text_col, n, threshold, max_df, measure
+        )
+    return _bucket_overlap(df, id_col, text_col, n, max_df)
+
+
+def _jaccard_rows(overlap: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of the overlap rows with Jaccard ≥ threshold."""
     return (
-        common.join(sza, "id_a")
-        .join(szb, "id_b")
-        .withColumn(
+        overlap.withColumn(
             "jaccard",
             F.round(
                 F.col("common")
@@ -471,6 +491,58 @@ def ngram_jaccard_pairs(
     )
 
 
+def _containment_rows(overlap: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, containment, direction) of the overlap rows with
+    containment ≥ threshold."""
+    c_ab = F.round(F.col("common") / F.col("sz_a"), 6)
+    c_ba = F.round(F.col("common") / F.col("sz_b"), 6)
+    return (
+        overlap.withColumn("containment", F.greatest(c_ab, c_ba))
+        .withColumn(
+            "direction",
+            F.when(c_ab == c_ba, F.lit("mutual"))
+            .when(c_ab > c_ba, F.lit("a_in_b"))
+            .otherwise(F.lit("b_in_a")),
+        )
+        .where(F.col("containment") >= threshold)
+        .select("id_a", "id_b", "containment", "direction")
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
+    max_df: int | None = None,
+) -> DataFrame:
+    """All document pairs with shingle-set Jaccard ≥ threshold:
+    (id_a, id_b, jaccard), id_a < id_b, jaccard rounded to 6 places.
+
+    The plan follows the threshold: at ``threshold ≥ 0.5`` the
+    AllPairs/PPJoin prefix plan (each doc emits only its
+    ``|S| − ⌈t·|S|⌉ + 1`` rarest shingles, emissions pass a length and a
+    positional filter, and candidates are verified exactly), below it
+    the bucket-count plan — see ``_PREFIX_FROM`` for the measurement
+    behind the cutoff. Both give the same pairs and values.
+
+    ``max_df`` is the stopword-gram blowup guard: shingles appearing in
+    more than max_df documents are dropped BEFORE pairing (a shingle in
+    d docs contributes d²/2 pairs — one stopword 3-gram in 1M docs is
+    5×10¹¹ rows). Per-doc sizes are computed on the filtered shingle set
+    so Jaccard stays internally consistent (the oracle CTE applies the
+    same filter). At 100 TB always set max_df; None keeps exact semantics.
+
+    Raises ``ValueError`` unless ``0 ≤ threshold ≤ 1`` and ``max_df`` is
+    None or ≥ 1.
+    """
+    return _jaccard_rows(
+        _overlap(df, id_col, text_col, n, threshold, max_df, "jaccard"),
+        threshold,
+    )
+
+
 def containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -478,7 +550,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    prefix_filter: bool | None = None,
 ) -> DataFrame:
     """Document pairs where the SMALLER shingle set is ≥ ``threshold``
     contained in the other: ``max(|A∩B|/|A|, |A∩B|/|B|)`` — the
@@ -488,161 +559,21 @@ def containment_pairs(
     containment to catch wrapped or excerpted duplicates that
     symmetric measures can't.
 
-    Default plan (``prefix_filter=True``): the one-sided prefix filter.
-    Containment ≥ t only bounds overlap by the SMALLER side
-    (|A∩B| ≥ ⌈t·min(|A|,|B|)⌉), so the prefix rule is asymmetric: a
-    qualifying pair's globally-smallest common token must lie inside the
-    smaller doc's t-prefix (the larger doc contributes its FULL set to
-    the buckets — no length filter applies, any size ratio can qualify).
-    In-row pairing sorts each bucket by (sz, id) and emits pair (i, j),
-    i<j, only when token position < plen on the i (min-size) side; on
-    size ties the overlap bound holds for both docs, so the smallest
-    common token is in both prefixes and checking i alone is lossless.
-    Emissions also pass the PPJoin positional filter (see
-    :func:`ngram_jaccard_pairs` — the same per-token overlap bound
-    ``min(i,j) + 1 + min(rem_a, rem_b)``, here against the containment
-    requirement ``⌈t·min(|A|,|B|)⌉``; lossless for the same reason:
-    a true pair's every emission carries a bound ≥ actual overlap).
-    Exact verification then rejoins full sets (``array_intersect``).
-    Bucket lists stay full-size, but emitted candidate pairs drop by
-    ~the prefix fraction — the quadratic pair-materialization term is
-    what hurt at 5M docs (SCALING.md). ``prefix_filter=False`` or
-    ``threshold ≤ 0`` keeps the legacy single-shuffle bucket-count plan
-    (cheaper at small scale, quadratic candidate stage at large);
-    ``prefix_filter=None`` (default) picks the prefix plan when
-    ``threshold ≥ 0.75`` — containment's one-sided prefix prunes
-    ≈ (1−t)⁻¹, so the ~4× break-even sits higher than jaccard's 0.5
-    cutoff (see ``_PREFIX_AUTO_CONTAINMENT``).
+    The plan follows the threshold: at ``threshold ≥ 0.75`` the one-sided
+    prefix plan (only the smaller doc's prefix is pruned, no length
+    filter applies), below it the bucket-count plan. The one-sided
+    prefix prunes ≈ (1−t)⁻¹, so its ~4× break-even sits higher than
+    Jaccard's 0.5 cutoff (``_PREFIX_FROM``).
 
     Output: (id_a, id_b, containment, direction) where direction marks
     which side is the contained one ('a_in_b' when |A| is the
     denominator of the max, 'b_in_a' otherwise; 'mutual' on exact ties —
-    deterministic). ``max_df`` hot-shingle cap as in ngram_jaccard_pairs.
+    deterministic). ``max_df`` hot-shingle cap and ``ValueError`` on bad
+    parameters as in :func:`ngram_jaccard_pairs`.
     """
-    if prefix_filter is None:
-        prefix_filter = threshold >= _PREFIX_AUTO_CONTAINMENT
-    if prefix_filter and threshold > 0:
-        if max_df is not None and max_df < 1:
-            raise ValueError("containment_pairs: max_df must be >= 1")
-        t_eff = max(threshold - _ROUND6_SLACK, 0.0)
-        docs = _prefix_doc_sets(
-            df, id_col, text_col, n, t_eff, max_df
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        pre = docs.select(
-            F.col(id_col).alias("id"),
-            "sz",
-            "plen",
-            F.posexplode("set_").alias("pos", "shingle"),
-        ).select(
-            "id",
-            "sz",
-            "pos",
-            "shingle",
-            (F.col("pos") < F.col("plen")).alias("pfx"),
-        )
-        # the empty branch is slice(m, 1, 0) — an empty array of m's own
-        # struct type, keeping both CASE arms type-identical for flatten
-        pair_structs = F.expr(
-            "flatten(transform(m, (a, i) -> "
-            "transform("
-            "CASE WHEN a.pfx THEN slice(m, i + 2, size(m) - i - 1) "
-            "ELSE slice(m, 1, 0) END, "
-            "b -> struct(least(a.id, b.id) AS id_a, "
-            "greatest(a.id, b.id) AS id_b, "
-            "a.sz AS sz_a, b.sz AS sz_b, a.pos AS pa, b.pos AS pb))))"
-        )
-        cand = (
-            pre.groupBy("shingle")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("sz"),
-                            F.col("id"),
-                            F.col("pfx"),
-                            F.col("pos"),
-                        )
-                    )
-                ).alias("m")
-            )
-            .where(F.size("m") >= 2)
-            .select(F.explode(pair_structs).alias("p"))
-            # positional filter vs the containment requirement
-            # ⌈t·min(|A|,|B|)⌉ (−1e-9: the nudge only lowers the bar)
-            .where(
-                F.least("p.pa", "p.pb")
-                + 1
-                + F.least(
-                    F.col("p.sz_a") - F.col("p.pa") - 1,
-                    F.col("p.sz_b") - F.col("p.pb") - 1,
-                )
-                >= F.ceil(
-                    F.least("p.sz_a", "p.sz_b") * F.lit(t_eff) - F.lit(1e-9)
-                )
-            )
-            .select("p.id_a", "p.id_b")
-            .distinct()
-        )
-        ver = _verify_pairs(cand, docs, id_col)
-        c_ab = F.round(F.col("common") / F.col("sz_a"), 6)
-        c_ba = F.round(F.col("common") / F.col("sz_b"), 6)
-        return (
-            ver.withColumn("containment", F.greatest(c_ab, c_ba))
-            .withColumn(
-                "direction",
-                F.when(c_ab == c_ba, F.lit("mutual"))
-                .when(c_ab > c_ba, F.lit("a_in_b"))
-                .otherwise(F.lit("b_in_a")),
-            )
-            .where(F.col("containment") >= threshold)
-            .select("id_a", "id_b", "containment", "direction")
-        )
-    sh = shingles(df, id_col, text_col, n).select(
-        F.col(id_col), portable_hash64(F.col("shingle")).alias("shingle")
-    )
-    lists = sh.groupBy("shingle").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    )
-    if max_df is not None:
-        lists = lists.where(F.size("ids") <= max_df)
-    # dual-consumer relation (sz_a and sz_b join sides): uncached, each
-    # side re-ran the explode+groupBy pass over the cached lists — two
-    # extra corpus-lists passes at scale, ~0.5 s at sf0.1 (r12). The
-    # relation is one compact (id, sz) row per document.
-    sizes = (
-        lists.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    pair_structs = F.expr(
-        "flatten(transform(ids, (a, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), "
-        "b -> struct(a AS id_a, b AS id_b))))"
-    )
-    common = (
-        lists.where(F.size("ids") >= 2)
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sza = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    c_ab = F.round(F.col("common") / F.col("sz_a"), 6)
-    c_ba = F.round(F.col("common") / F.col("sz_b"), 6)
-    return (
-        common.join(sza, "id_a")
-        .join(szb, "id_b")
-        .withColumn("containment", F.greatest(c_ab, c_ba))
-        .withColumn(
-            "direction",
-            F.when(c_ab == c_ba, F.lit("mutual"))
-            .when(c_ab > c_ba, F.lit("a_in_b"))
-            .otherwise(F.lit("b_in_a")),
-        )
-        .where(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment", "direction")
+    return _containment_rows(
+        _overlap(df, id_col, text_col, n, threshold, max_df, "containment"),
+        threshold,
     )
 
 
@@ -723,7 +654,19 @@ def minhash_band_buckets(
     text). Shared by :func:`minhash_lsh_pairs` (self-join) and
     :func:`incremental_near_dedup` (batch-vs-store join). Pass ``sigs``
     (a :func:`minhash_signatures` result) to reuse an already-built
-    signature frame instead of recomputing the shingle pipeline."""
+    signature frame instead of recomputing the shingle pipeline.
+
+    Raises ``ValueError`` unless ``1 ≤ bands ≤ num_perm ≤
+    len(MINHASH_PERMS)`` and ``bands`` divides ``num_perm``: every band
+    takes ``num_perm // bands`` whole rows of the signature."""
+    if not (
+        1 <= bands <= num_perm <= len(MINHASH_PERMS) and num_perm % bands == 0
+    ):
+        raise ValueError(
+            f"minhash banding needs 1 <= bands <= num_perm <= "
+            f"{len(MINHASH_PERMS)} with bands dividing num_perm, got "
+            f"num_perm={num_perm}, bands={bands}"
+        )
     rows_per_band = num_perm // bands
     sig = (
         sigs
@@ -809,7 +752,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     sigs: DataFrame | None = None,
-    band_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
@@ -817,24 +759,18 @@ def minhash_lsh_pairs(
     any band land in the same bucket and become a candidate pair. With
     r = num_perm/bands rows per band, P(candidate) = 1-(1-s^r)^bands — the
     standard S-curve. Bucket join is per (band, signature) — never N².
+    Banding parameters are checked as in :func:`minhash_band_buckets`.
     """
     # one (doc, band) row per band — tiny; persisted because the bucket
     # self-join reads it twice (else the whole minhash pipeline runs 2×).
     # Plain persist, deliberately NOT pre-repartitioned on the join key:
-    # the round-4 repartition("band","bucket")-before-persist variant
-    # forced a full-width shuffle + cache of this tiny relation and
-    # measured 1.34× slower (and far noisier) than plain persist in the
-    # driver-style min-of-n harness; AQE plans the self-join fine from
-    # the unpartitioned cache. On a real cluster feeding a LARGE corpus,
-    # a sized repartition(n, "band", "bucket") with n ∝ input bytes is
-    # the scale knob — exposed as ``band_partitions`` (None = off; at
-    # bench scale it measured pure overhead, see SCALING.md round-7 A/B).
+    # a sized repartition("band", "bucket")-before-persist forced a
+    # full-width shuffle + cache of this tiny relation and measured 1.34×
+    # slower in round 4 and 1.25× slower in round 7 (SCALING.md); AQE
+    # plans the self-join fine from the unpartitioned cache.
     band_sigs = minhash_band_buckets(
         df, id_col, text_col, num_perm, bands, shingle_n, sigs=sigs
-    )
-    if band_partitions:
-        band_sigs = band_sigs.repartition(band_partitions, "band", "bucket")
-    band_sigs = band_sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     a = band_sigs.alias("a")
     b = band_sigs.alias("b")
     return (

@@ -1019,8 +1019,9 @@ def bm25_search(
     # finding as hybrid_rerank's max_bm25 branch). One narrow
     # (id, dl) row per document. Cache lifetime: the block lives for
     # the session (MEMORY_AND_DISK, evicted under pressure) — same
-    # per-call contract as ngram_doc_lists; query-loop callers that
-    # care should spark.catalog.clearCache() between batches.
+    # per-call contract as the n-gram overlap plans in dedup.py;
+    # query-loop callers that care should spark.catalog.clearCache()
+    # between batches.
     lens = df.select(
         F.col(id_col), token_count(F.col(text_col)).alias("dl")
     ).persist(StorageLevel.MEMORY_AND_DISK)

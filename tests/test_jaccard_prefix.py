@@ -1,8 +1,9 @@
 """Pinned equivalence: AllPairs/PPJoin prefix-filtered jaccard/containment
-vs the legacy bucket-count plan vs an independent pure-Python oracle.
+vs the bucket-count plan vs an independent pure-Python oracle.
 
-The prefix filter (dedup.ngram_jaccard_pairs prefix_filter=True) must be
-LOSSLESS — identical final pair sets and similarity values at every
+Both plans are called directly (dedup._prefix_overlap and
+dedup._bucket_overlap), whatever plan the threshold would pick. The
+prefix filter must be LOSSLESS — identical final pair sets and similarity values at every
 threshold — while emitting strictly fewer candidate pairs at selective
 thresholds (that reduction is the point: SCALING.md's measured 26 GB
 candidate shuffle at 5M docs is the operator's scale driver).
@@ -129,24 +130,28 @@ def corpus_df(spark):
 THRESHOLDS = [0.12, 1 / 3, 0.5, 0.8, 0.95]
 
 
+def _by_plan(df, threshold, max_df, measure):
+    """The measure's rows from each plan: (prefix, bucket-count)."""
+    rows = {
+        "jaccard": dedup_mod._jaccard_rows,
+        "containment": dedup_mod._containment_rows,
+    }[measure]
+    prefix = dedup_mod._prefix_overlap(
+        df, "doc_id", "text", 3, threshold, max_df, measure
+    )
+    bucket = dedup_mod._bucket_overlap(df, "doc_id", "text", 3, max_df)
+    return rows(prefix, threshold), rows(bucket, threshold)
+
+
 @pytest.mark.parametrize("threshold", THRESHOLDS)
 @pytest.mark.parametrize("max_df", [None, 8])
 def test_jaccard_prefix_equals_legacy_and_oracle(corpus_df, threshold, max_df):
     corpus, df = corpus_df
     expected = _py_pairs(corpus, threshold, max_df, mode="jaccard")
-    got_prefix = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            df, threshold=threshold, max_df=max_df, prefix_filter=True
-        ).collect()
-    }
-    got_legacy = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            df, threshold=threshold, max_df=max_df, prefix_filter=False
-        ).collect()
-    }
-    assert got_prefix == got_legacy == expected
+    prefix, bucket = _by_plan(df, threshold, max_df, "jaccard")
+    got_prefix = {(r.id_a, r.id_b): r.jaccard for r in prefix.collect()}
+    got_bucket = {(r.id_a, r.id_b): r.jaccard for r in bucket.collect()}
+    assert got_prefix == got_bucket == expected
 
 
 @pytest.mark.parametrize("threshold", [0.3, 0.8, 0.95])
@@ -156,19 +161,16 @@ def test_containment_prefix_equals_legacy_and_oracle(
 ):
     corpus, df = corpus_df
     expected = _py_pairs(corpus, threshold, max_df, mode="containment")
+    prefix, bucket = _by_plan(df, threshold, max_df, "containment")
     got_prefix = {
         (r.id_a, r.id_b): (r.containment, r.direction)
-        for r in containment_pairs(
-            df, threshold=threshold, max_df=max_df, prefix_filter=True
-        ).collect()
+        for r in prefix.collect()
     }
-    got_legacy = {
+    got_bucket = {
         (r.id_a, r.id_b): (r.containment, r.direction)
-        for r in containment_pairs(
-            df, threshold=threshold, max_df=max_df, prefix_filter=False
-        ).collect()
+        for r in bucket.collect()
     }
-    assert got_prefix == got_legacy == expected
+    assert got_prefix == got_bucket == expected
 
 
 def test_prefix_emission_is_a_strict_reduction(corpus_df, spark):
@@ -186,33 +188,26 @@ def test_prefix_emission_is_a_strict_reduction(corpus_df, spark):
         F.explode(F.expr("slice(set_, 1, plen)"))
     ).count()
     assert prefix_rows < full_rows
-    # candidate pairs: prefix-bucket pairs vs full-bucket pairs
-    def bucket_pairs(rows_df):
-        return (
-            rows_df.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(F.sum(F.col("c") * (F.col("c") - 1) / 2))
-            .collect()[0][0]
-        )
-
-    full = bucket_pairs(
-        docs.select("doc_id", F.explode("set_").alias("shingle"))
+    # candidate pairs: the full buckets' c*(c-1)/2 pairs (what the
+    # bucket-count plan explodes) vs the prefix stage's emitted rows
+    full = (
+        docs.select(F.explode("set_").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .select(F.sum(F.col("c") * (F.col("c") - 1) / 2))
+        .collect()[0][0]
     )
-    pruned = bucket_pairs(
-        docs.select(
-            "doc_id", F.explode(F.expr("slice(set_, 1, plen)")).alias("shingle")
-        )
-    )
+    pruned = dedup_mod._prefix_emissions(docs, "doc_id", "jaccard").count()
     assert pruned < full
     # sanity: the reduction is material on this stopword-heavy corpus
     assert pruned <= full * 0.75
 
 
 def test_prefix_auto_selection_by_threshold(corpus_df):
-    """prefix_filter=None resolves by the measured volume model:
-    jaccard ≥ 0.5 / containment ≥ 0.75 run the prefix plan (its verify
-    stage shows array_intersect in the optimized plan), lower thresholds
-    run the legacy bucket-count plan. Explicit True/False still force."""
+    """The threshold alone picks the plan: jaccard ≥ 0.5 / containment
+    ≥ 0.75 run the prefix plan (its verify stage shows array_intersect
+    in the optimized plan), lower thresholds run the bucket-count
+    plan."""
     _, df = corpus_df
 
     def plan(q):
@@ -222,14 +217,50 @@ def test_prefix_auto_selection_by_threshold(corpus_df):
     assert "array_intersect" not in plan(
         ngram_jaccard_pairs(df, threshold=0.12)
     )
-    assert "array_intersect" in plan(
-        ngram_jaccard_pairs(df, threshold=0.12, prefix_filter=True)
-    )
     assert "array_intersect" in plan(containment_pairs(df, threshold=0.75))
     assert "array_intersect" not in plan(containment_pairs(df, threshold=0.3))
-    assert "array_intersect" in plan(
-        containment_pairs(df, threshold=0.3, prefix_filter=True)
-    )
+
+
+@pytest.mark.parametrize(
+    "fn, kwargs",
+    [
+        # max_df=0 on each plan: bucket-count (jaccard 0.1, containment
+        # 0.3) and prefix (jaccard 0.6)
+        (ngram_jaccard_pairs, {"threshold": 0.1, "max_df": 0}),
+        (containment_pairs, {"threshold": 0.3, "max_df": 0}),
+        (ngram_jaccard_pairs, {"threshold": 0.6, "max_df": 0}),
+        (ngram_jaccard_pairs, {"threshold": 1.5}),
+        (containment_pairs, {"threshold": 1.5}),
+        (ngram_jaccard_pairs, {"threshold": -0.1}),
+        (containment_pairs, {"threshold": float("nan")}),
+    ],
+)
+def test_overlap_rejects_bad_parameters(corpus_df, fn, kwargs):
+    """Out-of-range max_df or threshold raises on either plan instead of
+    silently returning no rows."""
+    _, df = corpus_df
+    with pytest.raises(ValueError, match="max_df|threshold"):
+        fn(df, **kwargs)
+
+
+def test_overlap_accepts_parameter_bounds(corpus_df):
+    """Thresholds 0 and 1 and max_df=1 are in range on both measures."""
+    corpus, df = corpus_df
+    for t, max_df in ((0.0, None), (1.0, None), (0.3, 1)):
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in ngram_jaccard_pairs(
+                df, threshold=t, max_df=max_df
+            ).collect()
+        }
+        assert got == _py_pairs(corpus, t, max_df, mode="jaccard")
+        got = {
+            (r.id_a, r.id_b): (r.containment, r.direction)
+            for r in containment_pairs(
+                df, threshold=t, max_df=max_df
+            ).collect()
+        }
+        assert got == _py_pairs(corpus, t, max_df, mode="containment")
 
 
 def test_positional_filter_prunes_candidates(corpus_df, spark):
@@ -239,53 +270,15 @@ def test_positional_filter_prunes_candidates(corpus_df, spark):
     late in the larger doc), while the final pair set stays equal — the
     equality half is already pinned by the oracle tests above, so this
     pins the pruning half as an inequality."""
-    from pyspark.sql import functions as F
-
     corpus, df = corpus_df
-    t = 0.8
-    t_eff = t - 1e-6
+    t_eff = 0.8 - 1e-6
     docs = dedup_mod._prefix_doc_sets(df, "doc_id", "text", 3, t_eff, None)
-    pre = docs.select(
-        F.col("doc_id").alias("id"),
-        "sz",
-        F.posexplode(F.expr("slice(set_, 1, plen)")).alias("pos", "shingle"),
-    )
-    pair_structs = F.expr(
-        "flatten(transform(m, (a, i) -> "
-        "transform(slice(m, i + 2, size(m) - i - 1), "
-        "b -> struct(a.id AS id_a, b.id AS id_b, a.sz AS sz_a, "
-        "b.sz AS sz_b, a.pos AS pa, b.pos AS pb))))"
-    )
-    emitted = (
-        pre.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("id"), F.col("sz"), F.col("pos")))
-            ).alias("m")
-        )
-        .where(F.size("m") >= 2)
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.*")
-        .where(
-            F.least("sz_a", "sz_b")
-            >= F.greatest("sz_a", "sz_b") * F.lit(t_eff) - F.lit(1e-9)
-        )
+    emitted = dedup_mod._prefix_emissions(docs, "doc_id", "jaccard").where(
+        dedup_mod._length_ok(t_eff)
     )
     without_pos = emitted.select("id_a", "id_b").distinct().count()
-    req = F.ceil(
-        (F.col("sz_a") + F.col("sz_b")) * F.lit(t_eff / (1.0 + t_eff))
-        - F.lit(1e-9)
-    )
     with_pos = (
-        emitted.where(
-            F.least("pa", "pb")
-            + 1
-            + F.least(
-                F.col("sz_a") - F.col("pa") - 1,
-                F.col("sz_b") - F.col("pb") - 1,
-            )
-            >= req
-        )
+        emitted.where(dedup_mod._positional_ok("jaccard", t_eff))
         .select("id_a", "id_b")
         .distinct()
         .count()
@@ -314,10 +307,11 @@ def test_prefix_random_fuzz(spark):
             corpus.append((24 + j, " ".join(base)))
         df = spark.createDataFrame(corpus, ["doc_id", "text"])
         expected = _py_pairs(corpus, 0.4, None, mode="jaccard")
+        prefix = dedup_mod._prefix_overlap(
+            df, "doc_id", "text", 3, 0.4, None, "jaccard"
+        )
         got = {
             (r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(
-                df, threshold=0.4, prefix_filter=True
-            ).collect()
+            for r in dedup_mod._jaccard_rows(prefix, 0.4).collect()
         }
         assert got == expected, f"seed {seed}"

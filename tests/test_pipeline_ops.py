@@ -89,24 +89,45 @@ def test_minhash_matches_bruteforce_jaccard(docs):
     assert true_pairs <= cands
 
 
-def test_minhash_band_partitions_same_pairs(docs):
-    """The sized repartition(n, band, bucket) scale knob (SCALING.md r7
-    A/B) must be plan-only: identical candidate pairs at any partition
-    count, including a hostile odd one."""
-    from dask_sql_spark.operators.dedup import minhash_lsh_pairs
+@pytest.mark.parametrize(
+    "num_perm, bands",
+    [(33, 1), (32, 33), (16, 17), (16, 0), (4, 8), (16, 5)],
+)
+def test_minhash_banding_rejects_bad_parameters(docs, num_perm, bands):
+    """Banding needs 1 <= bands <= num_perm <= 32 (the fixed permutation
+    table) with bands dividing num_perm; every entry point checks it
+    before building a plan, instead of failing late in the parser or
+    silently dropping permutations."""
+    from dask_sql_spark.operators.dedup import (
+        incremental_near_dedup,
+        minhash_band_buckets,
+        minhash_lsh_pairs,
+        pair_evidence,
+    )
 
-    base = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, num_perm=16, bands=8).collect()
-    }
-    for n in (1, 7):
-        got = {
-            (r.id_a, r.id_b)
-            for r in minhash_lsh_pairs(
-                docs, num_perm=16, bands=8, band_partitions=n
-            ).collect()
-        }
-        assert got == base
+    for build in (
+        lambda: minhash_band_buckets(docs, num_perm=num_perm, bands=bands),
+        lambda: minhash_lsh_pairs(docs, num_perm=num_perm, bands=bands),
+        lambda: pair_evidence(docs, num_perm=num_perm, bands=bands),
+        lambda: incremental_near_dedup(
+            docs, docs.limit(0), num_perm=num_perm, bands=bands
+        ),
+    ):
+        with pytest.raises(ValueError, match="bands"):
+            build()
+
+
+@pytest.mark.parametrize("num_perm, bands", [(32, 1), (32, 32), (16, 16)])
+def test_minhash_banding_accepts_bounds(docs, num_perm, bands):
+    """The banding bounds themselves are valid: every doc with shingles
+    gets exactly ``bands`` buckets."""
+    from dask_sql_spark.operators.dedup import minhash_band_buckets
+
+    rows = minhash_band_buckets(docs, num_perm=num_perm, bands=bands).collect()
+    per_doc = {}
+    for r in rows:
+        per_doc.setdefault(r.doc_id, set()).add(r.band)
+    assert per_doc and all(b == set(range(bands)) for b in per_doc.values())
 
 
 def test_simhash_hamming(docs):
@@ -2600,22 +2621,6 @@ def test_score_wrappers_preserve_caller_columns(docs):
     assert "caller-owned" not in {r.lang_guess for r in relabel.collect()}
 
 
-def test_ngram_jaccard_lists_with_max_df_raises(docs):
-    """max_df is applied when BUILDING the shingle→doc lists; passing it
-    alongside a caller-supplied lists= relation is a loud error, not a
-    silent no-op."""
-    import pytest
-
-    from dask_sql_spark.operators.dedup import (
-        ngram_doc_lists,
-        ngram_jaccard_pairs,
-    )
-
-    built = ngram_doc_lists(docs)
-    with pytest.raises(ValueError, match="max_df"):
-        ngram_jaccard_pairs(docs, lists=built, max_df=100)
-
-
 def test_resample_fill_null_ts_excluded(spark):
     """NULL-ts events are dropped up front (the spine-join semantics this
     plan replaced): they create no buckets and never seed the forward
@@ -2652,29 +2657,6 @@ def test_score_wrappers_replace_existing_columns(docs):
     }
     lg = add_langid(add_langid(docs))
     assert lg.columns.count("lang_guess") == 1
-
-
-def test_ngram_doc_lists_passthrough(docs):
-    """ngram_jaccard_pairs(lists=...) matches the self-built path, giving
-    callers cache-lifecycle control over the persisted intermediate."""
-    from dask_sql_spark.operators.dedup import (
-        ngram_doc_lists,
-        ngram_jaccard_pairs,
-    )
-
-    built = ngram_doc_lists(docs).persist()
-    via = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.3, lists=built
-        ).collect()
-    }
-    auto = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, threshold=0.3).collect()
-    }
-    built.unpersist()
-    assert via == auto and via
 
 
 def test_degenerate_docs_never_pair(spark):

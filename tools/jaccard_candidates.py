@@ -5,14 +5,17 @@ For a given sf_dir + threshold + max_df, reports the candidate-PAIR row
 count each plan materializes into its quadratic stage:
 
 - legacy: sum over shingle buckets of c*(c-1)/2 (post max_df) — exactly
-  the rows the in-row pair explode emits into the groupBy(id_a,id_b)
-  shuffle (SCALING.md's measured 26 GB stage at sf100);
-- prefix: the same count over PREFIX-token buckets, after the length
-  filter — the rows the pruned plan emits into its distinct.
+  the rows the bucket-count plan's in-row pair explode emits into its
+  groupBy(id_a,id_b) shuffle (SCALING.md's measured 26 GB stage at sf100);
+- prefix: the rows the prefix plan's emission stage
+  (dedup._prefix_emissions) passes through the length filter, and
+  (prefix_pairs_pos) through the positional filter too — the rows the
+  pruned plan feeds its distinct.
 
 Counting evaluates the explode but aggregates in place (no pair
 shuffle), so this measures volume without paying the reduce side.
-Optionally (--wall) also runs each full path end-to-end and reports
+Optionally (--wall) also runs each plan function end-to-end at the
+given threshold, whatever plan the threshold would pick, and reports
 wall-clock; use on SFs where both are feasible.
 
 Usage:
@@ -71,76 +74,28 @@ def main() -> int:
     t0 = time.time()
     pdocs = dd._prefix_doc_sets(docs_df, "doc_id", "text", 3, t_eff, max_df)
     pdocs.persist()
-    out["prefix_doc_build_sec"] = None  # filled after first action below
-
-    def bucket_pairs(rows):
-        return (
-            rows.groupBy("shingle")
+    if not prefix_only:
+        out["legacy_pairs"] = int(
+            pdocs.select(F.explode("set_").alias("shingle"))
+            .groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("c"))
-            .select(
-                F.sum((F.col("c") * (F.col("c") - 1) / 2).cast("double"))
-            )
+            .select(F.sum((F.col("c") * (F.col("c") - 1) / 2).cast("double")))
             .collect()[0][0]
             or 0
         )
-
-    if not prefix_only:
-        out["legacy_pairs"] = int(
-            bucket_pairs(
-                pdocs.select("doc_id", F.explode("set_").alias("shingle"))
-            )
-        )
     out["prefix_doc_build_sec"] = round(time.time() - t0, 1)
 
-    # prefix candidates WITH the length filter: evaluate the real pair
-    # explode, aggregate to a count in place
+    # the plan's own emission stage and filters, counted in place
     t0 = time.time()
-    pre = pdocs.select(
-        F.col("doc_id").alias("id"),
-        "sz",
-        F.posexplode(F.expr("slice(set_, 1, plen)")).alias("pos", "shingle"),
-    )
-    pair_structs = F.expr(
-        "flatten(transform(m, (a, i) -> "
-        "transform(slice(m, i + 2, size(m) - i - 1), "
-        "b -> struct(a.sz AS sz_a, b.sz AS sz_b, "
-        "a.pos AS pa, b.pos AS pb))))"
-    )
     emitted = (
-        pre.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("id"), F.col("sz"), F.col("pos"))
-                )
-            ).alias("m")
-        )
-        .where(F.size("m") >= 2)
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.*")
-        .where(
-            F.least("sz_a", "sz_b")
-            >= F.greatest("sz_a", "sz_b") * F.lit(t_eff) - F.lit(1e-9)
-        )
+        dd._prefix_emissions(pdocs, "doc_id", "jaccard")
+        .where(dd._length_ok(t_eff))
         .persist()
     )
     out["prefix_pairs"] = emitted.count()
-    # after the PPJoin positional filter — the shipped emission
-    req = F.ceil(
-        (F.col("sz_a") + F.col("sz_b")) * F.lit(t_eff / (1.0 + t_eff))
-        - F.lit(1e-9)
-    )
-    out["prefix_pairs_pos"] = (
-        emitted.where(
-            F.least("pa", "pb")
-            + 1
-            + F.least(
-                F.col("sz_a") - F.col("pa") - 1,
-                F.col("sz_b") - F.col("pb") - 1,
-            )
-            >= req
-        ).count()
-    )
+    out["prefix_pairs_pos"] = emitted.where(
+        dd._positional_ok("jaccard", t_eff)
+    ).count()
     emitted.unpersist()
     out["prefix_count_sec"] = round(time.time() - t0, 1)
     if out.get("legacy_pairs"):
@@ -148,16 +103,19 @@ def main() -> int:
     pdocs.unpersist()
 
     if wall:
-        for name, flag in (("prefix", True), ("legacy", False)):
-            if prefix_only and not flag:
+        plans = {
+            "prefix": lambda: dd._prefix_overlap(
+                docs_df, "doc_id", "text", 3, threshold, max_df, "jaccard"
+            ),
+            "legacy": lambda: dd._bucket_overlap(
+                docs_df, "doc_id", "text", 3, max_df
+            ),
+        }
+        for name, plan in plans.items():
+            if prefix_only and name == "legacy":
                 continue
             t0 = time.time()
-            n = dd.ngram_jaccard_pairs(
-                docs_df,
-                threshold=threshold,
-                max_df=max_df,
-                prefix_filter=flag,
-            ).count()
+            n = dd._jaccard_rows(plan(), threshold).count()
             out[f"{name}_wall_sec"] = round(time.time() - t0, 1)
             out[f"{name}_result_pairs"] = n
     print(json.dumps(out))
