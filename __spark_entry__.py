@@ -7972,7 +7972,7 @@ def _unigram_lm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity quality screen (text.unigram_lm_bits):
     bits/token under the corpus's own add-alpha unigram LM. One
     explode+groupBy, corpus counts as a window over the aggregate,
-    decimal-routed reduction."""
+    per-term bits summed as BIGINT nano-units."""
     from dask_sql_spark.operators.text import unigram_lm_bits
 
     return unigram_lm_bits(_table(spark, sf_dir, "documents"))
@@ -8089,7 +8089,7 @@ SELECT lang, doc_id, alloc FROM ranked WHERE rn <= alloc
 def _bm25_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 corpus search (text.bm25_search): explode stream
     filtered to query terms pre-shuffle, broadcast corpus stats,
-    decimal-routed per-term sum, deterministic top-k."""
+    per-term scores summed as BIGINT nano-units, deterministic top-k."""
     from dask_sql_spark.operators.text import bm25_search
 
     return bm25_search(

@@ -604,8 +604,14 @@ def minhash_signatures(
     un-inlined (non-cheap expression consumed num_perm times), so the
     md5 pass still runs once per shingle, not once per permutation.
     Docs with zero non-empty shingles are absent, exactly like the
-    groupBy form.
+    groupBy form. Raises ``ValueError`` unless ``1 ≤ num_perm ≤
+    len(MINHASH_PERMS)``.
     """
+    if not 1 <= num_perm <= len(MINHASH_PERMS):
+        raise ValueError(
+            f"minhash needs 1 <= num_perm <= {len(MINHASH_PERMS)}, got "
+            f"num_perm={num_perm}"
+        )
     # the empty-doc screen sits AT THE SCAN on the token array (a doc
     # yields zero shingles iff it has zero non-empty tokens — keep_short
     # grams of 1-2 token docs are non-empty concats). Filtering later on
@@ -640,6 +646,17 @@ def minhash_signatures(
     )
 
 
+def _check_banding(num_perm: int, bands: int) -> None:
+    if not (
+        1 <= bands <= num_perm <= len(MINHASH_PERMS) and num_perm % bands == 0
+    ):
+        raise ValueError(
+            f"minhash banding needs 1 <= bands <= num_perm <= "
+            f"{len(MINHASH_PERMS)} with bands dividing num_perm, got "
+            f"num_perm={num_perm}, bands={bands}"
+        )
+
+
 def minhash_band_buckets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -659,14 +676,7 @@ def minhash_band_buckets(
     Raises ``ValueError`` unless ``1 ≤ bands ≤ num_perm ≤
     len(MINHASH_PERMS)`` and ``bands`` divides ``num_perm``: every band
     takes ``num_perm // bands`` whole rows of the signature."""
-    if not (
-        1 <= bands <= num_perm <= len(MINHASH_PERMS) and num_perm % bands == 0
-    ):
-        raise ValueError(
-            f"minhash banding needs 1 <= bands <= num_perm <= "
-            f"{len(MINHASH_PERMS)} with bands dividing num_perm, got "
-            f"num_perm={num_perm}, bands={bands}"
-        )
+    _check_banding(num_perm, bands)
     rows_per_band = num_perm // bands
     sig = (
         sigs
@@ -1207,6 +1217,9 @@ def pair_evidence(
     pass, never all-pairs. n_match/num_perm is a dyadic ratio —
     cross-engine exact with num_perm a power of two.
     """
+    # the banding error covers num_perm too: raise it before the
+    # signatures are built and persisted
+    _check_banding(num_perm, bands)
     # ONE signature build feeds both the band-bucket pair join and the
     # per-pair agreement counts (persisted: two consumers)
     sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_n).persist(

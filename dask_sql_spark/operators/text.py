@@ -83,6 +83,68 @@ def word_ngrams(toks: Column, n: int, keep_short: bool = False) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _term_counts(
+    df: DataFrame, items: Column, keys: tuple[str, ...] = (),
+    where: Column | None = None, term: str = "term", count: str = "tf",
+    fields: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one explode-and-count stage of the text measures: explode the
+    array ``items`` to ``term`` rows, keep those ``where`` holds, and
+    count per (``keys``, ``term``) as ``count``. ``fields`` flattens an
+    array of structs and groups on those fields instead (bigram p, c).
+
+    Map-side partial combine collapses repeats before the shuffle, so
+    the exchange carries distinct (key, term) partial counts, not raw
+    tokens, and a ``where`` prunes rows before it. Corpus statistics
+    (df, corpus and context counts) are windows over this aggregate,
+    not a second explode pass (a join form planned two corpus scans:
+    Catalyst cannot reuse the exchange once column pruning diverges);
+    corpus totals ride as a broadcast 1-row cross join, never a driver
+    count. No ``ensure_parallelism``: each caller partitions as it needs.
+    """
+    rows = df.select(*keys, F.explode(items).alias(term))
+    if fields:
+        rows = rows.select(
+            *keys, *[F.col(f"{term}.{f}").alias(f) for f in fields]
+        )
+    if where is not None:
+        rows = rows.where(where)
+    return rows.groupBy(*keys, *(fields or (term,))).agg(
+        F.count(F.lit(1)).alias(count)
+    )
+
+
+def _to_nano(x: Column) -> Column:
+    """``ROUND(x·10⁹) → BIGINT``: one IEEE op both engines resolve
+    identically, so a BIGINT sum of the result is exact and
+    order-independent where a double sum is not (libm log last-ulp
+    noise collapses at 9 digits)."""
+    return F.round(x * 1000000000).cast("long")
+
+
+def _from_nano(total: Column) -> Column:
+    """A :func:`_to_nano` sum back to a double."""
+    return total.cast("double") / 1000000000.0
+
+
+def _mean_bits(
+    scored: DataFrame, id_col: str, bits: str, n: str, out: str,
+    round_digits: int,
+) -> DataFrame:
+    """Per-document ``(id, n, out)``: ``n`` sums ``tf`` and ``out`` is
+    the exact nano-unit sum of ``bits`` over ``n``, rounded."""
+    per_doc = scored.groupBy(id_col).agg(
+        F.sum("tf").alias(n), F.sum(bits).alias("sum_bits")
+    )
+    return per_doc.select(
+        id_col,
+        F.col(n).cast("bigint").alias(n),
+        F.round(
+            _from_nano(F.col("sum_bits")) / F.col(n), round_digits
+        ).alias(out),
+    )
+
+
 def score_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Fused document scorer: token stats + quality signals + language
     guess appended in ONE ``withColumns`` call.
@@ -445,31 +507,20 @@ def tfidf_top_terms(
     score within rounding error — after rounding, such near-ties collapse
     to exact ties and the term tiebreak decides reproducibly.
 
-    Plan: ONE explode+groupBy computes term frequencies (map-side
-    combine collapses each doc's repeated tokens before the shuffle, so
-    the exchange carries distinct (doc, term) pairs, not raw tokens);
-    document frequency is a count window over that same aggregate —
-    keyed shuffles of the small distinct-pairs relation instead of a
-    second explode pass over the corpus (the join formulation planned
-    two full scans: Catalyst can't reuse the exchange once column
-    pruning diverges). The corpus size N rides along as a broadcast
-    1-row cross join — no driver-side count.
+    tf comes from :func:`_term_counts`; df is a count window over it and
+    the corpus size N a broadcast 1-row cross join.
     """
     from pyspark.sql.window import Window
 
-    raw = df
-    df = ensure_parallelism(df)
-    tf = (
-        df.select(id_col, F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _term_counts(
+        ensure_parallelism(df), tokens(F.col(text_col)), (id_col,)
     )
     # N from the RAW input, not the ensure_parallelism frame: the count
     # branch needs no explode parallelism, and routing it through the
     # round-robin exchange re-shuffled every id for a 1-row count
     # (measured ~0.5 s at sf0.1; at scale it is a full pointless
     # repartition of the id column — guide §2.4, accidental exchange)
-    ndocs = raw.select(
+    ndocs = df.select(
         F.count_distinct(F.col(id_col)).alias("n_docs")
     )
     scored = (
@@ -558,11 +609,9 @@ def ngram_topk(
     n-grams across a crawl are navigation chrome, license banners, spam
     templates — and the input to frequent-phrase blocklists.
 
-    Plan shape: tokenize (narrow) → explode n-grams → ONE hash aggregate
-    (map-side partial combine collapses each executor's counts before the
-    shuffle) → top-k via TakeOrderedAndProject on (count DESC, gram ASC).
-    No self-joins, no windows; at 100 TB the shuffle carries only the
-    distinct-gram partial counts, not the exploded rows.
+    Plan shape: tokenize (narrow) → :func:`_term_counts` over the grams
+    → top-k via TakeOrderedAndProject on (count DESC, gram ASC). No
+    self-joins, no windows.
 
     The token array is bound to a column BEFORE the gram transform and
     grams are built by direct element access (same discipline as
@@ -573,9 +622,7 @@ def ngram_topk(
     base = df.select(tokens(F.col(text_col)).alias("_t"))
     grams = word_ngrams(F.col("_t"), n)
     return (
-        base.select(F.explode(grams).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
+        _term_counts(base, grams, term="gram", count="n_occurrences")
         .where(F.col("n_occurrences") >= min_count)
         .orderBy(F.col("n_occurrences").desc(), F.col("gram"))
         .limit(k)
@@ -592,10 +639,8 @@ def bpe_pair_counts(
     frequent, repeat). Output: the ``k`` hottest word-internal character
     pairs as (pair, cnt), count-desc with a deterministic pair tie-break.
 
-    One explode + ONE hash aggregate: map-side partial combine collapses
-    each executor's pair counts to the (tiny) distinct-pair set before the
-    shuffle, so at 100 TB the shuffle carries ~|alphabet|² partial rows
-    per partition, not the exploded corpus. Each BPE merge iteration at
+    One :func:`_term_counts` stage, so the shuffle carries
+    ~|alphabet|² partial rows per partition. Each BPE merge iteration at
     scale is exactly this job re-run over the re-tokenized symbol column;
     pairs spanning whitespace are dropped (BPE merges never cross
     pre-tokenization boundaries).
@@ -604,11 +649,12 @@ def bpe_pair_counts(
     t = F.lower(F.col(text_col))
     idx = F.sequence(F.lit(1), F.greatest(F.char_length(t) - 1, F.lit(1)))
     pairs = F.transform(idx, lambda i: t.substr(i, F.lit(2)))
+    pair = F.col("pair")
     return (
-        df.select(F.explode(pairs).alias("pair"))
-        .where((F.char_length(F.col("pair")) == 2) & ~F.col("pair").contains(" "))
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        _term_counts(
+            df, pairs, where=(F.char_length(pair) == 2) & ~pair.contains(" "),
+            term="pair", count="cnt",
+        )
         .orderBy(F.col("cnt").desc(), F.col("pair"))
         .limit(k)
     )
@@ -624,7 +670,7 @@ def bpe_learn_merges(
     words (merges never cross pre-tokenization boundaries), each word
     becomes a space-joined character-symbol string, and every round runs
 
-    1. ONE map-side-combined pair-count aggregate over the corpus,
+    1. ONE :func:`_term_counts` pair-count stage over the corpus,
     2. the argmax pair to the driver (two short strings — metadata scale,
        the same driver traffic every BPE trainer has),
     3. a boundary-guarded ``regexp_replace`` rewrite of the symbol strings
@@ -654,10 +700,10 @@ def bpe_learn_merges(
             # and the contains(" ") filter below discards the row
         )
         top = (
-            syms.select(F.explode(pairs).alias("p"))
-            .where(F.col("p").contains(" "))  # 1-symbol words emit no pair
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+            _term_counts(
+                syms, pairs, where=F.col("p").contains(" "), term="p",
+                count="cnt",
+            )
             .orderBy(F.col("cnt").desc(), F.col("p").asc())
             .limit(1)
             .collect()
@@ -729,18 +775,13 @@ def add_unigram_entropy(
     flags repetitive/templated/spammy text that ratio heuristics miss;
     the standard complement to repetition_signals.
 
-    Computed as ``log2(n) - sum(c·log2(c))/n`` over per-term counts c,
-    which needs only ONE explode + (doc, term) aggregate — map-side
-    combine collapses repeats before the shuffle — plus a per-doc
-    aggregate. Rounded before output: libm log differs in the last ulp
-    across engines, and 6 decimals collapses that noise (same
-    discipline as tfidf_top_terms).
+    Computed as ``log2(n) - sum(c·log2(c))/n`` over the per-term counts
+    c of :func:`_term_counts`, plus a per-doc aggregate. Rounded before
+    output: libm log differs in the last ulp across engines, and 6
+    decimals collapses that noise (same discipline as tfidf_top_terms).
     """
-    df = ensure_parallelism(df)
-    tf = (
-        df.select(id_col, F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("c"))
+    tf = _term_counts(
+        ensure_parallelism(df), tokens(F.col(text_col)), (id_col,), count="c"
     )
     per_doc = tf.groupBy(id_col).agg(
         F.sum("c").alias("n"),
@@ -764,18 +805,15 @@ def vocab_coverage(
     terms by corpus frequency, what fraction of all token occurrences
     is covered? The sizing tool for tokenizer vocab / OOV-rate budgets.
 
-    One explode+term aggregate (map-side combined), a rank window over
-    the distinct-term relation (small — vocabulary-sized, not
-    corpus-sized), and a two-row final aggregate. Returns one row:
+    Corpus term counts from :func:`_term_counts`, a rank window over
+    that vocabulary-sized relation, and a two-row final aggregate.
+    Returns one row:
     (vocab_size, n_terms, corpus_tokens, covered_tokens, coverage).
     """
     from pyspark.sql.window import Window
 
-    df = ensure_parallelism(df)
-    tf = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
+    tf = _term_counts(
+        ensure_parallelism(df), tokens(F.col(text_col)), count="c"
     )
     ranked = tf.withColumn(
         "r",
@@ -842,26 +880,16 @@ def unigram_lm_bits(
     ``bits(doc) = sum_t tf_t · -log2((cnt_t + α) / (T + α·V)) / n_doc``
     where cnt_t is the corpus count of term t, T total tokens, V vocab.
 
-    Plan: ONE explode + (doc, term) groupBy builds tf with map-side
-    combine; corpus term counts are a SUM window over that same
-    aggregate (keyed reshuffle of the distinct-pairs relation — no
-    second corpus scan, same exchange-reuse trick as tfidf_top_terms);
-    corpus totals ride along as a broadcast 1-row cross join. The
-    per-(doc, term) bit contribution is scaled to integer nano-bits
-    (ROUND(x·10⁹) → BIGINT — one IEEE op both engines resolve
-    identically) then summed as BIGINT, so the reduction is
-    order-independent and engine-portable (libm log2 last-ulp noise
-    collapses at 9 digits).
+    tf comes from :func:`_term_counts`, cnt_t is a SUM window over it,
+    (T, V) a broadcast 1-row cross join, and the per-(doc, term) bits
+    sum exactly as nano-bits.
 
     Output: (id, n_tokens, bits_per_token).
     """
     from pyspark.sql.window import Window
 
-    df = ensure_parallelism(df)
-    tf = (
-        df.select(id_col, F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _term_counts(
+        ensure_parallelism(df), tokens(F.col(text_col)), (id_col,)
     )
     totals = tf.agg(
         F.sum("tf").alias("total"),
@@ -874,28 +902,17 @@ def unigram_lm_bits(
         .crossJoin(F.broadcast(totals))
         .withColumn(
             "term_bits",
-            F.round(
+            _to_nano(
                 F.col("tf")
                 * -F.log2(
                     (F.col("cnt") + F.lit(alpha))
                     / (F.col("total") + F.lit(alpha) * F.col("vocab"))
                 )
-                * 1000000000
-            ).cast("long"),
+            ),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
-        F.sum("tf").alias("n_tokens"),
-        F.sum("term_bits").alias("sum_bits"),
-    )
-    return per_doc.select(
-        id_col,
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.round(
-            F.col("sum_bits").cast("double") / 1000000000.0
-            / F.col("n_tokens"),
-            round_digits,
-        ).alias("bits_per_token"),
+    return _mean_bits(
+        scored, id_col, "term_bits", "n_tokens", "bits_per_token", round_digits
     )
 
 
@@ -916,12 +933,9 @@ def bigram_lm_bits(
     with c(u,w) the corpus bigram count, c(u,·) the context total and V
     the unigram vocabulary size.
 
-    Plan: ONE bigram explode + (doc, prev, cur) groupBy with map-side
-    combine; corpus bigram and context counts are two window sums over
-    that same aggregate (exchange reuse, no second scan); V rides along
-    as a broadcast 1-row cross join. Per-bigram bits scale to integer
-    nano-bits (ROUND(x·10⁹) → BIGINT) then sum exactly —
-    order-independent, engine-portable.
+    tf counts (doc, prev, cur) with :func:`_term_counts`; corpus bigram
+    and context counts are two window sums over it, V a broadcast 1-row
+    cross join, and the per-bigram bits sum exactly as nano-bits.
     Documents with fewer than two tokens have no bigrams and are absent
     from the output (same contract as the oracle).
     """
@@ -936,12 +950,9 @@ def bigram_lm_bits(
             F.element_at(toks, i + 1).alias("c"),
         ),
     )
-    tf = (
-        df.where(F.size(toks) >= 2)
-        .select(id_col, F.explode(bigrams).alias("bg"))
-        .select(id_col, F.col("bg.p").alias("p"), F.col("bg.c").alias("c"))
-        .groupBy(id_col, "p", "c")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _term_counts(
+        df.where(F.size(toks) >= 2), bigrams, (id_col,), term="bg",
+        fields=("p", "c"),
     )
     vocab = (
         df.select(F.explode(toks).alias("term"))
@@ -953,28 +964,17 @@ def bigram_lm_bits(
         .crossJoin(F.broadcast(vocab))
         .withColumn(
             "bg_bits",
-            F.round(
+            _to_nano(
                 F.col("tf")
                 * -F.log2(
                     (F.col("cnt") + F.lit(alpha))
                     / (F.col("ctx") + F.lit(alpha) * F.col("vocab"))
                 )
-                * 1000000000
-            ).cast("long"),
+            ),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
-        F.sum("tf").alias("n_bigrams"),
-        F.sum("bg_bits").alias("sum_bits"),
-    )
-    return per_doc.select(
-        id_col,
-        F.col("n_bigrams").cast("bigint").alias("n_bigrams"),
-        F.round(
-            F.col("sum_bits").cast("double") / 1000000000.0
-            / F.col("n_bigrams"),
-            round_digits,
-        ).alias("bits_per_bigram"),
+    return _mean_bits(
+        scored, id_col, "bg_bits", "n_bigrams", "bits_per_bigram", round_digits
     )
 
 
@@ -995,19 +995,22 @@ def bm25_search(
     ``score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·|d|/avgdl))``
     with ``idf(t) = ln(1 + (N − df_t + 0.5)/(df_t + 0.5))``.
 
-    Scale shape: the explode stream is filtered to the query's terms
-    BEFORE the shuffle, so the exchange carries only matching (doc, term)
-    pairs — cost proportional to hit count, not corpus size. Document
-    lengths come from a no-explode ``size(tokens)`` scan; corpus totals
-    ride as a broadcast 1-row cross join; df_t is a window over the
-    filtered aggregate. Per-term contributions scale to integer
-    nano-units (ROUND(x·10⁹) → BIGINT) then sum exactly
-    (order-independent), final score rounded with a doc-id tiebreak
-    for a deterministic top-k.
+    The query splits by the documents' rule (:func:`tokens`: lowercase,
+    ASCII whitespace only). tf is :func:`_term_counts` filtered to the
+    query's terms before the shuffle, so the exchange carries only
+    matching (doc, term) pairs — cost proportional to hit count, not
+    corpus size. Document lengths come from a no-explode
+    ``size(tokens)`` scan; df_t is a window over the filtered aggregate;
+    per-term contributions sum exactly as nano-units, and the final
+    score is rounded with a doc-id tiebreak for a deterministic top-k.
     """
     from pyspark.sql.window import Window
 
-    qterms = sorted({t for t in query.lower().strip().split() if t})
+    # Java's ``\s`` is ASCII whitespace only; Python's needs re.ASCII
+    # (``str.split`` would also split on NBSP and other Unicode spaces)
+    qterms = sorted(
+        set(filter(None, re.split(_WS, query.lower(), flags=re.ASCII)))
+    )
     if not qterms:
         raise ValueError("query must contain at least one token")
     from pyspark import StorageLevel
@@ -1028,11 +1031,9 @@ def bm25_search(
     stats = lens.agg(
         F.sum("dl").alias("total_dl"), F.count(F.lit(1)).alias("n_docs")
     )
-    tf = (
-        df.select(id_col, F.explode(tokens(F.col(text_col))).alias("term"))
-        .where(F.col("term").isin(qterms))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    tf = _term_counts(
+        df, tokens(F.col(text_col)), (id_col,),
+        where=F.col("term").isin(qterms),
     )
     scored = (
         tf.withColumn(
@@ -1051,15 +1052,14 @@ def bm25_search(
         )
         .withColumn(
             "term_score",
-            F.round(
+            _to_nano(
                 F.col("idf")
                 * (F.col("tf") * (k1 + 1.0))
                 / (
                     F.col("tf")
                     + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
                 )
-                * 1000000000
-            ).cast("long"),
+            ),
         )
     )
     per_doc = scored.groupBy(id_col).agg(
@@ -1070,9 +1070,7 @@ def bm25_search(
         per_doc.select(
             id_col,
             F.col("n_terms_hit").cast("bigint").alias("n_terms_hit"),
-            F.round(
-                F.col("s").cast("double") / 1000000000.0, round_digits
-            ).alias("score"),
+            F.round(_from_nano(F.col("s")), round_digits).alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)

@@ -130,6 +130,24 @@ def test_minhash_banding_accepts_bounds(docs, num_perm, bands):
     assert per_doc and all(b == set(range(bands)) for b in per_doc.values())
 
 
+@pytest.mark.parametrize("num_perm", [0, -1, 33])
+def test_minhash_signatures_rejects_bad_num_perm(docs, num_perm):
+    """num_perm must index the 32-entry permutation table: 33 used to
+    return 32 columns, 0 only the id and -1 31 columns, all silently."""
+    from dask_sql_spark.operators.dedup import minhash_signatures
+
+    with pytest.raises(ValueError, match="num_perm"):
+        minhash_signatures(docs, num_perm=num_perm)
+
+
+def test_minhash_signatures_accepts_full_table(docs):
+    from dask_sql_spark.operators.dedup import minhash_signatures
+
+    sig = minhash_signatures(docs, num_perm=32)
+    assert sig.columns == ["doc_id"] + [f"mh{i}" for i in range(32)]
+    assert sig.count() == 8
+
+
 def test_simhash_hamming(docs):
     from dask_sql_spark.operators.dedup import simhash, simhash_pairs
 
@@ -1917,6 +1935,22 @@ def test_bm25_search_empty_query_raises(spark):
 
     with _pytest.raises(ValueError):
         bm25_search(df, "   ")
+
+
+def test_bm25_query_splits_like_documents(spark):
+    """The query splits on ASCII whitespace only, as ``tokens`` splits the
+    documents: an NBSP-joined query is one term and matches the doc with
+    that one token, not the docs holding its halves."""
+    from dask_sql_spark.operators.text import bm25_search
+
+    df = spark.createDataFrame(
+        [(1, "spark\u00a0window merge"), (2, "spark only here"),
+         (3, "window here too")],
+        "doc_id INT, text STRING",
+    )
+    out = bm25_search(df, "Spark\u00a0Window").collect()
+    assert [(r.doc_id, r.n_terms_hit) for r in out] == [(1, 1)]
+    assert [r.doc_id for r in bm25_search(df, "\u00a0").collect()] == []
 
 
 def test_containment_catches_excerpt_jaccard_misses(docs, spark):
