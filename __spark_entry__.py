@@ -3096,17 +3096,51 @@ FROM embeddings WHERE vec_id < 10
 )
 
 # ==================================================================== #
-# 13. multimodal plumbing (SURVEY §7 M6; decode is a deterministic     #
-#     fake — real codecs are not in this container)                    #
+# 13. media columns (SURVEY §7 M6): each documents row becomes the     #
+#     header bytes of a PNG/JPEG/GIF, WAV or MP4 file, built JVM-side  #
+#     from its fields; the oracle derives what the header parsers must #
+#     read back from the same fields, without building any bytes       #
 # ==================================================================== #
 
 
-def _multimodal_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dask_sql_spark.operators.multimodal import attach_binary, extract_image_meta
+def _be(expr: str, width: int) -> str:
+    """Spark SQL bytes of ``expr`` as a ``width``-byte big-endian uint."""
+    return f"unhex(lpad(hex({expr}), {2 * width}, '0'))"
 
-    docs = attach_binary(_table(spark, sf_dir, "documents"), "text")
-    meta = extract_image_meta(docs, fake=True)
-    return meta.select("doc_id", "byte_len", "width", "height", "channels")
+
+def _le(expr: str, width: int) -> str:
+    """Spark SQL bytes of ``expr`` as a ``width``-byte little-endian uint
+    (comma-separated, for use inside ``concat``)."""
+    return ", ".join(
+        f"unhex(lpad(hex(shiftright({expr}, {8 * k}) & 255), 2, '0'))"
+        for k in range(width)
+    )
+
+
+# width 1 + doc_id, height n_chars (both < 2^16 at every SF), format by
+# doc_id % 3: PNG signature + 8-bit RGB IHDR (29 bytes); JPEG SOI, JFIF
+# APP0, one 0xFF fill byte and a one-component SOF0 (34 bytes); GIF89a
+# screen descriptor with no color table, then the trailer (14 bytes)
+_IMAGE_PAYLOAD = f"""
+CASE doc_id % 3
+  WHEN 0 THEN concat(unhex('89504E470D0A1A0A0000000D49484452'),
+    {_be("1 + doc_id", 4)}, {_be("n_chars", 4)}, unhex('0802000000'))
+  WHEN 1 THEN concat(unhex('FFD8FFE000104A46494600010100000100010000FFFFC0000B08'),
+    {_be("n_chars", 2)}, {_be("1 + doc_id", 2)}, unhex('01011100'))
+  ELSE concat(unhex('474946383961'),
+    {_le("1 + doc_id", 2)}, {_le("n_chars", 2)}, unhex('0000003B'))
+END"""
+
+
+def _multimodal_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    from dask_sql_spark.operators.multimodal import extract_image_meta
+
+    docs = _table(spark, sf_dir, "documents")
+    return extract_image_meta(
+        docs.select("doc_id", F.expr(_IMAGE_PAYLOAD).alias("payload"))
+    )
 
 
 _dfq(
@@ -3114,11 +3148,86 @@ _dfq(
     _multimodal_fn,
     """
 SELECT doc_id,
-  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-  CAST(16 + (CAST('0x' || substr(md5(text), 1, 2) AS INT) % 240) AS INT) AS width,
-  CAST(16 + (CAST('0x' || substr(md5(text), 3, 2) AS INT) % 240) AS INT) AS height,
-  CAST(1 + (CAST('0x' || substr(md5(text), 5, 2) AS INT) % 4) AS INT) AS channels
+  CAST(CASE doc_id % 3 WHEN 0 THEN 29 WHEN 1 THEN 34 ELSE 14 END AS BIGINT) AS byte_len,
+  CAST(1 + doc_id AS INT) AS width,
+  CAST(n_chars AS INT) AS height,
+  CAST(CASE doc_id % 3 WHEN 1 THEN 1 ELSE 3 END AS INT) AS channels
 FROM documents
+""",
+)
+
+# per-row WAV format and MP4 timing, in SQL that both engines run
+_AV_FIELDS = (
+    "doc_id",
+    "CASE doc_id % 4 WHEN 0 THEN 1 ELSE 2 END AS channels",
+    "CASE doc_id % 6 WHEN 0 THEN 8 WHEN 2 THEN 12 ELSE 16 END AS bits",
+    "8000 + doc_id AS rate",
+    "100 * n_chars AS data_size",
+    "600 + doc_id AS timescale",
+    "25 * n_chars AS ticks",
+    # channels x bytes per sample container (1 at 8 bits, 2 at 12 and 16)
+    "CASE doc_id % 4 WHEN 0 THEN 1 ELSE 2 END"
+    " * CASE doc_id % 6 WHEN 0 THEN 1 ELSE 2 END AS block_align",
+)
+# even doc_id: a 44-byte PCM WAV header whose data chunk is not carried
+# (12-bit samples sit in 2-byte containers, so the byte rate is
+# rate * block_align); odd doc_id: a 132-byte ftyp + moov/mvhd (v0) MP4
+_AV_PAYLOAD = f"""
+CASE WHEN doc_id % 2 = 0 THEN concat(unhex('52494646'), {_le("36 + data_size", 4)},
+    unhex('57415645666D7420100000000100'), {_le("channels", 2)}, {_le("rate", 4)},
+    {_le("rate * block_align", 4)}, {_le("block_align", 2)}, {_le("bits", 2)},
+    unhex('64617461'), {_le("data_size", 4)})
+  ELSE concat(unhex('000000106674797069736F6D00000200000000746D6F6F760000006C6D766864'),
+    unhex(repeat('00', 12)), {_be("timescale", 4)}, {_be("ticks", 4)},
+    unhex(repeat('00', 80)))
+END"""
+
+
+def _multimodal_av_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    from dask_sql_spark.operators.multimodal import (
+        extract_audio_meta,
+        extract_video_meta,
+        sample_video_frames,
+    )
+
+    media = (
+        _table(spark, sf_dir, "documents")
+        .selectExpr(*_AV_FIELDS)
+        .select("doc_id", F.expr(_AV_PAYLOAD).alias("payload"))
+    )
+    # every row goes through both parsers: each must reject the other's format
+    audio = extract_audio_meta(media).withColumnRenamed("duration_ms", "audio_ms")
+    video = extract_video_meta(media).select(
+        "doc_id", F.col("duration_ms").alias("video_ms")
+    )
+    frames = sample_video_frames(media).groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_frames")
+    )
+    return (
+        audio.join(video, "doc_id")
+        .join(frames, "doc_id", "left")
+        .fillna(0, subset=["n_frames"])
+    )
+
+
+_dfq(
+    "multimodal_av_meta",
+    _multimodal_av_fn,
+    f"""
+WITH m AS (SELECT {", ".join(_AV_FIELDS)} FROM documents)
+SELECT doc_id,
+  CAST(CASE WHEN doc_id % 2 = 0 THEN 44 ELSE 132 END AS BIGINT) AS byte_len,
+  CAST(CASE WHEN doc_id % 2 = 0 THEN rate END AS INT) AS sample_rate,
+  CAST(CASE WHEN doc_id % 2 = 0 THEN channels END AS INT) AS channels,
+  CAST(CASE WHEN doc_id % 2 = 0 THEN bits END AS INT) AS bits_per_sample,
+  CAST(CASE WHEN doc_id % 2 = 0 THEN data_size * 1000 // (rate * block_align) END
+    AS BIGINT) AS audio_ms,
+  CAST(CASE WHEN doc_id % 2 = 1 THEN ticks * 1000 // timescale END AS BIGINT) AS video_ms,
+  CAST(CASE WHEN doc_id % 2 = 1 THEN (ticks * 1000 // timescale + 999) // 1000
+    ELSE 0 END AS BIGINT) AS n_frames
+FROM m
 """,
 )
 
@@ -9677,6 +9786,7 @@ def _driver_verified_names() -> set[str]:
 _VERIFY_FIRST = [
     "dedup_jaccard_prefix",  # new r12: prefix-filter plan at t=0.5
     "ann_ivf_insert",  # new r12: incremental IVF ingest, value-gated
+    "multimodal_av_meta",  # WAV/MP4 header parsers + frame sampling
 ]
 
 
@@ -9738,6 +9848,9 @@ _REATTEST = [
     "text_rake_keyphrases",  # words persisted, n_occurrences fused
     "q2_min_cost_supplier",  # EUROPE semi-join below the aggregation
     "text_quality",  # ensure_parallelism memo representative
+    # the image gate now reads real PNG/JPEG/GIF headers built from each
+    # row in place of md5-derived stand-in dimensions
+    "multimodal_image_meta",
 ]
 
 

@@ -1,82 +1,80 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns.
+"""Media columns: image/audio/video payloads as binary columns.
 
-Design (SURVEY.md §7 M6): media payloads are ``binary`` columns carried
-alongside typed metadata; decode / feature-extract / frame-sample
-run as Arrow-batched ``mapInPandas`` pipelines, so executors stream batches
-without materializing whole partitions.
+Design (SURVEY.md §7 M6): media payloads are ``binary`` columns, and their
+metadata comes from one Arrow-batched ``mapInPandas`` pass
+(:func:`_header_meta`). Each batch runs through a header parser and is
+yielded at once, so executors stream batches without holding a whole
+partition; everything before and after the pass stays JVM-side, and
+partitioning is inherited (narrow transform, no shuffle).
 
-Capability tiers (what is real vs stubbed):
+The parsers read container headers only, with no codec dependency:
 
-- **Header metadata is REAL, dependency-free byte parsing**:
-  :func:`parse_image_header` (PNG/JPEG/GIF dimensions + channels),
-  :func:`parse_wav_header` (RIFF/WAVE sample rate/channels/bits/duration),
-  :func:`parse_mp4_duration` (ISO-BMFF ``moov``/``mvhd`` timescale →
-  duration). :func:`decode_image` uses the header parse, falls back to a
-  PIL full decode when installed, and raises ``NotImplementedError`` only
-  for unknown formats without PIL.
-- **Pixel/sample decoding is STUBBED** (PIL / torchaudio / av are not in
-  this container): ``fake=True`` selects a deterministic md5-derived
-  decoder that the DuckDB oracle can mirror; frame *extraction* in
-  :func:`sample_video_frames` is a payload-offset slice.
+- :func:`parse_image_header`: PNG ``IHDR``, JPEG ``SOFn``, GIF logical
+  screen descriptor → width, height, channels;
+- :func:`parse_wav_header`: RIFF/WAVE ``fmt `` and ``data`` chunks →
+  sample rate, channels, bits per sample, duration;
+- :func:`parse_mp4_duration`: ISO-BMFF ``moov``/``mvhd`` → duration.
 
-The Spark-side plumbing — schema, Arrow batch iteration, partitioning —
-is real and tested; a deployment swaps the stub for the real codec
-without touching the plan shape.
+A payload its parser does not recognize gives NULL metadata. Pixel and
+sample decoding are out of scope: :func:`sample_video_frames` gives the
+frame timestamps a decoder would seek to, from the header duration.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("sha1", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("mean_byte", T.DoubleType()),
-    ]
-)
 
+def _header_meta(
+    df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    fields: dict[str, T.DataType],
+    parse: Callable[[bytes], tuple | None],
+) -> DataFrame:
+    """(id, byte_len, *fields) with one ``mapInPandas`` pass: ``parse``
+    maps each payload to a tuple of ``fields`` values, or None for a
+    payload it does not recognize, which gives NULL fields (a NULL payload
+    also gives a NULL ``byte_len``)."""
+    schema = T.StructType(
+        [df.schema[id_col], T.StructField("byte_len", T.LongType())]
+        + [T.StructField(name, dtype) for name, dtype in fields.items()]
+    )
+    nulls = (None,) * len(fields)
 
-def attach_binary(df: DataFrame, source_col: str, out_col: str = "payload") -> DataFrame:
-    """Materialize a binary payload column (UTF-8 encode of a string column
-    — stands in for real media bytes read from a lake)."""
-    return df.withColumn(out_col, F.encode(F.col(source_col), "UTF-8"))
+    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (None, *nulls) if p is None else (len(p), *(parse(p) or nulls))
+                for p in pdf[payload_col]
+            ]
+            out = pd.DataFrame(rows, columns=schema.names[1:], dtype=object)
+            out.insert(0, id_col, pdf[id_col].to_numpy())
+            yield out
 
-
-def _fake_decode(payload: bytes) -> tuple[int, int, int, float]:
-    """Deterministic fake image decode: dimensions derived from md5 bytes
-    (md5, not sha1, so the DuckDB oracle can reproduce the values).
-    Placeholder for PIL/av — stable across runs and engines."""
-    digest = hashlib.md5(payload).digest()
-    width = 16 + digest[0] % 240
-    height = 16 + digest[1] % 240
-    channels = 1 + digest[2] % 4
-    mean_byte = round(sum(payload) / len(payload), 4) if payload else 0.0
-    return width, height, channels, mean_byte
+    return df.select(id_col, payload_col).mapInPandas(_parse, schema)
 
 
 def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
     """(width, height, channels) from PNG / JPEG / GIF header bytes — no
     codec dependency, pure byte parsing. Returns None for unknown formats.
 
-    PNG: IHDR at offset 16 (big-endian W, H; color type → channels).
-    JPEG: walk markers to the first SOFn frame header (C0-C3, C5-C7, C9-CB,
-    CD-CF). GIF87a/89a: little-endian W, H in the logical screen descriptor.
+    PNG: the ``IHDR`` chunk at offset 8 (big-endian W, H; color type →
+    channels). JPEG: walk markers, skipping ``0xFF`` fill bytes, to the
+    first SOFn frame header (C0-C3, C5-C7, C9-CB, CD-CF). GIF87a/89a:
+    little-endian W, H in the logical screen descriptor.
     """
-    if len(payload) >= 24 and payload[:8] == b"\x89PNG\r\n\x1a\n":
+    if len(payload) >= 26 and payload[:8] == b"\x89PNG\r\n\x1a\n":
+        if payload[12:16] != b"IHDR":
+            return None
         w = int.from_bytes(payload[16:20], "big")
         h = int.from_bytes(payload[20:24], "big")
-        color_type = payload[25] if len(payload) > 25 else 6
-        channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type, 3)
+        channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(payload[25], 3)
         return w, h, channels
     if len(payload) >= 4 and payload[:2] == b"\xff\xd8":  # JPEG SOI
         i = 2
@@ -86,6 +84,9 @@ def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
                 i += 1
                 continue
             marker = payload[i + 1]
+            if marker == 0xFF:  # fill byte: the marker follows the run
+                i += 1
+                continue
             if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
                 i += 2
                 continue
@@ -104,92 +105,26 @@ def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
     return None
 
 
-def decode_image(payload: bytes, fake: bool = False) -> tuple[int, int, int, float]:
-    """Decode one image payload → (width, height, channels, mean_byte).
-
-    Real payload path: header-parse PNG/JPEG/GIF dimensions from bytes (no
-    dependencies); if PIL happens to be installed, fall back to a full
-    decode for formats the header parser doesn't know. ``fake=True`` uses
-    the deterministic md5-derived stub (cross-engine reproducible — the
-    DuckDB oracle can mirror it, which real decoding cannot).
-    """
-    if fake:
-        return _fake_decode(payload)
-    meta = parse_image_header(payload)
-    if meta is not None:
-        w, h, c = meta
-        mean_byte = round(sum(payload) / len(payload), 4) if payload else 0.0
-        return w, h, c, mean_byte
-    try:  # PIL-gated full decode (not installed in this container)
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-
-        with Image.open(io.BytesIO(payload)) as im:
-            return im.width, im.height, len(im.getbands()), 0.0
-    except ImportError:
-        raise NotImplementedError(
-            "unrecognized image format and PIL is not installed; "
-            "pass fake=True for the deterministic stub decoder"
-        ) from None
-
-
 def extract_image_meta(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    fake: bool = True,
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, byte_len, sha1, width, height, channels, mean_byte) via
-    mapInPandas — the canonical decode/feature-extract batch shape.
-
-    Arrow batches stream through Python once; everything before/after stays
-    JVM-side. Partitioning is inherited (narrow transform, no shuffle).
-    """
-    out_schema = T.StructType(
-        [df.schema[id_col]] + list(IMAGE_META_SCHEMA.fields)
-    )
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            decoded = [decode_image(p, fake=fake) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "byte_len": [len(p) for p in payloads],
-                    "sha1": [hashlib.sha1(p).hexdigest() for p in payloads],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "channels": [d[2] for d in decoded],
-                    "mean_byte": [d[3] for d in decoded],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_extract, out_schema)
-
-
-AUDIO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("bits_per_sample", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
+    """(id, byte_len, width, height, channels) from PNG/JPEG/GIF headers;
+    other payloads give NULL metadata."""
+    fields = {name: T.IntegerType() for name in ("width", "height", "channels")}
+    return _header_meta(df, payload_col, id_col, fields, parse_image_header)
 
 
 def parse_wav_header(payload: bytes) -> tuple[int, int, int, int] | None:
     """(sample_rate, channels, bits_per_sample, duration_ms) from RIFF/WAVE
     header bytes — no codec dependency. Returns None for non-WAV payloads.
 
-    Walks RIFF chunks to the ``fmt `` chunk (PCM layout) and sizes the
-    ``data`` chunk for duration.
+    Walks RIFF chunks to the ``fmt `` chunk and sizes the ``data`` chunk
+    for duration, at the ``fmt `` chunk's average byte rate (so packed
+    12-bit PCM and compressed formats such as IMA-ADPCM time correctly).
     """
     if len(payload) < 36 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         return None
-    sample_rate = channels = bits = 0
+    sample_rate = channels = bits = byte_rate = 0
     data_size = None
     i = 12
     n = len(payload)
@@ -199,6 +134,7 @@ def parse_wav_header(payload: bytes) -> tuple[int, int, int, int] | None:
         if chunk_id == b"fmt " and i + 24 <= n:
             channels = int.from_bytes(payload[i + 10 : i + 12], "little")
             sample_rate = int.from_bytes(payload[i + 12 : i + 16], "little")
+            byte_rate = int.from_bytes(payload[i + 16 : i + 20], "little")
             bits = int.from_bytes(payload[i + 22 : i + 24], "little")
         elif chunk_id == b"data":
             data_size = chunk_size
@@ -207,8 +143,7 @@ def parse_wav_header(payload: bytes) -> tuple[int, int, int, int] | None:
         return None
     if data_size is None:
         data_size = max(0, n - 44)
-    bytes_per_second = sample_rate * channels * (bits // 8)
-    duration_ms = (data_size * 1000) // bytes_per_second if bytes_per_second else 0
+    duration_ms = (data_size * 1000) // byte_rate if byte_rate else 0
     return sample_rate, channels, bits, duration_ms
 
 
@@ -216,26 +151,14 @@ def extract_audio_meta(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, byte_len, sample_rate, channels, bits_per_sample, duration_ms)
-    via mapInPandas — same Arrow-batched narrow-transform shape as
-    extract_image_meta. Non-WAV payloads yield NULL metadata columns."""
-    out_schema = T.StructType([df.schema[id_col]] + list(AUDIO_META_SCHEMA.fields))
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            metas = [parse_wav_header(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "byte_len": [len(p) for p in payloads],
-                    "sample_rate": [m[0] if m else None for m in metas],
-                    "channels": [m[1] if m else None for m in metas],
-                    "bits_per_sample": [m[2] if m else None for m in metas],
-                    "duration_ms": [m[3] if m else None for m in metas],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_extract, out_schema)
+    from RIFF/WAVE headers; other payloads give NULL metadata."""
+    fields = {
+        "sample_rate": T.IntegerType(),
+        "channels": T.IntegerType(),
+        "bits_per_sample": T.IntegerType(),
+        "duration_ms": T.LongType(),
+    }
+    return _header_meta(df, payload_col, id_col, fields, parse_wav_header)
 
 
 def parse_mp4_duration(payload: bytes) -> int | None:
@@ -299,37 +222,18 @@ def parse_mp4_duration(payload: bytes) -> int | None:
     return None
 
 
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("is_bmff", T.BooleanType()),
-    ]
-)
-
-
 def extract_video_meta(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, byte_len, duration_ms, is_bmff) via mapInPandas — real MP4
-    header durations where the payload parses as ISO-BMFF, NULL duration
-    otherwise."""
-    out_schema = T.StructType([df.schema[id_col]] + list(VIDEO_META_SCHEMA.fields))
+    """(id, byte_len, duration_ms) from ISO-BMFF ``mvhd`` headers; other
+    payloads give a NULL duration."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            durs = [parse_mp4_duration(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "byte_len": [len(p) for p in payloads],
-                    "duration_ms": durs,
-                    "is_bmff": [d is not None for d in durs],
-                }
-            )
+    def _parse(payload: bytes) -> tuple[int] | None:
+        duration = parse_mp4_duration(payload)
+        return None if duration is None else (duration,)
 
-    return df.select(id_col, payload_col).mapInPandas(_extract, out_schema)
+    fields = {"duration_ms": T.LongType()}
+    return _header_meta(df, payload_col, id_col, fields, _parse)
 
 
 def sample_video_frames(
@@ -337,39 +241,20 @@ def sample_video_frames(
     payload_col: str = "payload",
     id_col: str = "doc_id",
     every_ms: int = 1000,
-    fake_duration_ms: int | None = None,
 ) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled frame timestamp
-    per video — the explode shape a real decoder (av/ffmpeg, not in this
-    container) drops into. Duration precedence: ``fake_duration_ms`` if
-    given, else the real MP4 ``mvhd`` header duration when the payload
-    parses as ISO-BMFF, else a deterministic md5-derived stand-in; the
-    frame extraction itself is STUBBED as a payload-offset slice."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("frame_ts_ms", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-        ]
+    """(id, frame_ts_ms, frame_idx): one row per frame timestamp, every
+    ``every_ms`` from 0 up to the MP4 header duration — the seek points a
+    decoder reads frames at. The timestamps are a JVM-side
+    ``posexplode(sequence(...))`` over :func:`extract_video_meta`; payloads
+    that do not parse, or declare a zero duration, give no rows."""
+    if not isinstance(every_ms, int) or every_ms < 1:
+        raise ValueError(f"every_ms must be an integer >= 1, got {every_ms!r}")
+    stamps = F.sequence(
+        F.lit(0).cast("long"), F.col("duration_ms") - 1, F.lit(every_ms).cast("long")
     )
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, ts, idxs = [], [], []
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                if fake_duration_ms is not None:
-                    duration = fake_duration_ms
-                else:
-                    duration = parse_mp4_duration(payload)
-                    if duration is None:
-                        digest = hashlib.md5(payload).digest()
-                        duration = 1000 + int.from_bytes(digest[:2], "big") % 9000
-                for k, t in enumerate(range(0, duration, every_ms)):
-                    ids.append(row[id_col])
-                    ts.append(t)
-                    idxs.append(k)
-        yield pd.DataFrame({id_col: ids, "frame_ts_ms": ts, "frame_idx": idxs})
-
-    return df.select(id_col, payload_col).mapInPandas(_sample, out_schema)
-
+    return (
+        extract_video_meta(df, payload_col, id_col)
+        .where(F.col("duration_ms") > 0)
+        .select(id_col, F.posexplode(stamps).alias("frame_idx", "frame_ts_ms"))
+        .select(id_col, "frame_ts_ms", "frame_idx")
+    )

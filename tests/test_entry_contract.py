@@ -16,6 +16,8 @@ FAST_SUBSET = [
     "int_division",
     "dedup_exact",
     "text_langid",
+    "multimodal_image_meta",
+    "multimodal_av_meta",
 ]
 
 

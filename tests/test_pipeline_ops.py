@@ -236,25 +236,47 @@ def test_fingerprint_clusters_word_permutations(spark):
 
 
 # ------------------------- multimodal ------------------------- #
-def test_multimodal_plumbing(docs):
-    from dask_sql_spark.operators.multimodal import (
-        attach_binary,
-        extract_image_meta,
-    )
+def test_multimodal_plumbing(spark):
+    """Image metadata runs as one narrow pass over real header bytes:
+    partitioning is inherited and byte_len is the payload length."""
+    from dask_sql_spark.operators.multimodal import extract_image_meta
 
-    with_bin = attach_binary(docs, "text")
-    meta = extract_image_meta(with_bin, fake=True)
+    gif = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little")
+    payloads = [_png_bytes(100, 50, 2), _jpeg_bytes(64, 32, 1), gif + b"\0\0\0;"]
+    pdf = pd.DataFrame({"doc_id": [0, 1, 2], "payload": payloads})
+    df = spark.createDataFrame(pdf).repartition(2)
+    meta = extract_image_meta(df)
+    assert meta.rdd.getNumPartitions() == 2
     rows = {r.doc_id: r for r in meta.collect()}
-    assert rows[0].byte_len == len("the quick brown fox jumps over the lazy dog")
-    assert rows[0].sha1 == rows[2].sha1  # identical payloads
-    assert 16 <= rows[0].width < 256 and 1 <= rows[0].channels <= 4
+    assert [rows[i].byte_len for i in range(3)] == [len(p) for p in payloads]
+    assert [(r.width, r.height, r.channels) for _, r in sorted(rows.items())] == [
+        (100, 50, 3), (64, 32, 1), (320, 200, 3)
+    ]
 
 
-def test_decode_unknown_format_raises():
-    from dask_sql_spark.operators.multimodal import decode_image
+def test_unknown_image_format_parses_to_none():
+    """Bytes that hold no complete header parse to None: a 24-byte PNG
+    prefix has no color type byte and a PNG whose first chunk is not IHDR
+    has no dimensions."""
+    from dask_sql_spark.operators.multimodal import parse_image_header
 
-    with pytest.raises(NotImplementedError):
-        decode_image(b"not an image", fake=False)
+    assert parse_image_header(b"not an image") is None
+    png = _png_bytes(640, 480, color_type=2)
+    assert parse_image_header(png[:24]) is None
+    assert parse_image_header(png[:12] + b"IDAT" + png[16:]) is None
+    assert parse_image_header(png[:26]) == (640, 480, 3)
+
+
+def test_jpeg_fill_bytes_before_marker():
+    """JPEG allows any number of 0xFF fill bytes before a marker (ITU T.81
+    B.1.1.2); the SOF0 after them is still found."""
+    from dask_sql_spark.operators.multimodal import parse_image_header
+
+    jpeg = _jpeg_bytes(640, 480)
+    sof = jpeg.index(b"\xff\xc0")
+    for fill in (1, 2):
+        padded = jpeg[:sof] + b"\xff" * fill + jpeg[sof:]
+        assert parse_image_header(padded) == (640, 480, 3)
 
 
 def _png_bytes(w: int, h: int, color_type: int = 6) -> bytes:
@@ -274,19 +296,15 @@ def _jpeg_bytes(w: int, h: int, channels: int = 3) -> bytes:
 
 
 def test_decode_real_headers():
-    """Header parsing decodes real PNG/JPEG/GIF payload bytes without any
-    codec dependency (no fake= needed)."""
-    from dask_sql_spark.operators.multimodal import decode_image
+    """Header parsing reads real PNG/JPEG/GIF payload bytes without any
+    codec dependency."""
+    from dask_sql_spark.operators.multimodal import parse_image_header
 
-    w, h, c, _ = decode_image(_png_bytes(640, 480, color_type=2), fake=False)
-    assert (w, h, c) == (640, 480, 3)
-    w, h, c, _ = decode_image(_png_bytes(31, 7, color_type=0), fake=False)
-    assert (w, h, c) == (31, 7, 1)
-    w, h, c, _ = decode_image(_jpeg_bytes(1920, 1080), fake=False)
-    assert (w, h, c) == (1920, 1080, 3)
+    assert parse_image_header(_png_bytes(640, 480, color_type=2)) == (640, 480, 3)
+    assert parse_image_header(_png_bytes(31, 7, color_type=0)) == (31, 7, 1)
+    assert parse_image_header(_jpeg_bytes(1920, 1080)) == (1920, 1080, 3)
     gif = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little")
-    w, h, c, _ = decode_image(gif, fake=False)
-    assert (w, h, c) == (320, 200, 3)
+    assert parse_image_header(gif) == (320, 200, 3)
 
 
 def test_extract_image_meta_real_payloads(spark):
@@ -301,7 +319,7 @@ def test_extract_image_meta_real_payloads(spark):
             "payload": [_png_bytes(100, 50, 2), _jpeg_bytes(64, 32)],
         }
     )
-    meta = extract_image_meta(spark.createDataFrame(pdf), fake=False)
+    meta = extract_image_meta(spark.createDataFrame(pdf))
     rows = {r.doc_id: r for r in meta.collect()}
     assert (rows[0].width, rows[0].height, rows[0].channels) == (100, 50, 3)
     assert (rows[1].width, rows[1].height, rows[1].channels) == (64, 32, 3)
@@ -516,14 +534,17 @@ def test_clean_corpus_pipeline(docs):
     assert 6 not in rows
 
 
-def _wav_bytes(rate=16000, channels=1, bits=16, seconds=2) -> bytes:
+def _wav_bytes(rate=16000, channels=1, bits=16, seconds=2, *, fmt_tag=1,
+               block_align=None, byte_rate=None, fmt_extra=b"") -> bytes:
     import struct
 
-    data_size = rate * channels * (bits // 8) * seconds
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * bits // 8,
-                      channels * bits // 8, bits)
-    return (b"RIFF" + struct.pack("<I", 36 + data_size) + b"WAVE"
-            + b"fmt " + struct.pack("<I", 16) + fmt
+    block_align = block_align or channels * bits // 8
+    byte_rate = byte_rate or rate * block_align
+    data_size = byte_rate * seconds
+    fmt = struct.pack("<HHIIHH", fmt_tag, channels, rate, byte_rate,
+                      block_align, bits) + fmt_extra
+    return (b"RIFF" + struct.pack("<I", 20 + len(fmt) + data_size) + b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", data_size) + bytes(16))  # truncated body
 
 
@@ -544,15 +565,30 @@ def test_audio_meta_real_wav_header(spark):
     assert rows[1].sample_rate is None and rows[1].byte_len == 4
 
 
+def test_wav_duration_uses_byte_rate():
+    """Duration divides the data size by the fmt chunk's average byte rate:
+    12-bit PCM sits in 2-byte containers and 4-bit IMA-ADPCM packs
+    blocks, so neither is rate * channels * (bits // 8)."""
+    import struct
+
+    from dask_sql_spark.operators.multimodal import parse_wav_header
+
+    assert parse_wav_header(_wav_bytes(8000, 1, 12, 2, block_align=2)) == (
+        8000, 1, 12, 2000
+    )
+    adpcm = _wav_bytes(8000, 1, 4, 2, fmt_tag=0x11, block_align=256,
+                       byte_rate=4055, fmt_extra=struct.pack("<HH", 2, 505))
+    assert parse_wav_header(adpcm) == (8000, 1, 4, 2000)
+    assert parse_wav_header(_wav_bytes(22050, 2, 8, 3)) == (22050, 2, 8, 3000)
+
+
 def test_video_frame_sampling_plumbing(spark):
     import pandas as pd
 
     from dask_sql_spark.operators.multimodal import sample_video_frames
 
-    pdf = pd.DataFrame({"doc_id": [5], "payload": [b"fake video bytes"]})
-    frames = sample_video_frames(
-        spark.createDataFrame(pdf), every_ms=500, fake_duration_ms=2200
-    ).collect()
+    pdf = pd.DataFrame({"doc_id": [5], "payload": [_mp4_bytes(1000, 2200)]})
+    frames = sample_video_frames(spark.createDataFrame(pdf), every_ms=500).collect()
     assert [(r.frame_idx, r.frame_ts_ms) for r in sorted(frames, key=lambda r: r.frame_idx)] == [
         (0, 0), (1, 500), (2, 1000), (3, 1500), (4, 2000)
     ]
@@ -605,8 +641,8 @@ def test_mp4_mvhd_duration_parse(spark):
         r.doc_id: r
         for r in extract_video_meta(spark.createDataFrame(pdf)).collect()
     }
-    assert rows[0].duration_ms == 4500 and rows[0].is_bmff
-    assert rows[1].duration_ms is None and not rows[1].is_bmff
+    assert rows[0].duration_ms == 4500 and rows[0].byte_len == len(_mp4_bytes(1000, 4500))
+    assert rows[1].duration_ms is None and rows[1].byte_len == len(b"junk-bytes")
 
     # frame sampling uses the REAL header duration when the payload parses
     frames = sample_video_frames(
@@ -615,6 +651,40 @@ def test_mp4_mvhd_duration_parse(spark):
     assert [r.frame_ts_ms for r in sorted(frames, key=lambda r: r.frame_idx)] == [
         0, 1000, 2000, 3000, 4000
     ]
+
+
+def test_sample_video_frames_rejects_bad_every_ms(spark):
+    from dask_sql_spark.operators.multimodal import sample_video_frames
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0], "payload": [_mp4_bytes(1000, 3000)]})
+    )
+    for every_ms in (0, -1):
+        with pytest.raises(ValueError, match="every_ms"):
+            sample_video_frames(df, every_ms=every_ms)
+
+
+def test_header_meta_null_and_empty(spark):
+    """The shared header-metadata pass: a payload no parser recognizes
+    gives NULL metadata (and no frames), a NULL payload also a NULL
+    byte_len, and an empty input gives 0 rows, for every extractor."""
+    from dask_sql_spark.operators.multimodal import (
+        extract_audio_meta,
+        extract_image_meta,
+        extract_video_meta,
+        sample_video_frames,
+    )
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [7, 8], "payload": [b"no header here at all", None]})
+    )
+    for extract in (extract_image_meta, extract_audio_meta, extract_video_meta):
+        rows = {r.doc_id: r for r in extract(df).collect()}
+        assert rows[7].byte_len == 21 and rows[8].byte_len is None
+        assert all(r[c] is None for r in rows.values() for c in r.__fields__[2:])
+        assert extract(df.limit(0)).count() == 0
+    assert sample_video_frames(df).count() == 0
+    assert sample_video_frames(df.limit(0)).count() == 0
 
 
 def test_embedding_dim_probe_cached(spark, monkeypatch):
